@@ -3,7 +3,7 @@
 #
 # Generates a synthetic 10x corpus from sf0.1 (density scaling, not just
 # row count — the round-15 methodology, PLANS.md "Round-15: the 10x scale
-# gate"), runs BenchEach over the heavy bench rows at BOTH scales
+# gate"), runs `graft.Diag each` over the heavy bench rows at BOTH scales
 # back-to-back on the same box, and prints the wall-ratio table. Ratios,
 # not absolute seconds, are the signal (the sandbox shows 2-3x contention
 # noise between runs — CLAUDE.md).
@@ -128,21 +128,21 @@ run_scale() {  # $1 = sfDir, $2 = outFile
   # scale's walls by its ambient factor.
   # sbt prefixes stdout with "[info] " — strip it; `sed -n` never fails
   # on zero matches (a bare grep under pipefail would abort the script)
-  env SPARK_GRAFT_SF_DIR="$1" SPARK_GRAFT_CPUS=32 \
+  env SPARK_GRAFT_SF_DIR="$1" \
     sbt -batch "runMain graft.Bench --calib" 2>&1 \
     | sed -n 's/^.*\(calib_sec=[0-9.]* calib_ref=[0-9.]* loadavg=[0-9.]*\).*/CALIB \1/p' | tee "$2"
-  # BENCH_CLEAR: free session caches between queries — a 21-row list at
-  # 10x otherwise accumulates persisted results until a row dies of
-  # memory pressure (and each row's cost stays honest in isolation).
+  # Diag each clears session caches before every row, so a 21-row list
+  # at 10x cannot pile up persisted results until a row dies of memory
+  # pressure (and each row's cost stays honest in isolation).
   # Keep ERR lines visible: a dead row must not masquerade as a fast one.
-  env SPARK_GRAFT_SF_DIR="$1" SPARK_GRAFT_CPUS=32 SPARK_GRAFT_BENCH_CLEAR=1 \
-    sbt -batch "runMain graft.BenchEach ${QUERIES[*]}" 2>&1 \
+  env SPARK_GRAFT_SF_DIR="$1" \
+    sbt -batch "runMain graft.Diag each ${QUERIES[*]}" 2>&1 \
     | sed -n -e 's/^.*TIMING /TIMING /p' -e 's/^.*ERR /ERR /p' | tee -a "$2"
 }
 
-echo "== BenchEach at $BASE =="
+echo "== Diag each at $BASE =="
 run_scale "$BASE" /tmp/scale_gate_base.txt
-echo "== BenchEach at $GATE =="
+echo "== Diag each at $GATE =="
 run_scale "$GATE" /tmp/scale_gate_10x.txt
 
 # Machine-readable artifact (VERDICT r16 item 8): one JSON line of

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every declared query, prints ONE JSON line.
   *
@@ -59,7 +58,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     if (args.contains("--calib")) {
       // calib_ref ships alongside so consumers (scripts/scale_gate.sh)
       // read CalibRefSec from the one source of truth instead of
@@ -79,14 +77,7 @@ object Bench {
     // Bench measures single-engine throughput, so the witness is off here;
     // Verify (the correctness gate) always runs it.
     System.setProperty("graft.crosscheck", "off")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // one untimed scan: JVM/codegen/session warmup otherwise lands on
     // whichever query happens to run first
     graft.sources.Fixtures.lineitem(spark, sfDir).count()

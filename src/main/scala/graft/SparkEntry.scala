@@ -187,7 +187,7 @@ object SparkEntry {
   // vocabulary's chance-collision cliff (k <= 5 spans are dominated by
   // coincidental matches; the span set is k-stable from 6 through 10)
   private[graft] val ExactSubstrK = 6
-  private val Theta3d = 0.0803
+  private[graft] val Theta3d = 0.0803
   // tree-EMD overestimates 1-D EMD by up to 2n-2; sized so the pair set
   // is in the same regime as the exact join. 0.4071 = 4071/10000: a
   // boundary hit needs the pair's count-total product divisible by 10000
@@ -392,233 +392,109 @@ object SparkEntry {
     lipschitzPotentials =
       graft.core.CubeKR.PrefilterIdx.map(graft.core.CubeKR.vertexPotential))
 
-  /** Session-shared simhash near-dup edges over the documents corpus —
-    * the q_dedup_clusters / q_keep_best pairing pays the signature +
-    * banding + verify pass once, exactly as the 3-D queries share
-    * engine state via [[MelodyJoin.prepareCached]] (the reference pairs
-    * query types over one corpus, Join.java:42-131). Keyed by
-    * (session, dir) — the histCache convention, with its documented
-    * rewrite-within-a-session caveat; stopped sessions evicted on
-    * access. Bench clears this between repeat passes so pass minimums
-    * keep covering the edge build. */
-  private final class EdgeMemo(s: SparkSession, dir: String) {
-    @volatile private var built: DataFrame = null
-    @volatile private var builtCc: DataFrame = null
-    // per-key monitor: same-(session, dir) callers serialize here, but a
-    // concurrent session building a DIFFERENT corpus never waits behind
-    // this multi-job simhash build (the cache map's lock only guards
-    // lookup/insert)
-    def df: DataFrame = synchronized {
-      if (built == null)
-        built = Dedup.simhashDedup(s, Fixtures.documents(s, dir), maxHamming = 7)
-      built
-    }
-    /** Connected-components labels over [[df]] — memoized for the same
-      * reason the edge set is: q_dedup_clusters, q_keep_best and
-      * q_leak_split all run the SAME contraction over the same edges,
-      * so within a session the fixed-point rounds execute once (the
-      * result frame is already persisted by connectedComponents'
-      * materializeAndFree). Bench clears this between repeat passes so
-      * pass minimums keep covering the contraction. */
-    def cc: DataFrame = synchronized {
-      if (builtCc == null)
-        builtCc = Dedup.connectedComponents(s,
-          df.select(col("rid"), col("sid")),
-          Fixtures.documents(s, dir).select(col("doc_id")))
-      builtCc
-    }
-    def unpersistIfBuilt(): Unit = {
-      val b = built
-      val c = builtCc
-      // Try: unpersist on an already-stopped session throws, and the
-      // blocks die with the session anyway — eviction symmetry only
-      if (b != null) scala.util.Try(b.unpersist(false))
-      if (c != null) scala.util.Try(c.unpersist(false))
-    }
-  }
+  /** Session memos over one corpus, keyed by dir (see [[SessionMemo]]:
+    * results live for the session, so a parquet REWRITTEN under `dir`
+    * within a session is not re-read). [[clearSessionCaches]] drops them
+    * between bench passes, so pass minimums keep covering every build. */
+  private def frameMemo = new SessionMemo[String, DataFrame](_.unpersist(false))
 
-  /** Session-memoized decontamination postings (train side, eval side) —
-    * q_contamination and q_contamination_capped run the SAME two
-    * (id, gram)-distinct shingle derivations and differ only in the
-    * hot-gram cap applied at the join, so within a session the four
-    * explode+distinct passes collapse to two (the EdgeMemo precedent;
-    * Bench clears this between repeat passes through
-    * [[clearSessionCaches]], so pass minimums keep covering the
-    * derivation). */
-  private final class ContamMemo(s: SparkSession, dir: String) {
-    @volatile private var built: (DataFrame, DataFrame) = null
-    def dfs: (DataFrame, DataFrame) = synchronized {
-      if (built == null) {
-        val d = Fixtures.documents(s, dir)
-        built = (
-          CorpusOps.contaminationPostings(
-            d.filter(col("source") =!= "src0"), 3, "train_id").persistOnce(),
-          CorpusOps.contaminationPostings(
-            d.filter(col("source") === "src0"), 3, "eval_id").persistOnce())
-      }
-      built
-    }
-    def unpersistIfBuilt(): Unit = {
-      val b = built
-      if (b != null) {
-        scala.util.Try(b._1.unpersist(false))
-        scala.util.Try(b._2.unpersist(false))
-      }
-    }
-  }
+  /** Simhash near-dup edges over the documents corpus — the
+    * q_dedup_clusters / q_keep_best pairing pays the signature + banding
+    * + verify pass once, exactly as the 3-D queries share engine state
+    * via [[MelodyJoin.prepareCached]] (the reference pairs query types
+    * over one corpus, Join.java:42-131). */
+  private val edgeMemo = frameMemo
 
-  /** Session-memoized melody 3-D THRESHOLD PAIR SET at [[Theta3d]] —
-    * the engine's exact answer {(rid, sid, emd) : emd <= Theta3d} over
-    * the (session-cached) prepared state. Two consumers run the
-    * identical fetch: q_emd3d_pairs IS this set, and q_emd3d_topk's
-    * complete-fetch tie fallback needs {emd <= cutoff + 4e-6} — a pure
-    * FILTER of this set whenever cutoff + 4e-6 <= Theta3d, because
-    * membership is decided by the exact solver's `emd <= theta` compare
-    * on the canonically-oriented pair (MelodyJoin.Cascade.emdIfCandidate;
-    * every pre-filter rejects with admissible slack only), so
+  private def simhashEdges(s: SparkSession, dir: String): DataFrame =
+    edgeMemo(s, dir)(Dedup.simhashDedup(s, Fixtures.documents(s, dir), maxHamming = 7))
+
+  /** Connected-components labels over [[simhashEdges]] — q_dedup_clusters,
+    * q_keep_best and q_leak_split all run the SAME contraction over the
+    * same edges, so within a session the fixed-point rounds execute once
+    * (the result frame is already persisted by connectedComponents'
+    * materializeAndFree). */
+  private val clusterMemo = frameMemo
+
+  private def simhashClusters(s: SparkSession, dir: String): DataFrame =
+    clusterMemo(s, dir)(Dedup.connectedComponents(s,
+      simhashEdges(s, dir).select(col("rid"), col("sid")),
+      Fixtures.documents(s, dir).select(col("doc_id"))))
+
+  /** Decontamination postings (train side, eval side) — q_contamination
+    * and q_contamination_capped run the SAME two (id, gram)-distinct
+    * shingle derivations and differ only in the hot-gram cap applied at
+    * the join, so within a session the four explode+distinct passes
+    * collapse to two. */
+  private val contamMemo = new SessionMemo[String, (DataFrame, DataFrame)]({ p =>
+    p._1.unpersist(false); p._2.unpersist(false)
+  })
+
+  private def contamPostings(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    contamMemo(s, dir) {
+      val d = Fixtures.documents(s, dir)
+      (CorpusOps.contaminationPostings(
+        d.filter(col("source") =!= "src0"), 3, "train_id").persistOnce(),
+       CorpusOps.contaminationPostings(
+        d.filter(col("source") === "src0"), 3, "eval_id").persistOnce())
+    }
+
+  /** Melody 3-D THRESHOLD PAIR SET at [[Theta3d]] — the engine's exact
+    * answer {(rid, sid, emd) : emd <= Theta3d} over the (session-cached)
+    * prepared state. Two consumers run the identical fetch: q_emd3d_pairs
+    * IS this set, and q_emd3d_topk's complete-fetch tie fallback needs
+    * {emd <= cutoff + 4e-6} — a pure FILTER of this set whenever
+    * cutoff + 4e-6 <= Theta3d, because membership is decided by the
+    * exact solver's `emd <= theta` compare on the canonically-oriented
+    * pair (MelodyJoin.Cascade.emdIfCandidate; every pre-filter rejects
+    * with admissible slack only), so
     * thresholdJoin(th) == thresholdJoin(Theta3d).filter(dist <= th) for
     * th <= Theta3d, double-for-double. Before this memo the fallback
     * re-ran the whole enumeration+cascade every sf0.1 run (>= 40
     * zero-distance duplicate-histogram pairs keep the pad-margin proof
-    * failing — VERDICT r16 item 3, driver row 2.47 -> 3.69s). The
-    * EdgeMemo conventions apply: keyed (session, dir), cleared between
-    * bench passes via [[clearSessionCaches]], dies with the session. */
-  private final class Cube3dMemo(s: SparkSession, dir: String) {
-    @volatile private var built: DataFrame = null
-    def pairs: DataFrame = synchronized {
-      if (built == null) {
-        val hists = Fixtures.tripleHists(s, dir)
-        val cfg3 = melodyCfg3dFor(s, dir)
-        val prep = MelodyJoin.prepareCached(s, hists, cfg3)
-        // LAZY persist (no count): the first consumer's own action
-        // materializes the cache as a side effect of its pipeline — an
-        // eager count here was measured as a pure materialization
-        // barrier on q_emd3d_pairs (the union output can no longer
-        // pipeline into the canonicalization join)
-        built = MelodyJoin.thresholdJoinPrepared(s, prep, Theta3d, cfg3)
-          .persistOnce()
-      }
-      built
-    }
-    def unpersistIfBuilt(): Unit = {
-      val b = built
-      if (b != null) scala.util.Try(b.unpersist(false))
-    }
-  }
-
-  private val cube3dCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), Cube3dMemo]
+    * failing — VERDICT r16 item 3, bench row 2.47 -> 3.69s). */
+  private val cube3dMemo = frameMemo
 
   private def cube3dPairs(s: SparkSession, dir: String): DataFrame =
-    cube3dCache.synchronized {
-      cube3dCache.filterInPlace { case ((ss, _), m) =>
-        !ss.sparkContext.isStopped || { m.unpersistIfBuilt(); false } }
-      cube3dCache.getOrElseUpdate((s, dir), new Cube3dMemo(s, dir))
-    }.pairs
+    cube3dMemo(s, dir) {
+      val cfg3 = melodyCfg3dFor(s, dir)
+      val prep = MelodyJoin.prepareCached(s, Fixtures.tripleHists(s, dir), cfg3)
+      // LAZY persist (no count): the first consumer's own action
+      // materializes the cache as a side effect of its pipeline — an
+      // eager count here was measured as a pure materialization
+      // barrier on q_emd3d_pairs (the union output can no longer
+      // pipeline into the canonicalization join)
+      MelodyJoin.thresholdJoinPrepared(s, prep, Theta3d, cfg3).persistOnce()
+    }
 
-  def clearCube3dCache(spark: SparkSession): Unit = cube3dCache.synchronized {
-    val dead = cube3dCache.keys.filter(_._1 eq spark).toSeq
-    dead.foreach { k => cube3dCache.remove(k).foreach(_.unpersistIfBuilt()) }
-  }
-
-  /** Session-memoized residual IVF-PQ engine state — the q_ivfpq_topk /
-    * q_ivfpq_rerank / q_ivfpq_recall rows train the IDENTICAL two-level
-    * index (same corpus `rest` = embeddings minus the min vec_id, same
+  /** Residual IVF-PQ engine state — the q_ivfpq_topk / q_ivfpq_rerank /
+    * q_ivfpq_recall rows train the IDENTICAL two-level index (same corpus
+    * `rest` = embeddings minus the min vec_id, same
     * kCoarse/numSub/ksub/iters/scale) plus the same min-id probe query;
     * training is deterministic (Cluster.lloydCentroids / pqTrain are
     * spec-pinned bit-identical), so within a session the three trainings
-    * collapse to one (guide §2.1 don't-recompute; the EdgeMemo/
-    * prepareCached precedent — engine state shared across query types
-    * over one corpus). Cleared between bench passes via
-    * [[clearSessionCaches]] so pass minimums keep covering training. */
-  private final class IvfPqMemo(s: SparkSession, dir: String) {
-    @volatile private var built: (Long, Array[Long], Ann.IvfPqIndex) = null
-    def state: (Long, Array[Long], Ann.IvfPqIndex) = synchronized {
-      if (built == null) {
-        val embs = Fixtures.embeddings(s, dir)
-        val minId = embs.agg(min(col("vec_id"))).head().getLong(0)
-        val qq = Cluster.quantize(embs.filter(col("vec_id") === minId), 1000)
-          .select(col("v")).head().getSeq[Long](0).toArray
-        val idx = Ann.buildIvfPqIndex(s, embs.filter(col("vec_id") =!= minId),
-          kCoarse = 4, numSub = 4, ksub = 8)
-        built = (minId, qq, idx)
-      }
-      built
-    }
-    def unpersistIfBuilt(): Unit = {
-      val b = built
-      if (b != null) scala.util.Try(b._3.close())
-    }
-  }
-
-  private val ivfPqCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), IvfPqMemo]
+    * collapse to one (guide §2.1 don't-recompute). */
+  private val ivfPqMemo =
+    new SessionMemo[String, (Long, Array[Long], Ann.IvfPqIndex)](_._3.close())
 
   private def ivfPqState(s: SparkSession, dir: String): (Long, Array[Long], Ann.IvfPqIndex) =
-    ivfPqCache.synchronized {
-      ivfPqCache.filterInPlace { case ((ss, _), m) =>
-        !ss.sparkContext.isStopped || { m.unpersistIfBuilt(); false } }
-      ivfPqCache.getOrElseUpdate((s, dir), new IvfPqMemo(s, dir))
-    }.state
-
-  def clearIvfPqCache(spark: SparkSession): Unit = ivfPqCache.synchronized {
-    val dead = ivfPqCache.keys.filter(_._1 eq spark).toSeq
-    dead.foreach { k => ivfPqCache.remove(k).foreach(_.unpersistIfBuilt()) }
-  }
-
-  private val contamCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), ContamMemo]
-
-  private def contamPostings(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    contamCache.synchronized {
-      contamCache.filterInPlace { case ((ss, _), m) =>
-        !ss.sparkContext.isStopped || { m.unpersistIfBuilt(); false } }
-      contamCache.getOrElseUpdate((s, dir), new ContamMemo(s, dir))
-    }.dfs
-
-  def clearContamCache(spark: SparkSession): Unit = contamCache.synchronized {
-    val dead = contamCache.keys.filter(_._1 eq spark).toSeq
-    dead.foreach { k => contamCache.remove(k).foreach(_.unpersistIfBuilt()) }
-  }
-
-  private val edgeCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), EdgeMemo]
-
-  private def edgeMemo(s: SparkSession, dir: String): EdgeMemo =
-    edgeCache.synchronized {
-      edgeCache.filterInPlace { case ((ss, _), m) =>
-        !ss.sparkContext.isStopped || { m.unpersistIfBuilt(); false } }
-      edgeCache.getOrElseUpdate((s, dir), new EdgeMemo(s, dir))
+    ivfPqMemo(s, dir) {
+      val embs = Fixtures.embeddings(s, dir)
+      val minId = embs.agg(min(col("vec_id"))).head().getLong(0)
+      val qq = Cluster.quantize(embs.filter(col("vec_id") === minId), 1000)
+        .select(col("v")).head().getSeq[Long](0).toArray
+      val idx = Ann.buildIvfPqIndex(s, embs.filter(col("vec_id") =!= minId),
+        kCoarse = 4, numSub = 4, ksub = 8)
+      (minId, qq, idx)
     }
 
-  private def simhashEdges(s: SparkSession, dir: String): DataFrame =
-    edgeMemo(s, dir).df
-
-  /** Session-memoized near-dup clustering (see [[EdgeMemo.cc]]). */
-  private def simhashClusters(s: SparkSession, dir: String): DataFrame =
-    edgeMemo(s, dir).cc
-
-  def clearEdgeCache(spark: SparkSession): Unit = edgeCache.synchronized {
-    val dead = edgeCache.keys.filter(_._1 eq spark).toSeq
-    dead.foreach { k => edgeCache.remove(k).foreach(_.unpersistIfBuilt()) }
-  }
-
-  /** Drop EVERY session-scoped cache the engine keeps (fixture frames,
-    * melody prep state, the simhash edge memo) plus the whole plan
-    * cache — operators that return a persisted result
-    * (materializeAndFree pattern) leave plan-cache entries a later run
-    * of the same pure-Catalyst query would silently hit. The ONE
-    * registry both Bench's repeat passes and BenchEach's
-    * SPARK_GRAFT_BENCH_CLEAR mode call: a new session cache added to
-    * the codebase gets registered here once, not in each harness. */
+  /** Drop EVERY session-scoped cache the engine keeps (every registered
+    * [[SessionMemo]]: fixture frames, melody prep state, the memos above,
+    * replay feeds) plus the whole plan cache — operators that return a
+    * persisted result (materializeAndFree pattern) leave plan-cache
+    * entries a later run of the same pure-Catalyst query would silently
+    * hit. Bench's repeat passes and `Diag` call it between runs. */
   def clearSessionCaches(spark: SparkSession): Unit = {
-    graft.sources.Fixtures.clearCache(spark)
-    graft.operators.MelodyJoin.clearPrepCache(spark)
-    clearEdgeCache(spark)
-    clearContamCache(spark)
-    clearCube3dCache(spark)
-    clearIvfPqCache(spark)
-    graft.streaming.StreamOps.clearFeedCache(spark)
+    SessionMemo.clearAll(spark)
     spark.sharedState.cacheManager.clearCache()
   }
 
@@ -874,7 +750,7 @@ object SparkEntry {
     //     pays the grid/enrichment once ---
     "q_emd3d_pairs" -> ((s, dir) => {
       val hists = Fixtures.tripleHists(s, dir)
-      // the Theta3d pair set is the session-shared Cube3dMemo (its other
+      // the Theta3d pair set is the session-shared cube3dMemo (its other
       // consumer is q_emd3d_topk's tie fallback — see the memo scaladoc)
       cubeCanonicalDist(s, dir)(crossCheckPairs(
         cube3dPairs(s, dir)
@@ -966,7 +842,7 @@ object SparkEntry {
             .select(col("rid"), col("sid"), round(col("dist"), 6).as("dist")),
           // tie fallback: {emd <= th} is a pure filter of the memoized
           // Theta3d pair set whenever th <= Theta3d (exact-solver
-          // membership — see Cube3dMemo), so the every-sf0.1-run
+          // membership — see cube3dPairs), so the every-sf0.1-run
           // complete fetch stops re-running enumeration + cascade
           // (VERDICT r16 item 3); a cutoff past Theta3d (never seen at
           // the declared scales) still takes the live engine fetch
@@ -985,7 +861,7 @@ object SparkEntry {
     //     per LP query (only_primary, only_witness, engines_agree). The
     //     oracle expects literal zeros/true, so the driver's hash check
     //     SEES the cross-engine agreement directly instead of recording
-    //     `no_oracle`. Under -Dgraft.crosscheck=off (Bench/BenchEach
+    //     `no_oracle`. Under -Dgraft.crosscheck=off (Bench/Diag
     //     timing runs only — Verify NEVER sets it, per the gate contract)
     //     the expensive second-engine runs are skipped and the literal
     //     expected rows come back, exactly like the in-query witness
@@ -1778,8 +1654,7 @@ object SparkEntry {
     "q_stream_incrdedup" -> ((s, dir) => {
       val docs = Fixtures.documents(s, dir)
       graft.streaming.StreamOps.replayContentDedup(s,
-        Snapshot.rehostWrap(docs), docs, numBatches = 2,
-        feedKey = Some(s"rehost:$dir"))
+        Snapshot.rehostWrap(docs), docs, numBatches = 2)
     }),
 
     // --- cross-snapshot CONTENT dedup: arriving docs whose content
@@ -1832,8 +1707,7 @@ object SparkEntry {
     "q_stream_snapshot" -> ((s, dir) => {
       val docs = Fixtures.documents(s, dir)
       graft.streaming.StreamOps.replaySnapshotDiff(s,
-        Snapshot.nextSnapshot(docs), docs, numBatches = 2,
-        feedKey = Some(s"nextsnap:$dir"))
+        Snapshot.nextSnapshot(docs), docs, numBatches = 2)
     }),
 
     // --- WARC container parsing (the Common Crawl wire format): files
@@ -1852,8 +1726,7 @@ object SparkEntry {
     //     recursive-CTE oracle checks the streamed record set ---
     "q_stream_warc" -> ((s, dir) => {
       graft.streaming.StreamOps.replayWarc(s,
-        Warc.warcWrap(Fixtures.documents(s, dir)), numBatches = 2,
-        feedKey = Some(s"warc:$dir"))
+        Warc.warcWrap(Fixtures.documents(s, dir)), numBatches = 2)
     }),
 
     // --- int8 scalar-quantized ANN (SQ8): per-dimension affine codes
@@ -2199,7 +2072,7 @@ object SparkEntry {
     //     probe order and scoring are all integer — the oracle replays
     //     the entire two-level pipeline ---
     //     The three q_ivfpq_* rows share the trained index through the
-    //     session IvfPqMemo (identical corpus + params, deterministic
+    //     session ivfPqMemo (identical corpus + params, deterministic
     //     training — see the memo scaladoc); each row runs its own read
     //     path over it. First row alphabetically (q_ivfpq_recall)
     //     absorbs training within a bench pass.
@@ -2446,8 +2319,7 @@ object SparkEntry {
     //     actual streaming state splits/carries/timeout flushes ---
     "q_stream_sessionize" -> ((s, dir) => {
       graft.streaming.StreamOps.replaySessionize(s, Fixtures.events(s, dir),
-        gapUs = 86400000000L, numBatches = 2,
-        feedKey = Some(s"events_sess:$dir"))
+        gapUs = 86400000000L, numBatches = 2)
     }),
 
     // --- cohort retention (integer epoch-day arithmetic, no calendar
@@ -2462,8 +2334,7 @@ object SparkEntry {
     //     the same chained-window oracle as the batch twin ---
     "q_stream_funnel" -> ((s, dir) => {
       graft.streaming.StreamOps.replayFunnel(s, Fixtures.events(s, dir),
-        Seq("view", "click", "purchase"), numBatches = 2,
-        feedKey = Some(s"events_funnel:$dir"))
+        Seq("view", "click", "purchase"), numBatches = 2)
     }),
 
     // --- JSON property extraction over the event stream ---
@@ -2568,8 +2439,7 @@ object SparkEntry {
       graft.streaming.StreamOps.replayAsOf(s,
         ev.filter(col("event_type") === "click"),
         ev.filter(col("event_type") === "purchase"),
-        keyCol = "user_id", tsCol = "ts", idCol = "event_id",
-        feedKey = Some(s"events_asof:$dir"))
+        keyCol = "user_id", tsCol = "ts", idCol = "event_id")
     }),
 
     // --- banded range join: (click, purchase) pairs of one user within
@@ -2594,8 +2464,7 @@ object SparkEntry {
         ev.filter(col("event_type") === "click"),
         ev.filter(col("event_type") === "purchase"),
         keyCol = "user_id", tsCol = "ts", idCol = "event_id",
-        deltaSec = 7200L, numBatches = 2,
-        feedKey = Some(s"events_rj:$dir"))
+        deltaSec = 7200L, numBatches = 2)
     }),
 
     // --- STREAMING tumbling-window aggregation, driver-visible: events
@@ -2605,7 +2474,7 @@ object SparkEntry {
     //     equals the q_events_window batch groupBy row-for-row ---
     "q_stream_window" -> ((s, dir) => {
       graft.streaming.StreamOps.replayWindowAgg(s, Fixtures.events(s, dir),
-          numBatches = 2, feedKey = Some(s"events_window:$dir"))
+          numBatches = 2)
         .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
             .as("window_start"),
           col("event_type"), col("n"), round(col("sum_value"), 6).as("sum_value"))
@@ -2628,8 +2497,7 @@ object SparkEntry {
         .limit(StreamEmdRefCap)
       graft.streaming.StreamOps.replayEmdMatch(s,
           hists.filter(col("id") % 10 =!= 0), refs, melodyCfg1d, Theta,
-          maxRefs = StreamEmdRefCap, numBatches = 2,
-          feedKey = Some(s"hists_emd:$dir"))
+          maxRefs = StreamEmdRefCap, numBatches = 2)
         .select(col("stream_id"), col("ref_id"),
           round(col("dist"), 6).as("dist"))
     }),
@@ -2649,8 +2517,7 @@ object SparkEntry {
         .limit(StreamEditRefCap)
       graft.streaming.StreamOps.replayEditMatch(s,
         d.filter(col("doc_id") % 10 =!= 0), refs, d = 4,
-        maxRefs = StreamEditRefCap, numBatches = 2,
-        feedKey = Some(s"docsmod10:$dir"))
+        maxRefs = StreamEditRefCap, numBatches = 2)
     }),
 
     // --- STREAMING stream-static ANN, driver-visible: every 20th
@@ -2668,7 +2535,7 @@ object SparkEntry {
         .select(col("id").as("qid"), col("v"))
       graft.streaming.StreamOps.replayAnnTopK(s, queries, embs,
         kCoarse = 4, nProbe = 2, numSub = 4, ksub = 8, k = 5,
-        numBatches = 2, feedKey = Some(s"ann_q:$dir"))
+        numBatches = 2)
     }),
 
     // --- normal fit + Hough + uniform grid cell id (P4/P5/P8/A1) ---

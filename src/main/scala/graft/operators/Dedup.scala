@@ -360,7 +360,11 @@ object Dedup {
         // of (u, v) hashes to u's partition, so a local set sees them
         // all — the same result as .distinct(parts) at one shuffle less
         // (distinct hashes the PAIR: a second full shuffle that destroys
-        // the key partitioning both downstream consumers want)
+        // the key partitioning both downstream consumers want). Unlike
+        // distinct's combiner the HashSet cannot spill; its size is
+        // bounded by the edge count this branch admits (catalystCutover,
+        // 50M by default), and larger graphs take the Catalyst rounds
+        // below, whose distinct does spill
         def dedupByKey(r: org.apache.spark.rdd.RDD[(Long, Long)]) =
           r.partitionBy(part).mapPartitions({ it =>
             val seen = scala.collection.mutable.HashSet.empty[(Long, Long)]

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SessionMemo
 import graft.core.Caching._
 import org.apache.spark.sql.{DataFrame, SparkSession, Row, Column}
 import org.apache.spark.sql.functions._
@@ -978,7 +979,7 @@ object MelodyJoin {
       * owns and the cfg it was prepared with — the existing caller
       * contract (passing a different cfg with someone else's Prepared
       * was always wrong). Broadcasts live until the context GCs them;
-      * Prepared itself is session-scoped (prepCache). */
+      * Prepared itself is session-scoped (prepMemo). */
     @transient private var guestB: (
         org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]],
         org.apache.spark.broadcast.Broadcast[SummaryIndex]) = null
@@ -996,7 +997,7 @@ object MelodyJoin {
     def unpersist(): Unit = enriched.unpersist(false)
   }
 
-  /** Session-scoped cache of theta-independent engine state: grids, duals,
+  /** Session-scoped memo of theta-independent engine state: grids, duals,
     * enrichment, summaries depend only on (input, config) — a session
     * running several queries against the same corpus (threshold + top-k is
     * the reference's own pairing, Join.java:42-131) should pay the
@@ -1006,12 +1007,9 @@ object MelodyJoin {
     * equal plan misses and safely rebuilds — a content hash could
     * silently serve the wrong corpus's state on collision) + the config's
     * VALUE (arrays unwrapped — case-class equality on Array fields is
-    * reference-based); stopped sessions are evicted on access. Entries
-    * own their enrichment cache for the session's lifetime — the
-    * deliberate histCache trade (Fixtures.scala) applied to engine
-    * state. */
-  private val prepCache = scala.collection.mutable.Map.empty[
-    (SparkSession, DataFrame, Product), Prepared]
+    * reference-based). Entries own their enrichment cache for the
+    * session's lifetime, like the fixture memo (Fixtures.scala). */
+  private val prepMemo = new SessionMemo[(DataFrame, Product), Prepared](_.unpersist())
 
   private def cfgKey(cfg: Config): Product = (
     cfg.dimension, cfg.bins.toSeq, cfg.vectors.map(_.toSeq).toSeq,
@@ -1019,32 +1017,8 @@ object MelodyJoin {
     cfg.reducedDim, cfg.seed, cfg.groundDist, cfg.exactQuantiles,
     cfg.lipschitzPotentials.map(_.toSeq).toSeq)
 
-  def prepareCached(spark: SparkSession, hists: DataFrame, cfg: Config): Prepared = {
-    val key = (spark, hists, cfgKey(cfg))
-    // double-checked so the multi-job prepare() never runs under the
-    // global cache lock (it would serialize every concurrent caller)
-    prepCache.synchronized {
-      prepCache.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
-      prepCache.get(key)
-    } match {
-      case Some(p) => p
-      case None =>
-        val built = prepare(spark, hists, cfg)
-        prepCache.synchronized {
-          prepCache.get(key) match {
-            case Some(winner) => built.unpersist(); winner
-            case None => prepCache.put(key, built); built
-          }
-        }
-    }
-  }
-
-  /** Drop (and unpersist) this session's cached engine state — used by
-    * benchmark repeat passes so every pass pays the full preparation. */
-  def clearPrepCache(spark: SparkSession): Unit = prepCache.synchronized {
-    val dead = prepCache.keys.filter(_._1 eq spark).toSeq
-    dead.foreach { k => prepCache.remove(k).foreach(_.unpersist()) }
-  }
+  def prepareCached(spark: SparkSession, hists: DataFrame, cfg: Config): Prepared =
+    prepMemo(spark, (hists, cfgKey(cfg)))(prepare(spark, hists, cfg))
 
   def prepare(spark: SparkSession, hists: DataFrame, cfg: Config): Prepared = {
     // guarded here (not just in the public wrappers) so the prepared API

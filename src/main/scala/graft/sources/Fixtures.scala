@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.SessionMemo
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
 
@@ -93,38 +94,23 @@ object Fixtures {
       .select(col("id"), col("bin"), (col("c").cast("double") / col("total")).as("w"))
   }
 
-  /** Session-scoped cache of the derived histogram tables: ~8 declared
+  /** Session-scoped memo of the derived histogram tables: ~8 declared
     * queries consume the same (id, weights) inputs, and re-deriving the
     * scan+aggregate per query dominated their wall-clock. One histogram
     * row per key (8 doubles) is ~100 bytes — at 100 TB scale the derived
     * table is GBs against a cluster's aggregate cache, the textbook
-    * persist case. Keyed by (session, dir) so tests with their own
-    * sessions/dirs don't cross-contaminate.
-    *
-    * Entries of STOPPED sessions are evicted on every access (their
-    * cached blocks died with the executors; dropping the map entry frees
-    * the driver-side plan + session reference too), so long-lived
-    * multi-session processes don't leak. Caveat: results are cached for
-    * the life of the session — if the parquet under `dir` is REWRITTEN
-    * within a session, the cache serves the pre-rewrite derivation
-    * (matching Spark's own persist semantics; use a fresh session, or
-    * unpersist+drop the entry, to re-read). */
-  private val histCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String, String), DataFrame]
+    * persist case. Keyed by (session, dir, kind) so tests with their own
+    * sessions/dirs don't cross-contaminate. Caveat: results are cached
+    * for the life of the session — if the parquet under `dir` is
+    * REWRITTEN within a session, the memo serves the pre-rewrite
+    * derivation (matching Spark's own persist semantics; use a fresh
+    * session, or SparkEntry.clearSessionCaches, to re-read). */
+  private val histMemo = new SessionMemo[(String, String), DataFrame](_.unpersist(false))
 
   private def cached(spark: SparkSession, dir: String, kind: String)
-                    (build: => DataFrame): DataFrame = histCache.synchronized {
-    histCache.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
-    histCache.getOrElseUpdate((spark, dir, kind),
+                    (build: => DataFrame): DataFrame =
+    histMemo(spark, (dir, kind))(
       build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
-
-  /** Drop (and unpersist) this session's cached derived tables — used by
-    * benchmark repeat passes so every pass pays the full derivation. */
-  def clearCache(spark: SparkSession): Unit = histCache.synchronized {
-    val dead = histCache.keys.filter(_._1 eq spark).toSeq
-    dead.foreach { k => histCache.remove(k).foreach(_.unpersist(false)) }
-  }
 
   /** Wide-format histograms: (id, weights ARRAY<DOUBLE>[NumBins]),
     * L1-normalized. One scan + one shuffle; all-codegen. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.SessionMemo
 import graft.core.{Emd, HistOps}
 import graft.operators.{EditJoin, MelodyJoin}
 
@@ -41,15 +42,18 @@ object StreamOps {
     * (same corpus, same ascending order), and several rows replay the
     * SAME feed (dedup/neardup/heavy share the documents feed;
     * blocklist/classify, ingest/arrival likewise), so the prepared
-    * chunk source is session-memoized under a caller-supplied key:
-    * ONE collect job + a driver-side sort per distinct feed per pass.
+    * chunk source is session-memoized under a caller-supplied
+    * "kind:dir" key: ONE collect job + a driver-side sort per distinct
+    * feed per pass. Only feeds with more than one consumer pass a key —
+    * a memoized single-consumer feed buys no reuse and pins a full
+    * driver-side copy for the session.
     *
     * Boundaries of the sharing (the judge's contract): only the raw
     * INPUT feed is shared — each row still starts its own streaming
     * query, pays its own micro-batch execution, sentinel flush and
     * sink collect inside its own timed region, and no row ever reads
     * another row's results or state-store contents. The memo is
-    * registered in [[graft.SparkEntry.clearSessionCaches]], so Bench's
+    * cleared by [[graft.SparkEntry.clearSessionCaches]], so Bench's
     * repeat passes re-pay feed prep (pass minimums keep covering it)
     * and nothing survives the session — no cross-run caching.
     *
@@ -59,27 +63,11 @@ object StreamOps {
     * accumulates O(output) driver-side — and the feed is bounded by the
     * replay contract (gate/bench scale); production streams read from
     * real sources and never pass through this bridge. */
-  private val feedCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), AnyRef]
+  private val feedMemo = new SessionMemo[String, AnyRef](_ => ())
 
-  private def preparedFeed[T <: AnyRef](spark: SparkSession,
-                                        key: Option[String])
-                                       (build: => T): T = key match {
-    case None => build
-    case Some(k) =>
-      // the build runs under the map lock: replay rows are sequential in
-      // every harness (Bench/Verify/specs pass feedKey = None), so the
-      // EdgeMemo per-key-monitor refinement buys nothing here
-      feedCache.synchronized {
-        feedCache.filterInPlace { case ((ss, _), _) => !ss.sparkContext.isStopped }
-        feedCache.getOrElseUpdate((spark, k), build)
-      }.asInstanceOf[T]
-  }
-
-  /** Evict this session's prepared feeds (the clearSessionCaches hook). */
-  def clearFeedCache(spark: SparkSession): Unit = feedCache.synchronized {
-    feedCache.keys.filter(_._1 eq spark).toSeq.foreach(feedCache.remove)
-  }
+  /** Micros since the epoch, exact for sub-millisecond timestamps. */
+  private def micros(ts: java.sql.Timestamp): Long =
+    ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
 
   object ReplayStores {
     /** Default shuffle-partition count for the replay harness queries.
@@ -138,8 +126,6 @@ object StreamOps {
                  gapUs: Long = 30 * 60 * 1000000L,
                  watermark: String = "1 hour"): Dataset[SessionUpdate] = {
     import spark.implicits._
-    def micros(ts: java.sql.Timestamp): Long =
-      ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
     events
       .withWatermark("ts", watermark)
       .select(col("user_id").cast("long").as("user_id"), col("ts"), col("value"))
@@ -200,8 +186,6 @@ object StreamOps {
                    steps: Seq[String]): Dataset[FunnelUpdate] = {
     import spark.implicits._
     require(steps.nonEmpty, "funnelStream: empty step list")
-    def micros(ts: java.sql.Timestamp): Long =
-      ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
     events
       .select(col("user_id").cast("long").as("user_id"), col("ts"),
         col("event_type"))
@@ -333,7 +317,7 @@ object StreamOps {
     * HARNESS, not a production operator: it bridges batch->stream via a
     * MemoryStream (the only deterministic way to exercise real
     * micro-batch execution). The replay corpus is ONE collected,
-    * driver-sorted feed (memoized under `feedKey` — [[preparedFeed]]
+    * driver-sorted feed (memoized under `feedKey` — [[feedMemo]]
     * documents the sharing contract and driver-memory posture), and the
     * O(rows) verdict triples accumulate in the memory sink. Production
     * streams come from readStream sources; the operator itself holds
@@ -384,20 +368,17 @@ object StreamOps {
     * state splits, carries, and timeout flushes. */
   def replaySessionize(spark: SparkSession, events: DataFrame,
                        gapUs: Long, numBatches: Int = 4,
-                       stores: ReplayStores = ReplayStores(),
-                       feedKey: Option[String] = None): DataFrame =
+                       stores: ReplayStores = ReplayStores()): DataFrame =
       withReplayShuffle(spark, stores) {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def micros(ts: java.sql.Timestamp): Long =
-      ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
     val src = events.select(col("user_id").cast("long"),
         col("ts").cast("timestamp"), col("value").cast("double"))
       .as[(Long, java.sql.Timestamp, Double)]
     // one collected feed serves batch sizing, the sentinel's max ts AND
     // the chunk source (previously: a count+max job plus the sorted
     // toLocalIterator pass)
-    val data = collectSorted(spark, src, feedKey)(r => (micros(r._2), r._1))
+    val data = collectSorted(spark, src)(r => (micros(r._2), r._1))
     val maxUs = if (data.isEmpty) 0L else micros(data.last._2)
     val per = chunkSize(data.length, numBatches)
     val mem = org.apache.spark.sql.execution.streaming.runtime
@@ -449,17 +430,14 @@ object StreamOps {
     * twin's exact (user_id, t1..tk, reached) schema, so the q_funnel
     * oracle SQL checks real cross-batch streaming state carries. */
   def replayFunnel(spark: SparkSession, events: DataFrame,
-                   steps: Seq[String], numBatches: Int = 4,
-                   feedKey: Option[String] = None): DataFrame =
+                   steps: Seq[String], numBatches: Int = 4): DataFrame =
       withReplayShuffle(spark) {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def micros(ts: java.sql.Timestamp): Long =
-      ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
     val src = events.select(col("user_id").cast("long"),
         col("ts").cast("timestamp"), col("event_type"))
       .as[(Long, java.sql.Timestamp, String)]
-    val data = collectSorted(spark, src, feedKey)(r => (micros(r._2), r._1))
+    val data = collectSorted(spark, src)(r => (micros(r._2), r._1))
     val per = chunkSize(data.length, numBatches)
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, java.sql.Timestamp, String)]
@@ -565,21 +543,16 @@ object StreamOps {
   def replayRangeJoin(spark: SparkSession, left: DataFrame, right: DataFrame,
                       keyCol: String, tsCol: String, idCol: String,
                       deltaSec: Long, numBatches: Int = 4,
-                      stores: ReplayStores = ReplayStores(),
-                      feedKey: Option[String] = None): DataFrame =
+                      stores: ReplayStores = ReplayStores()): DataFrame =
       withReplayShuffle(spark, stores) {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def micros(ts: java.sql.Timestamp): Long =
-      ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
     def srcOf(df: DataFrame) = df.select(col(idCol).cast("long"),
         col(keyCol).cast("long"), col(tsCol).cast("timestamp"))
       .as[(Long, Long, java.sql.Timestamp)]
     val (ls, rs) = (srcOf(left), srcOf(right))
-    def chunks(ds: org.apache.spark.sql.Dataset[(Long, Long, java.sql.Timestamp)],
-               side: String) = {
-      val data = collectSorted(spark, ds, feedKey.map(_ + side))(
-        r => (micros(r._3), r._1))
+    def chunks(ds: org.apache.spark.sql.Dataset[(Long, Long, java.sql.Timestamp)]) = {
+      val data = collectSorted(spark, ds)(r => (micros(r._3), r._1))
       data.grouped(chunkSize(data.length, numBatches))
     }
     val memL = org.apache.spark.sql.execution.streaming.runtime
@@ -595,7 +568,7 @@ object StreamOps {
       .writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     try {
-      val (lc, rc) = (chunks(ls, ":l"), chunks(rs, ":r"))
+      val (lc, rc) = (chunks(ls), chunks(rs))
       while (lc.hasNext || rc.hasNext) {
         if (lc.hasNext) memL.addData(lc.next().toSeq: _*)
         if (rc.hasNext) memR.addData(rc.next().toSeq: _*)
@@ -609,19 +582,20 @@ object StreamOps {
     }
   }
 
-
   /** ONE collect job + a deterministic driver-side sort, memoized under
-    * `feedKey` (see [[preparedFeed]]) — the replay feed prep. Replaces
+    * `feedKey` (see [[feedMemo]]) — the replay feed prep. Replaces
     * the per-row count job + range-partitioned orderBy + per-partition
     * toLocalIterator round-trips (4-6 jobs) with a single collect; the
     * sort key must reproduce the previous orderBy's total order (ids and
     * integer micros compare identically driver-side; the one string key,
     * event_type, is ASCII so JVM and UTF8 binary orders coincide). */
   private def collectSorted[T <: AnyRef, K](spark: SparkSession,
-      ds: Dataset[T], feedKey: Option[String])(key: T => K)(
+      ds: Dataset[T], feedKey: Option[String] = None)(key: T => K)(
       implicit ord: Ordering[K],
-      ct: scala.reflect.ClassTag[T]): Array[T] =
-    preparedFeed(spark, feedKey) { ds.collect().sortBy(key) }
+      ct: scala.reflect.ClassTag[T]): Array[T] = {
+    def build = ds.collect().sortBy(key)
+    feedKey.fold(build)(k => feedMemo(spark, k)(build).asInstanceOf[Array[T]])
+  }
 
   /** ceil(n / numBatches), >= 1 — the per-micro-batch chunk size. */
   private def chunkSize(n: Int, numBatches: Int): Int =
@@ -630,7 +604,7 @@ object StreamOps {
   /** Shared batch->stream bridge: pipes `docs` (doc_id, text) through a
     * streaming transform as `numBatches` ascending-id micro-batches and
     * returns the memory-sink rows. The feed is ONE collected, driver-
-    * sorted array (memoized under `feedKey` — see [[preparedFeed]] for
+    * sorted array (memoized under `feedKey` — see [[feedMemo]] for
     * the sharing contract and driver-memory posture). */
   private def replayDocStream(spark: SparkSession, docs: DataFrame,
                               numBatches: Int, name: String,
@@ -761,18 +735,15 @@ object StreamOps {
                      refs: DataFrame,
                      cfg: MelodyJoin.Config, theta: Double,
                      maxRefs: Int = 4096,
-                     numBatches: Int = 4,
-                     feedKey: Option[String] = None): DataFrame =
+                     numBatches: Int = 4): DataFrame =
       withReplayShuffle(spark) {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val staticRefs = preparedFeed(spark, feedKey.map(_ + ":refs")) {
-      collectBoundedRefs(refs, maxRefs)
-    }
+    val staticRefs = collectBoundedRefs(refs, maxRefs)
     val src = hists.select(col("id").cast("long"),
         col("weights").cast("array<double>"))
       .as[(Long, Array[Double])]
-    val data = collectSorted(spark, src, feedKey)(_._1)
+    val data = collectSorted(spark, src)(_._1)
     val per = chunkSize(data.length, numBatches)
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Double])]
@@ -837,19 +808,16 @@ object StreamOps {
   def replayEditMatch(spark: SparkSession, docs: DataFrame,
                       refs: DataFrame, d: Int,
                       maxRefs: Int = 4096,
-                      numBatches: Int = 2,
-                      feedKey: Option[String] = None): DataFrame =
+                      numBatches: Int = 2): DataFrame =
       withReplayShuffle(spark) {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val staticRefs = preparedFeed(spark, feedKey.map(_ + ":refs")) {
-      collectBoundedTexts(
-        refs.select(col("doc_id").as("id"), col("text")), maxRefs)
-    }
+    val staticRefs = collectBoundedTexts(
+      refs.select(col("doc_id").as("id"), col("text")), maxRefs)
     val src = docs.select(col("doc_id").cast("long"),
         coalesce(col("text").cast("string"), lit("")))
       .as[(Long, String)]
-    val data = collectSorted(spark, src, feedKey)(_._1)
+    val data = collectSorted(spark, src)(_._1)
     val per = chunkSize(data.length, numBatches)
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
@@ -984,15 +952,14 @@ object StreamOps {
     * harness contract: ascending-file-id micro-batches, stateless per
     * batch. */
   def replayWarc(spark: SparkSession, files: DataFrame,
-                 numBatches: Int = 2,
-                 feedKey: Option[String] = None): DataFrame =
+                 numBatches: Int = 2): DataFrame =
       withReplayShuffle(spark) {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = files.select(col("file_id").cast("long"),
         coalesce(col("content").cast("string"), lit("")))
       .as[(Long, String)]
-    val data = collectSorted(spark, src, feedKey)(_._1)
+    val data = collectSorted(spark, src)(_._1)
     val per = chunkSize(data.length, numBatches)
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
@@ -1159,15 +1126,14 @@ object StreamOps {
     * [[replayEditMatch]] harness contract. */
   def replayContentDedup(spark: SparkSession, newDocs: DataFrame,
                          history: DataFrame,
-                         numBatches: Int = 2,
-                         feedKey: Option[String] = None): DataFrame =
+                         numBatches: Int = 2): DataFrame =
       withReplayShuffle(spark) {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = newDocs.select(col("doc_id").cast("long"),
         coalesce(col("text").cast("string"), lit("")))
       .as[(Long, String)]
-    val data = collectSorted(spark, src, feedKey)(_._1)
+    val data = collectSorted(spark, src)(_._1)
     val per = chunkSize(data.length, numBatches)
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
@@ -1227,15 +1193,14 @@ object StreamOps {
     * diff restricted to arrived documents. */
   def replaySnapshotDiff(spark: SparkSession, newDocs: DataFrame,
                          previous: DataFrame,
-                         numBatches: Int = 2,
-                         feedKey: Option[String] = None): DataFrame =
+                         numBatches: Int = 2): DataFrame =
       withReplayShuffle(spark) {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = newDocs.select(col("doc_id").cast("long"),
         coalesce(col("text").cast("string"), lit("")))
       .as[(Long, String)]
-    val data = collectSorted(spark, src, feedKey)(_._1)
+    val data = collectSorted(spark, src)(_._1)
     val per = chunkSize(data.length, numBatches)
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
@@ -1276,8 +1241,7 @@ object StreamOps {
                     numSub: Int, ksub: Int, k: Int, iters: Int = 2,
                     scale: Int = 1000, idCol: String = "vec_id",
                     vecCol: String = "embedding",
-                    numBatches: Int = 4,
-                    feedKey: Option[String] = None): DataFrame =
+                    numBatches: Int = 4): DataFrame =
       withReplayShuffle(spark) {
     import graft.operators.Ann
     import spark.implicits._
@@ -1288,7 +1252,7 @@ object StreamOps {
       val src = queries.select(col("qid").cast("long"),
           col("v").cast("array<long>"))
         .as[(Long, Array[Long])]
-      val data = collectSorted(spark, src, feedKey)(_._1)
+      val data = collectSorted(spark, src)(_._1)
       val per = chunkSize(data.length, numBatches)
       val mem = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, Array[Long])]
@@ -1329,20 +1293,17 @@ object StreamOps {
   def replayWindowAgg(spark: SparkSession, events: DataFrame,
                       windowDur: String = "1 hour",
                       numBatches: Int = 4,
-                      stores: ReplayStores = ReplayStores(),
-                      feedKey: Option[String] = None): DataFrame =
+                      stores: ReplayStores = ReplayStores()): DataFrame =
       withReplayShuffle(spark, stores) {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def micros(ts: java.sql.Timestamp): Long =
-      ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
     val src = events.select(col("ts").cast("timestamp"),
         col("event_type").cast("string"), col("value").cast("double"))
       .as[(java.sql.Timestamp, String, Double)]
     // one collected feed serves batch sizing, the sentinel's max ts AND
     // the chunk source (event_type is ASCII, so the driver-side string
     // tie-break matches the previous orderBy's UTF8 binary order)
-    val data = collectSorted(spark, src, feedKey)(r => (micros(r._1), r._2))
+    val data = collectSorted(spark, src)(r => (micros(r._1), r._2))
     val maxUs = if (data.isEmpty) 0L else micros(data.last._1)
     val per = chunkSize(data.length, numBatches)
     val mem = org.apache.spark.sql.execution.streaming.runtime
@@ -1428,8 +1389,7 @@ object StreamOps {
     * q_asof_join oracle checks real streaming enrichment state. */
   def replayAsOf(spark: SparkSession, left: DataFrame, right: DataFrame,
                  keyCol: String, tsCol: String, idCol: String,
-                 numBatches: Int = 2,
-                 feedKey: Option[String] = None): DataFrame =
+                 numBatches: Int = 2): DataFrame =
       withReplayShuffle(spark) {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -1439,7 +1399,7 @@ object StreamOps {
         col(idCol).cast("long").as("i"), lit(side).as("side"))
     val src = sided(right, 0).union(sided(left, 1))
       .as[(Long, Long, Long, Int)]
-    val data = collectSorted(spark, src, feedKey)(r => (r._2, r._4, r._3))
+    val data = collectSorted(spark, src)(r => (r._2, r._4, r._3))
     val per = chunkSize(data.length, numBatches)
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Long, Long, Int)]

@@ -37,9 +37,7 @@ object EquivProbe {
       time("mrsim") { MrSimJoin.thresholdJoin(spark, hists, theta, cfg) }
       time("baseline") { BaselineJoin.thresholdJoin(spark, hists, theta, cfg) }
       hists.unpersist(false)
-      graft.sources.Fixtures.clearCache(spark)
-      MelodyJoin.clearPrepCache(spark)
-      spark.sharedState.cacheManager.clearCache()
+      graft.SparkEntry.clearSessionCaches(spark)
     }
     spark.stop()
   }
