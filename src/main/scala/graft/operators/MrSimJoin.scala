@@ -3,6 +3,7 @@ package graft.operators
 import graft.core.Caching._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import graft.core._
 
 /** Pivot-partition EMD self-join — the Spark rewrite of the reference's
@@ -15,6 +16,18 @@ import graft.core._
   * (d(r, q) - d(r, p)) / 2 <= theta can still hide a qualifying pair.
   * Each partition joins its records with the shared filter cascade.
   *
+  * Each qualifying pair is emitted exactly once, by its OWNER: the base
+  * partition of its lower-id endpoint (the reference likewise routes a
+  * pair to one reducer — QNEProcessMapper.shouldDistribute:371-395), so
+  * no de-duplication shuffle runs over the output. Exactness: let
+  * EMD(x, y) <= theta and q = base(x). By the triangle inequality (which
+  * [[Emd.isMetricCost]] enforces), d(y, q) <= theta + d(x, q) and
+  * d(x, q) <= d(x, base(y)) <= theta + d(y, base(y)), so
+  * (d(y, q) - d(y, base(y))) / 2 <= theta: y always has a copy in q.
+  * The window test (and its centroid pre-filter) carries 1e-9 of slack
+  * so FP error in the routing distances can only add copies, never lose
+  * the one the owner needs.
+  *
   * Scale safety (the reference re-splits partitions over 32 MB with a
   * multi-round driver loop — CloudJoinBaseReducer.java:105-275,
   * MRSimJoinHD.java:154; Spark's shuffle spill does NOT bound a user-space
@@ -25,21 +38,16 @@ import graft.core._
   *   - any partition still exceeding `maxGroupRows` (skew, adversarial
   *     pivots) is sub-split by hashing records into ceil(size/cap) blocks
   *     and shuffling each record to the block-PAIR keys containing its
-  *     block — every pair still meets exactly once, task memory is
-  *     bounded by two blocks, and the quadratic work spreads over
-  *     m*(m+1)/2 tasks instead of one. One extra O(pivots) driver agg,
-  *     no round loop.
+  *     block — every pair of the pivot still meets exactly once, task
+  *     memory is bounded by two blocks, and the quadratic work spreads
+  *     over m*(m+1)/2 tasks instead of one. One O(pivots) size pass, no
+  *     round loop.
+  *
+  * The driver passes (record count, pivot pick, per-pivot sizes) are one
+  * RDD action, i.e. one Spark job, each; materializing the result adds
+  * three: the kernel's shuffle stage, the cache build and the count.
   */
 object MrSimJoin {
-
-  /** Exact-EMD solve count of the most recent `thresholdJoin` routing
-    * pass (argmin + window passes, summed across tasks) — a convenience
-    * mirror of the per-invocation count for single-threaded diagnostics
-    * only: concurrent joins in one JVM clobber it, and task retries can
-    * over-count the accumulator. For a race-free figure use the count
-    * returned by `thresholdJoinCounted`. The reference-parity baseline
-    * is records x pivots. */
-  @volatile var lastRoutingSolves: Long = -1L
 
   /** Density-aware pivot count (VERDICT r15 item 2). The engine's total
     * pair work is ~ p * occupancy^2 with occupancy = n * win(p) / p,
@@ -64,14 +72,14 @@ object MrSimJoin {
                              theta: Double, cfg: MelodyJoin.Config,
                              oneD: Boolean): Int = {
     import spark.implicits._
-    val n = src.count()
+    // one job; Dataset.count() on a fresh persist runs three under AQE
+    val n = src.rdd.count()
     val poolSize = math.min(2048L, n / 256L).toInt
     if (poolSize <= 16) return 16
-    def normed(df: DataFrame): Array[Array[Double]] = df
+    val pool = firstByIdHash(spark, src, poolSize).map(_._2)
+    val sample = src
+      .orderBy(md5(col("id").cast("string")), col("id")).limit(256)
       .as[(Long, Array[Double])].collect().map(r => HistOps.normalize(r._2))
-    val pool = normed(src.orderBy(hash(col("id")), col("id")).limit(poolSize))
-    val sample = normed(src
-      .orderBy(md5(col("id").cast("string")), col("id")).limit(256))
     val dist: (Array[Double], Array[Double]) => Double =
       if (oneD) (a, b) => cfg.proj1dEmd(0, a, b)
       else if (cfg.numBins <= 32) (a, b) => Emd.exact(a, b, cfg.cost)
@@ -108,25 +116,37 @@ object MrSimJoin {
     best
   }
 
-  def thresholdJoin(spark: SparkSession, hists: DataFrame, theta: Double,
-                    cfg: MelodyJoin.Config, numPivots: Int = 0,
-                    maxGroupRows: Int = 8192): DataFrame = {
-    val (result, solves) =
-      thresholdJoinCounted(spark, hists, theta, cfg, numPivots, maxGroupRows)
-    lastRoutingSolves = solves
-    result
+  /** The first `k` records in `(hash(id), id)` order, weights normalized,
+    * in one `takeOrdered` job. Murmur3 with seed 42 on the long id is
+    * exactly Spark's `hash(col("id"))`, so this is the order of
+    * `orderBy(hash(col("id")), col("id")).limit(k)`. A prefix of the
+    * pivot-count pool is the pivot set itself. */
+  private def firstByIdHash(spark: SparkSession, src: DataFrame,
+                            k: Int): Array[(Long, Array[Double])] = {
+    import spark.implicits._
+    src.as[(Long, Array[Double])].rdd
+      .map { case (id, w) => (Murmur3_x86_32.hashLong(id, 42), id, w) }
+      .takeOrdered(k)(Ordering.by((t: (Int, Long, Array[Double])) => (t._1, t._2)))
+      .map { case (_, id, w) => (id, HistOps.normalize(w)) }
   }
 
-  /** `thresholdJoin` plus its per-invocation routing-solve count —
-    * evidence for the Rubner routing prune that no global state can
-    * misattribute. */
+  def thresholdJoin(spark: SparkSession, hists: DataFrame, theta: Double,
+                    cfg: MelodyJoin.Config, numPivots: Int = 0,
+                    maxGroupRows: Int = 8192): DataFrame =
+    thresholdJoinCounted(spark, hists, theta, cfg, numPivots, maxGroupRows)._1
+
+  /** `thresholdJoin` plus its routing-solve count: exact-EMD solves of
+    * the argmin and window passes, summed across tasks (accumulator-
+    * backed, so a task retry can over-count; the reference-parity
+    * baseline is records x pivots). */
   def thresholdJoinCounted(spark: SparkSession, hists: DataFrame, theta: Double,
                            cfg: MelodyJoin.Config, numPivots: Int = 0,
                            maxGroupRows: Int = 8192): (DataFrame, Long) = {
-    // the hyperplane window prune ((d(r,q) - d(r,base)) / 2 <= theta) and
-    // Emd.exact's net-flow reduction are both valid only for ground costs
-    // satisfying the triangle inequality — a non-metric Config would
-    // silently drop qualifying pairs. One-time O(bins^3) check.
+    // the hyperplane window prune ((d(r,q) - d(r,base)) / 2 <= theta), the
+    // pair-ownership rule and Emd.exact's net-flow reduction are all valid
+    // only for ground costs satisfying the triangle inequality — a
+    // non-metric Config would silently drop qualifying pairs. One-time
+    // O(bins^3) check.
     require(Emd.isMetricCost(cfg.cost, cfg.numBins),
       "MrSimJoin pivot pruning requires a metric ground distance " +
       "(triangle inequality); use BaselineJoin for arbitrary costs")
@@ -142,10 +162,7 @@ object MrSimJoin {
     val p =
       if (numPivots > 0) numPivots
       else autoPivotCount(spark, src, theta, cfg, oneD)
-    val pivots = src
-      .orderBy(hash(col("id")), col("id")).limit(p)
-      .as[(Long, Array[Double])].collect()
-      .map { case (id, w) => (id, HistOps.normalize(w)) }
+    val pivots = firstByIdHash(spark, src, p)
     val pivotsB = spark.sparkContext.broadcast(pivots)
     val cfgB = spark.sparkContext.broadcast(cfg)
     // Rubner-pruned routing (L2 ground only — the centroid distance is an
@@ -163,7 +180,10 @@ object MrSimJoin {
     val solveAcc = spark.sparkContext.longAccumulator("mrsimRoutingSolves")
 
     // assign: base partition = closest pivot; window copies where the
-    // hyperplane margin admits a pair within theta
+    // hyperplane margin admits a pair within theta. The 1e-9 slack keeps
+    // the owner's copy (class scaladoc) robust to FP error; it can only
+    // add copies, and the cascade still decides every pair exactly.
+    val slackTheta = theta + 1e-9
     val routed = src
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
@@ -182,7 +202,7 @@ object MrSimJoin {
             val base = dists.indices.minBy(i => (dists(i), i))
             dists.indices.flatMap { q =>
               if (q == base) Some((q, id, w, true, 0.0))
-              else if ((dists(q) - dists(base)) / 2.0 <= theta) Some((q, id, w, false, 0.0))
+              else if ((dists(q) - dists(base)) / 2.0 <= slackTheta) Some((q, id, w, false, 0.0))
               else None
             }
           } else {
@@ -218,7 +238,7 @@ object MrSimJoin {
             // kernel's band-sort key instead of recomputing an O(bins)
             // rubnerValue per (window copy x block-pair copy) downstream
             val band = rc(0)
-            val windowHi = best + 2.0 * theta
+            val windowHi = best + 2.0 * slackTheta
             val out = scala.collection.mutable.ArrayBuffer[(Int, Long, Array[Double], Boolean, Double)]()
             q = 0
             while (q < nP) {
@@ -227,7 +247,7 @@ object MrSimJoin {
                 val dq =
                   if (dists(q).isNaN) { solves += 1; pivotDist(w, q) }
                   else dists(q)
-                if ((dq - best) / 2.0 <= theta) out += ((q, id, w, false, band))
+                if ((dq - best) / 2.0 <= slackTheta) out += ((q, id, w, false, band))
               }
               q += 1
             }
@@ -238,16 +258,28 @@ object MrSimJoin {
       }.toDF("pivot", "id", "weights", "isBase", "band")
       .persistOnce()
 
-    // per-pivot sizes (window copies included) -> sub-block counts.
-    // O(pivots) rows to the driver, never data-sized.
-    val sizes = routed.groupBy(col("pivot")).agg(count(lit(1)).as("c"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val routingSolves = solveAcc.value // routed is materialized by the agg
-    val subCounts = Array.tabulate(pivots.length)(i =>
-      math.max(1L, (sizes.getOrElse(i, 0L) + maxGroupRows - 1) / maxGroupRows).toInt)
+    // per-pivot sizes (window copies included) -> sub-block counts: one
+    // count array per task, summed in the same job. O(pivots) longs to
+    // the driver, never data-sized, and no shuffle.
+    val nPivots = pivots.length
+    val sizes = routed.select(col("pivot")).as[Int].rdd
+      .mapPartitions { it =>
+        val c = new Array[Long](nPivots)
+        it.foreach(pv => c(pv) += 1)
+        Iterator.single(c)
+      }
+      .fold(new Array[Long](nPivots)) { (acc, c) =>
+        var i = 0
+        while (i < nPivots) { acc(i) += c(i); i += 1 }
+        acc
+      }
+    val routingSolves = solveAcc.value // routed is materialized by the fold
+    val subCounts = sizes.map(c =>
+      math.max(1L, (c + maxGroupRows - 1) / maxGroupRows).toInt)
     val subB = spark.sparkContext.broadcast(subCounts)
 
-    val duals = MelodyJoin.buildDuals(spark, src, cfg)
+    // the closed-form 1-D cascade returns before it reads the duals
+    val duals = if (oneD) Array.empty[DualBound] else MelodyJoin.buildDuals(spark, src, cfg)
     val cascadeB = spark.sparkContext.broadcast(new MelodyJoin.Cascade(cfg, duals))
 
     // key = pivot << 42 | loBlock << 21 | hiBlock; side 0 = loBlock rows.
@@ -270,10 +302,12 @@ object MrSimJoin {
         }
       }
 
-    // per-group join with the cascade; a pair is emitted only where at
-    // least one side is a base copy (then de-duplicated globally: a pair
-    // can qualify in both endpoints' base partitions). Within one pivot a
-    // pair meets in exactly one block-pair group.
+    // per-group join with the cascade; a pair is evaluated and emitted
+    // only in its owner's partition, where its LOWER-id endpoint is the
+    // base copy. The triangle inequality puts the other endpoint there
+    // too (a window copy at worst: class scaladoc), so each pair is
+    // emitted exactly once and needs no global de-duplication. Within
+    // one pivot a pair meets in exactly one block-pair group.
     //
     // Candidate generation is CENTROID-BAND-sorted, not all-pairs
     // (VERDICT r15 item 2): for L2 ground distances the first Rubner
@@ -302,10 +336,12 @@ object MrSimJoin {
         val cut = theta + 1e-9
         @inline def tryPair(x: (Long, Array[Double], Boolean, Double),
                             y: (Long, Array[Double], Boolean, Double)): Unit = {
-          if ((x._3 || y._3) && x._1 != y._1) {
-            // canonical orientation (lower id first): keeps the exact
-            // solver's fp path identical across partitions/engines
-            val (lo, hi) = if (x._1 < y._1) (x, y) else (y, x)
+          // canonical orientation (lower id first): keeps the exact
+          // solver's fp path identical across partitions/engines
+          val xLo = x._1 < y._1
+          val lo = if (xLo) x else y
+          val hi = if (xLo) y else x
+          if (lo._3 && lo._1 != hi._1) {
             val emd = casc.emdIfCandidate(lo._2, hi._2, theta)
             if (emd >= 0) out += ((lo._1, hi._1, emd))
           }
@@ -350,12 +386,11 @@ object MrSimJoin {
         out
       }
       .toDF("rid", "sid", "dist")
-      .dropDuplicates("rid", "sid")
       .persistOnce()
     // materialize the (small) pair result so the data-sized cached
     // intermediates can be freed now instead of leaking across a
     // multi-query session; the persisted result is O(pairs), not O(N).
-    result.count()
+    result.rdd.count()
     src.unpersist(false)
     routed.unpersist(false)
     (result, routingSolves)
@@ -383,13 +418,16 @@ object MrSimJoin {
       .map { case (id, w) => (id, HistOps.normalize(w)) }
     val oneD = cfg.dimension == 1 && cfg.numVectors == 1 &&
       cfg.groundDist == graft.core.GroundDist.L2
-    val dists = for {
-      i <- sample.indices; j <- sample.indices if i < j
-    } yield
-      if (oneD) cfg.proj1dEmd(0, sample(i)._2, sample(j)._2)
-      else Emd.exact(sample(i)._2, sample(j)._2, cfg.cost)
-    val sorted = dists.sorted
-    val ub = if (sorted.length >= k) sorted(k - 1) else Double.MaxValue
+    // closed-form 1-D distances are cheap on the driver; the exact LPs
+    // of C(sampleSize, 2) pairs run on the executors
+    val ws = sample.map(_._2)
+    val ub =
+      if (!oneD) MelodyJoin.kthSampleDist(spark, ws, k, cfg.cost)
+      else {
+        val sorted = (for { i <- ws.indices; j <- ws.indices if i < j }
+          yield cfg.proj1dEmd(0, ws(i), ws(j))).sorted
+        if (sorted.length >= k) sorted(k - 1) else Double.MaxValue
+      }
     // rank by the ROUNDED distance (then rid, sid) — the exact tie-break
     // the driver's 6-decimal oracle applies. The radius covers the full
     // rounding bucket of the k-th distance (+2e-6, not +epsilon): a pair

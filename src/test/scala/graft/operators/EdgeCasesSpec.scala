@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Degenerate-input robustness: the shapes that show up at 100 TB —
@@ -15,6 +15,15 @@ class EdgeCasesSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def cfg = graft.SparkEntry.melodyCfg3d
+
+  /** An engine result's `(rid, sid)` pairs, after asserting that none
+    * appears twice (a set alone would hide a duplicate). */
+  private def distinctPairs(result: DataFrame): Set[(Long, Long)] = {
+    val rows = result.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val pairs = rows.toSet
+    assert(rows.length == pairs.size, s"${rows.length} rows but ${pairs.size} distinct pairs")
+    pairs
+  }
 
   private def df(rows: Seq[(Long, Array[Double])]) = {
     spark.sparkContext.setLogLevel("WARN")
@@ -65,9 +74,8 @@ class EdgeCasesSpec extends AnyFunSuite {
     })
     val base = BaselineJoin.thresholdJoin(spark, hists, 0.3, cfg)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val mrsim = MrSimJoin.thresholdJoin(spark, hists, 0.3, cfg,
-      numPivots = 4, maxGroupRows = 16)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val mrsim = distinctPairs(MrSimJoin.thresholdJoin(spark, hists, 0.3, cfg,
+      numPivots = 4, maxGroupRows = 16))
     assert(base.size == 120 * 119 / 2, s"expected all pairs, got ${base.size}")
     assert(mrsim == base,
       s"missed=${(base -- mrsim).size} extra=${(mrsim -- base).size}")
@@ -308,8 +316,8 @@ class EdgeCasesSpec extends AnyFunSuite {
     val hists = df((1L to 6L).map(i => (i, Array.fill(8)(rnd.nextDouble()))))
     val base = BaselineJoin.thresholdJoin(spark, hists, 0.5, cfg)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val mrsim = MrSimJoin.thresholdJoin(spark, hists, 0.5, cfg, numPivots = 16)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val mrsim = distinctPairs(MrSimJoin.thresholdJoin(spark, hists, 0.5, cfg,
+      numPivots = 16))
     assert(mrsim == base)
   }
 

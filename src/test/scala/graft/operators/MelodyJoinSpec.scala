@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 
@@ -24,6 +24,15 @@ class MelodyJoinSpec extends AnyFunSuite {
       Array(1.0, -1.0, 0.0),
       Array(1.0, 1.0, -2.0)),
     numDuals = 4, numReductions = 4, reducedDim = 4)
+
+  /** An engine result's `(rid, sid, dist)` rows, after asserting that no
+    * `(rid, sid)` pair appears twice (a set alone would hide a duplicate). */
+  private def distinctRows(df: DataFrame): Seq[(Long, Long, Double)] = {
+    val rows = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val pairs = rows.map(r => (r._1, r._2)).distinct.size
+    assert(rows.size == pairs, s"${rows.size} rows but $pairs distinct (rid, sid) pairs")
+    rows
+  }
 
   private def randomHists(n: Int, numBins: Int, seed: Long) = {
     val rnd = new Random(seed)
@@ -146,8 +155,7 @@ class MelodyJoinSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val (mrsimDf, solves) =
       MrSimJoin.thresholdJoinCounted(spark, hists, theta, cfg3d, numPivots = 8)
-    val mrsim = mrsimDf
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val mrsim = distinctRows(mrsimDf).map(r => (r._1, r._2)).toSet
     assert(base.nonEmpty)
     assert(base == mrsim,
       s"missed=${(base -- mrsim).size} extra=${(mrsim -- base).size}")
@@ -161,8 +169,7 @@ class MelodyJoinSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val (mrsimTDf, solvesT) =
       MrSimJoin.thresholdJoinCounted(spark, hists, tightTheta, cfg3d, numPivots = 8)
-    val mrsimT = mrsimTDf
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val mrsimT = distinctRows(mrsimTDf).map(r => (r._1, r._2)).toSet
     assert(baseT == mrsimT,
       s"tight: missed=${(baseT -- mrsimT).size} extra=${(mrsimT -- baseT).size}")
     assert(solvesT > 0 && solvesT < 100L * 8,
@@ -176,15 +183,54 @@ class MelodyJoinSpec extends AnyFunSuite {
     // with identical distances
     val hists = randomHists(90, 8, seed = 29)
     val theta = 0.3
-    def run(p: Int) = MrSimJoin.thresholdJoin(spark, hists, theta, cfg3d,
-        numPivots = p)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val auto = MrSimJoin.thresholdJoin(spark, hists, theta, cfg3d)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def run(p: Int) = distinctRows(MrSimJoin.thresholdJoin(spark, hists, theta,
+      cfg3d, numPivots = p)).toSet
+    val auto = distinctRows(MrSimJoin.thresholdJoin(spark, hists, theta, cfg3d)).toSet
     val p7 = run(7)
     val p31 = run(31)
     assert(auto.nonEmpty && p7 == auto && p31 == auto,
       s"pivot-variant answers: auto=${auto.size} p7=${p7.size} p31=${p31.size}")
+  }
+
+  test("mrsim 1-D on boundary-dense count ratios == baseline, bit for bit") {
+    // integer counts with dyadic totals (8 or 16 units over 8 bins): every
+    // weight, CDF and 1-D EMD is exact in binary, so theta = 1/4 is hit
+    // EXACTLY by many pairs, and routing margins land on the window
+    // test's equality case — the tight case of the pair-ownership proof.
+    // Records are a few shapes perturbed by single-unit moves between
+    // adjacent bins (1/8 or 1/16 of EMD each), plus exact duplicates.
+    // The witness is the all-pairs baseline through the same exact 1-D
+    // kernel; the 1-D melody engine misses 13 of its on-theta pairs
+    // (ROADMAP, "Fix first").
+    import spark.implicits._
+    val rnd = new Random(37)
+    val shapes = Array(
+      Array(1, 1, 1, 1, 1, 1, 1, 1), Array(4, 2, 1, 1, 0, 0, 0, 0),
+      Array(0, 0, 0, 2, 4, 2, 0, 0), Array(2, 0, 0, 2, 0, 0, 2, 2))
+    val hists = (0 until 160).map { i =>
+      val scale = 1 + rnd.nextInt(2)
+      val c = shapes(rnd.nextInt(shapes.length)).map(_ * scale)
+      (0 until rnd.nextInt(4)).foreach { _ =>
+        val from = Iterator.continually(rnd.nextInt(8)).find(c(_) > 0).get
+        val to = if (from == 0) 1 else if (from == 7) 6
+          else from + (if (rnd.nextBoolean()) 1 else -1)
+        c(from) -= 1; c(to) += 1
+      }
+      (i.toLong, c.map(_.toDouble))
+    }.toDF("id", "weights")
+    val theta = 0.25
+    val cfg = graft.SparkEntry.melodyCfg1d
+    def bits(rows: Seq[(Long, Long, Double)]) =
+      rows.map(r => (r._1, r._2, java.lang.Double.doubleToRawLongBits(r._3))).sorted
+    val want = bits(distinctRows(BaselineJoin.thresholdJoin(spark, hists, theta, cfg)))
+    val onTheta = want.count(_._3 == java.lang.Double.doubleToRawLongBits(theta))
+    assert(onTheta >= 100, s"only $onTheta of ${want.size} pairs on theta - vacuous")
+    for (p <- Seq(1, 4, 16); g <- Seq(16, 8192)) {
+      val got = bits(distinctRows(
+        MrSimJoin.thresholdJoin(spark, hists, theta, cfg, numPivots = p, maxGroupRows = g)))
+      assert(got == want, s"pivots=$p maxGroupRows=$g: missed=" +
+        s"${want.diff(got).take(5)} extra=${got.diff(want).take(5)}")
+    }
   }
 
   test("tree-EMD banded join == brute-force tree distance on normalized hists") {
