@@ -33,44 +33,82 @@ object NormalModel {
   /** Integral of a discrete (step) CDF between keyA and keyB.
     * cdf: (position, cumulative) pairs sorted ascending.
     * Reference behavior: HistUtil.getDiscreteCDFAreaBetween:250-270. */
-  def discreteCdfArea(cdf: Array[(Double, Double)], keyA0: Double, keyB0: Double): Double = {
+  def discreteCdfArea(cdf: Array[(Double, Double)], keyA0: Double, keyB0: Double): Double =
+    discreteArea(cdf.map(_._1), cdf.map(_._2), keyA0, keyB0)
+
+  /** [[discreteCdfArea]] over the CDF split into its key and cumulative
+    * columns, so a caller that evaluates many areas on one CDF splits it
+    * once. Same comparisons and products in the same order. */
+  private def discreteArea(keys: Array[Double], cums: Array[Double],
+                           keyA0: Double, keyB0: Double): Double = {
     var keyA = keyA0; var keyB = keyB0
     if (keyA >= keyB) return 0.0
     var area = 0.0
-    val keys = cdf.map(_._1)
-    def cumAt(i: Int) = cdf(i)._2
-    val first = keys.head; val last = keys.last
-    val containsA = keys.contains(keyA)
-    val containsB = keys.contains(keyB)
+    val n = keys.length
+    val first = keys(0); val last = keys(n - 1)
+    var containsA = false; var containsB = false
+    var i = 0
+    while (i < n) {
+      if (keys(i) == keyA) containsA = true
+      if (keys(i) == keyB) containsB = true
+      i += 1
+    }
     if (!containsA && keyA > first) {
-      val lo = keys.lastIndexWhere(_ < keyA)
-      val hi = keys.indexWhere(_ > keyA)
-      area += cumAt(lo) * (keys(hi) - keyA)
+      var lo = n - 1
+      while (lo >= 0 && !(keys(lo) < keyA)) lo -= 1
+      var hi = 0
+      while (hi < n && !(keys(hi) > keyA)) hi += 1
+      area += cums(lo) * (keys(hi) - keyA)
       keyA = keys(hi)
     }
     if (!containsB && keyB < last) {
-      val lo = keys.lastIndexWhere(_ < keyB)
-      area += cumAt(lo) * (keyB - keys(lo))
+      var lo = n - 1
+      while (lo >= 0 && !(keys(lo) < keyB)) lo -= 1
+      area += cums(lo) * (keyB - keys(lo))
       keyB = keys(lo)
     }
-    var i = 0
-    while (i < cdf.length - 1) {
+    i = 0
+    while (i < n - 1) {
       val k = keys(i)
-      if (k >= keyA && k < keyB) area += cumAt(i) * (keys(i + 1) - k)
+      if (k >= keyA && k < keyB) area += cums(i) * (keys(i + 1) - k)
       i += 1
     }
     area
   }
 
+  /** One record's error model: the CDF's key/cum columns and the domain
+    * ends' standardized Phi/phi terms, computed once and shared by every
+    * split point. `cumulativeProbability` is the enrichment hot spot, so
+    * each point pays one Phi and one phi, shared between its before- and
+    * after-area. Every expression keeps [[normalCdfArea]]'s operands and
+    * order, so errors are bit-identical to evaluating it per area. */
+  private final class ErrorModel(mu: Double, sigma: Double, cdf: Array[(Double, Double)]) {
+    val keys: Array[Double] = cdf.map(_._1)
+    val cums: Array[Double] = cdf.map(_._2)
+    val first: Double = keys(0)
+    val last: Double = keys(keys.length - 1)
+    private val tF = (first - mu) / sigma
+    private val gF = tF * stdNormal.cumulativeProbability(tF)
+    private val dF = stdNormal.density(tF)
+    private val tL = (last - mu) / sigma
+    private val gL = tL * stdNormal.cumulativeProbability(tL)
+    private val dL = stdNormal.density(tL)
+
+    def errorAt(pt: Double): Double = {
+      val tP = (pt - mu) / sigma
+      val gP = tP * stdNormal.cumulativeProbability(tP)
+      val dP = stdNormal.density(tP)
+      val before = discreteArea(keys, cums, first, pt) - (gP + dP - gF - dF) * sigma
+      val after = discreteArea(keys, cums, pt, last) - (gL + dL - gP - dP) * sigma
+      before - after
+    }
+  }
+
   /** Signed approximation error of the normal vs the discrete CDF at a
     * split point: (discrete - normal) area before pt minus after pt.
     * Reference behavior: HistUtil.getErrorAt:389-396. */
-  def errorAt(mu: Double, sigma: Double, cdf: Array[(Double, Double)], pt: Double): Double = {
-    val first = cdf.head._1; val last = cdf.last._1
-    val before = discreteCdfArea(cdf, first, pt) - normalCdfArea(mu, sigma, first, pt)
-    val after = discreteCdfArea(cdf, pt, last) - normalCdfArea(mu, sigma, pt, last)
-    before - after
-  }
+  def errorAt(mu: Double, sigma: Double, cdf: Array[(Double, Double)], pt: Double): Double =
+    new ErrorModel(mu, sigma, cdf).errorAt(pt)
 
   /** Per-interval (min, max) of errorAt over the record's domain split into
     * numIntervals equal intervals; evaluated at interval endpoints, discrete
@@ -80,7 +118,9 @@ object NormalModel {
   def minMaxError(mu: Double, sigma: Double, cdf: Array[(Double, Double)],
                   numIntervals: Int): Array[Double] = {
     val normal = new NormalDistribution(null, mu, sigma)
-    val first = cdf.head._1; val last = cdf.last._1
+    val model = new ErrorModel(mu, sigma, cdf)
+    val keys = model.keys; val cums = model.cums
+    val first = model.first; val last = model.last
     val len = (last - first) / numIntervals
     val out = new Array[Double](2 * numIntervals)
     var i = 0
@@ -89,13 +129,13 @@ object NormalModel {
       val end = first + (i + 1) * len
       val pts = scala.collection.mutable.TreeSet[Double](start, end)
       var j = 0
-      while (j < cdf.length) {
-        val (k, cum) = cdf(j)
-        if (start < k && k < end && j + 1 < cdf.length) {
+      while (j < keys.length) {
+        val k = keys(j)
+        if (start < k && k < end && j + 1 < keys.length) {
           pts += k
-          val p = math.min(math.max(cum, Eps), 1 - Eps)
+          val p = math.min(math.max(cums(j), Eps), 1 - Eps)
           val potential = normal.inverseCumulativeProbability(p)
-          val nextKey = cdf(j + 1)._1
+          val nextKey = keys(j + 1)
           if (potential > k && potential < end && potential < last && potential < nextKey)
             pts += potential
         }
@@ -103,7 +143,7 @@ object NormalModel {
       }
       var mn = Double.MaxValue; var mx = -Double.MaxValue
       pts.foreach { p =>
-        val e = errorAt(mu, sigma, cdf, p)
+        val e = model.errorAt(p)
         if (e < mn) mn = e
         if (e > mx) mx = e
       }

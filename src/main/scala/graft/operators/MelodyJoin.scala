@@ -10,21 +10,34 @@ import graft.core._
   * reference's flagship 4-phase "melody" MapReduce engine
   * (mr/normal/QuantileNormalEmd.java:126-247).
   *
-  * One Spark job replaces the 4 chained MR jobs:
-  *   - Phases 1-2 (fit normals, domains, quantile grids, cell summaries)
-  *     become two aggregations + a driver-side collect of O(cells) rows,
-  *     broadcast to executors (no DistributedCache, no side files).
-  *   - Phase 3 (replicate records to candidate cells, per-cell nested-loop
-  *     with bound cascade) becomes candidate explode + shuffled equijoin on
-  *     the cell key + a mapPartitions filter cascade.
+  * A multi-dim threshold join runs four Spark jobs in place of the 4
+  * chained MR jobs:
+  *   - grids: one RDD job fits the per-record normals' Hough points; the
+  *     driver derives the domains and quantile grids from them;
+  *   - duals: one `takeOrdered` job draws the lowest-id sample;
+  *   - summarize: one job enriches every record (persisted) and merges
+  *     the per-cell summaries, collected (O(cells)) and broadcast — no
+  *     DistributedCache, no side files (Phases 1-2);
+  *   - join: one shuffle (Phase 3). Each record goes to its own cell
+  *     combination as a native and to every candidate combination that
+  *     survives the cell-level prunes (dual range, Rubner box, tree gap,
+  *     EMD_BR) as a guest; each combination's group runs the reference's
+  *     per-cell nested loop (NEProcessReducer.joinRecords:204-264),
+  *     native x native and native x guest, through the [[Cascade]].
   *   - Phase 4 (top-k merge) is orderBy(dist).limit(k).
+  * The 1-D single-vector path keeps a Catalyst equijoin on the cell key,
+  * whose closed-form distance stays inside whole-stage codegen.
   *
-  * Scale design: the only data-sized shuffles are the cell-summary groupBy
-  * and the candidate equijoin (both keyed by cell combination). Cell count
-  * is bounded by grid^(2*numVectors), independent of data size, so the
-  * collected summary stays tiny at any scale; records are replicated only
-  * to cells that survive three cell-level prunes (dual range, EMD_BR,
-  * Rubner box). AQE handles skewed cells.
+  * Scale design: the only data-sized shuffle is the join's group-by-cell.
+  * Cell count is bounded by grid^(2*numVectors), independent of data
+  * size, so the collected summary stays tiny at any scale. A task holds
+  * one combination's natives plus its guest copies at once — the same
+  * per-key footprint a sort-merge join's buffered side has. Skew: one
+  * heavy cell is one task. AQE never split those cells on the former
+  * sort-merge joins either: it splits a partition only above
+  * `skewedPartitionThresholdInBytes` (256 MB), which no gated scale
+  * reaches; the density-scaled grid side ([[sideNumFor]]) is what bounds
+  * per-cell occupancy.
   */
 object MelodyJoin {
 
@@ -168,17 +181,9 @@ object MelodyJoin {
 
   private val ErrLen: Config => Int = cfg => 2 * cfg.numIntervals + 1
 
-  /** Per-record enrichment: Hough points, error envelopes, dual keys,
-    * centroid. (= reference Phase 1 map + Phase 2 map,
-    * NEPreMapper.java:83-135 + QNESpaceMapper.java:52-220.) */
-  final case class Enriched(
-      id: Long,
-      weights: Array[Double],
-      mb: Array[Double],       // 2 * numVectors: (m, b) per vector
-      errors: Array[Double],   // numVectors * (2I+1): envelope + full
-      dualKeys: Array[Double], // numDuals: key(h) per dual
-      dualCKeys: Array[Double],
-      rubner: Array[Double])   // dimension
+  /** One record in a combo's Phase 3 group: a native of the combo, or a
+    * guest copy replicated there by [[guestCombos]]. */
+  private final case class CellMember(id: Long, w: Array[Double], native: Boolean)
 
   /** Summary of one cell combination (= Phase 2 reduce,
     * NESpaceReducer.java:73-219; treeLo/treeHi are the rebuild's own
@@ -310,12 +315,14 @@ object MelodyJoin {
     }.toArray
   }
 
-  /** The exact-quantiles grid build as two plain RDD passes (fit +
-    * domain, then projection distances + percentiles) instead of two
+  /** The exact-quantiles grid build as ONE plain RDD job instead of two
     * wide Catalyst aggregates — the [[summarize]] argument: at prepare
     * time the planner/codegen cost of the 6*numVectors-column agg (with
     * exact `percentile` over array literals) dominated the arithmetic,
-    * re-paid every prepare (~1-1.5s of the 3-D prep at sf0.1).
+    * re-paid every prepare (~1-1.5s of the 3-D prep at sf0.1). The
+    * executors fit the per-record Hough points (m, b); the driver
+    * collects them and computes the domain, the projection distances and
+    * the percentiles.
     *
     * Exactness posture: grid boundaries steer PRUNING only — every
     * bound in the cascade is admissible for any grid, so answers are
@@ -324,16 +331,16 @@ object MelodyJoin {
     * Catalyst's exact Percentile formula (sorted values, rank
     * p*(n-1), two-sided linear interpolation) and min/max use
     * java.lang.Double.compare, so the boundaries match the former agg
-    * bit-for-bit on NaN-free data. Driver holds the per-vector distance
-    * multisets — the SAME multiset Spark's own exact Percentile buffers
-    * in its final single aggregation buffer, so this moves no new
-    * scale class onto the driver; the 100 TB path is
+    * bit-for-bit on NaN-free data. Driver load: 2*numVectors doubles per
+    * record — the size of the per-vector distance multisets Spark's own
+    * exact Percentile buffers in its final single aggregation buffer, so
+    * this moves no new scale class onto the driver; the 100 TB path is
     * exactQuantiles=false (percentile_approx), which keeps the
-    * Catalyst branch below. */
+    * Catalyst branch above. */
   private def buildGridsExactRdd(spark: SparkSession, hists: DataFrame,
                                  cfg: Config): Array[SkewedGrid] = {
     val cfgB = spark.sparkContext.broadcast(cfg)
-    val mbRdd = hists.select("id", "weights").rdd
+    val mbs = hists.select("id", "weights").rdd
       .map { r =>
         val c = cfgB.value
         val w = HistOps.normalize(r.getSeq[Double](1).toArray)
@@ -347,93 +354,66 @@ object MelodyJoin {
         }
         mb
       }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nV = cfg.numVectors
-      @inline def cmin(a: Double, b: Double): Double =
-        if (java.lang.Double.compare(a, b) <= 0) a else b
-      @inline def cmax(a: Double, b: Double): Double =
-        if (java.lang.Double.compare(a, b) >= 0) a else b
-      // pass 1: Hough domain per vector (interleaved min/max slots)
-      val domInit = Array.tabulate(4 * nV)(i =>
-        if (i % 2 == 0) Double.PositiveInfinity else Double.NegativeInfinity)
-      val dom = mbRdd.treeAggregate(domInit)(
-        seqOp = (acc, mb) => {
-          var j = 0
-          while (j < nV) {
-            acc(4 * j) = cmin(acc(4 * j), mb(2 * j))
-            acc(4 * j + 1) = cmax(acc(4 * j + 1), mb(2 * j))
-            acc(4 * j + 2) = cmin(acc(4 * j + 2), mb(2 * j + 1))
-            acc(4 * j + 3) = cmax(acc(4 * j + 3), mb(2 * j + 1))
-            j += 1
-          }
-          acc
-        },
-        combOp = (a, b) => {
-          var i = 0
-          while (i < a.length) {
-            a(i) = if (i % 2 == 0) cmin(a(i), b(i)) else cmax(a(i), b(i))
-            i += 1
-          }
-          a
-        })
-      val uniformGrids = (0 until nV).map { j =>
-        val domain = Array(dom(4 * j), dom(4 * j + 1), dom(4 * j + 2), dom(4 * j + 3))
-        val slopes = Array(-cfg.tRange(j)._2, -cfg.tRange(j)._1)
-        SkewedGrid.uniform(domain, slopes, cfg.sideNum)
-      }.toArray
-      val gridsB = spark.sparkContext.broadcast(uniformGrids)
-      // pass 2: per-vector SW/SE projection-distance multisets (the
-      // multiset exact Percentile needs whole anyway — see scaladoc)
-      val dists = mbRdd.mapPartitions { it =>
-        val gs = gridsB.value
-        val bufs = Array.fill(2 * gs.length)(Array.newBuilder[Double])
-        it.foreach { mb =>
-          var j = 0
-          while (j < gs.length) {
-            val (dsw, dse) = gs(j).projectionDistances(Array(mb(2 * j), mb(2 * j + 1)))
-            bufs(2 * j) += dsw
-            bufs(2 * j + 1) += dse
-            j += 1
-          }
-        }
-        Iterator.single(bufs.map(_.result()))
-      }.reduce { (a, b) =>
-        Array.tabulate(a.length)(i => a(i) ++ b(i))
+      .collect()
+    val nV = cfg.numVectors
+    @inline def cmin(a: Double, b: Double): Double =
+      if (java.lang.Double.compare(a, b) <= 0) a else b
+    @inline def cmax(a: Double, b: Double): Double =
+      if (java.lang.Double.compare(a, b) >= 0) a else b
+    // Hough domain per vector (interleaved min/max slots)
+    val dom = Array.tabulate(4 * nV)(i =>
+      if (i % 2 == 0) Double.PositiveInfinity else Double.NegativeInfinity)
+    mbs.foreach { mb =>
+      var j = 0
+      while (j < nV) {
+        dom(4 * j) = cmin(dom(4 * j), mb(2 * j))
+        dom(4 * j + 1) = cmax(dom(4 * j + 1), mb(2 * j))
+        dom(4 * j + 2) = cmin(dom(4 * j + 2), mb(2 * j + 1))
+        dom(4 * j + 3) = cmax(dom(4 * j + 3), mb(2 * j + 1))
+        j += 1
       }
-      val pcts = (1 until cfg.sideNum).map(_.toDouble / cfg.sideNum)
-      // Catalyst Percentile's exact formula on the ascending multiset
-      def percentilesOf(values: Array[Double]): (Double, Double, Array[Double]) = {
-        val v = values.clone()
-        java.util.Arrays.sort(v)
-        val qs = pcts.map { p =>
-          val pos = p * (v.length - 1)
-          val lo = math.floor(pos).toInt
-          val hi = math.ceil(pos).toInt
-          if (lo == hi) v(lo)
-          else (hi - pos) * v(lo) + (pos - lo) * v(hi)
-        }.toArray
-        (v.head, v.last, qs)
-      }
-      (0 until nV).map { j =>
-        val base = uniformGrids(j)
-        val (minSW, maxSW, pSW) = percentilesOf(dists(2 * j))
-        val (minSE, maxSE, pSE) = percentilesOf(dists(2 * j + 1))
-        val sw = (minSW - 1e-9) +: pSW :+ (maxSW + 1e-9)
-        val se = (minSE - 1e-9) +: pSE :+ (maxSE + 1e-9)
-        SkewedGrid.quantile(base.domain, base.slopes, cfg.sideNum, sw, se)
-      }.toArray
-    } finally {
-      mbRdd.unpersist(false)
     }
+    val pcts = (1 until cfg.sideNum).map(_.toDouble / cfg.sideNum)
+    // Catalyst Percentile's exact formula on the ascending multiset
+    def percentilesOf(v: Array[Double]): (Double, Double, Array[Double]) = {
+      java.util.Arrays.sort(v)
+      val qs = pcts.map { p =>
+        val pos = p * (v.length - 1)
+        val lo = math.floor(pos).toInt
+        val hi = math.ceil(pos).toInt
+        if (lo == hi) v(lo)
+        else (hi - pos) * v(lo) + (pos - lo) * v(hi)
+      }.toArray
+      (v.head, v.last, qs)
+    }
+    (0 until nV).map { j =>
+      val domain = Array(dom(4 * j), dom(4 * j + 1), dom(4 * j + 2), dom(4 * j + 3))
+      val slopes = Array(-cfg.tRange(j)._2, -cfg.tRange(j)._1)
+      val base = SkewedGrid.uniform(domain, slopes, cfg.sideNum)
+      // SW/SE projection distances of every Hough point on the uniform grid
+      val dsw = new Array[Double](mbs.length)
+      val dse = new Array[Double](mbs.length)
+      var r = 0
+      while (r < mbs.length) {
+        val d = base.projectionDistances(Array(mbs(r)(2 * j), mbs(r)(2 * j + 1)))
+        dsw(r) = d._1; dse(r) = d._2
+        r += 1
+      }
+      val (minSW, maxSW, pSW) = percentilesOf(dsw)
+      val (minSE, maxSE, pSE) = percentilesOf(dse)
+      val sw = (minSW - 1e-9) +: pSW :+ (maxSW + 1e-9)
+      val se = (minSE - 1e-9) +: pSE :+ (maxSE + 1e-9)
+      SkewedGrid.quantile(base.domain, base.slopes, cfg.sideNum, sw, se)
+    }.toArray
   }
 
   /** Deterministic dual-bound construction from the lowest-id sample
-    * records (seeded; replaces the reference's per-task first-two-hists). */
+    * records (seeded; replaces the reference's per-task first-two-hists).
+    * One `takeOrdered` job. */
   def buildDuals(spark: SparkSession, hists: DataFrame, cfg: Config): Array[DualBound] = {
-    import spark.implicits._
-    val sample = hists.select("id", "weights").as[(Long, Array[Double])]
-      .orderBy(col("id")).limit(2 * cfg.numDuals + 2).collect()
+    val sample = hists.select("id", "weights").rdd
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      .takeOrdered(2 * cfg.numDuals + 2)(Ordering.by[(Long, Array[Double]), Long](_._1))
     if (sample.length < 2) return Array.empty // no pair to derive a dual from
     val rnd = new scala.util.Random(cfg.seed)
     (0 until cfg.numDuals).map { _ =>
@@ -892,8 +872,11 @@ object MelodyJoin {
         }
         // Rubner box prune — a d-dim clamp, far cheaper than EMD_BR's
         // normal-CDF integrals, so it runs before them (cheapest-first
-        // cascade ordering, same answer)
-        if (ok && Emd.rubnerBox(rubner, cs.rubnerLo, cs.rubnerHi) > theta) ok = false
+        // cascade ordering, same answer). Cell prunes carry 1e-9 slack
+        // like the flat band above: they only skip work, and a bound
+        // that FP-rounds a partner at EMD exactly theta past theta would
+        // drop that answer
+        if (ok && Emd.rubnerBox(rubner, cs.rubnerLo, cs.rubnerHi) > theta + 1e-9) ok = false
         // tree-feature gap prune — O(numFeatures) flat adds, far cheaper
         // than EMD_BR's normal-CDF integrals, so it runs BEFORE them
         // (cheapest-first; both are pure filters, answer order-invariant).
@@ -914,10 +897,13 @@ object MelodyJoin {
           }
         }
         // EMD_BR per vector — memoized on the per-vector-cell relaxed
-        // envelope (still a valid lower bound; see above)
+        // envelope (still a valid lower bound; see above). Slack as for
+        // the Rubner box: on dyadic 1-D count ratios at theta = 0.25 this
+        // bound landed up to 2.2e-15 (40 ulps) above theta for cells
+        // holding partners at EMD exactly theta
         j = 0
         while (ok && j < cfg.numVectors) {
-          if (brFor(j, cs.cells(j)) > theta) ok = false
+          if (brFor(j, cs.cells(j)) > theta + 1e-9) ok = false
           j += 1
         }
         if (ok) out += cs.combo
@@ -1048,8 +1034,9 @@ object MelodyJoin {
     val result = thresholdJoinPrepared(spark, prep, theta, cfg)
       .persistOnce()
     // materialize the O(pairs) result so the data-sized enrichment cache
-    // can be freed immediately rather than leak across a session
-    result.count()
+    // can be freed immediately rather than leak across a session (one
+    // job: the multi-dim path's shuffle is an RDD stage of it)
+    result.rdd.count()
     prep.unpersist()
     result
   }
@@ -1068,17 +1055,6 @@ object MelodyJoin {
     val (envB, idxB) = prep.guestStructures(spark, cfg)
     val treeGapLimit = tree.map(_.distortion * theta).getOrElse(-1.0)
 
-    // guest replication: explode candidate combos per record
-    val guests = enriched.mapPartitions { it =>
-      val c = cfgB.value
-      it.flatMap { r =>
-        guestCombos(r, c, gridsB.value, dualsB.value, sumB.value, envB.value,
-          theta, treeGapLimit, idxB.value).map { combo =>
-          (r.getLong(0), r.getSeq[Double](1).toArray, combo)
-        }
-      }
-    }.toDF("gid", "gweights", "combo")
-
     val l2 = cfg.groundDist == GroundDist.L2
 
     // 1-D single-vector L2 configs: the whole cascade reduces to the
@@ -1091,6 +1067,16 @@ object MelodyJoin {
     // (3.9s -> 2.7s; the remaining cost is generating the ~49M grid-
     // admitted candidate rows, which only a tighter grid could cut).
     if (cfg.dimension == 1 && cfg.numVectors == 1 && l2) {
+      // guest replication: explode candidate combos per record
+      val guests = enriched.mapPartitions { it =>
+        val c = cfgB.value
+        it.flatMap { r =>
+          guestCombos(r, c, gridsB.value, dualsB.value, sumB.value, envB.value,
+            theta, treeGapLimit, idxB.value).map { combo =>
+            (r.getLong(0), r.getSeq[Double](1).toArray, combo)
+          }
+        }
+      }.toDF("gid", "gweights", "combo")
       val ord = cfg.projOrder(0)
       val gaps = cfg.projGaps(0)
       def addCums(df: DataFrame, w: String, pre: String): DataFrame =
@@ -1120,47 +1106,62 @@ object MelodyJoin {
       return cross.union(inner)
     }
 
-    // Multi-dim configs keep the mapPartitions cascade: a columnar
-    // Rubner centroid gate was tried here and REMOVED — the 3 cell-level
-    // prunes already cull candidates, and the extra per-row columns +
-    // filter cost ~1s on q_emd3d_pairs at sf0.1 (gate selectivity too
-    // low after cell pruning to pay for itself).
-    val natives = enriched.select(col("id"), col("weights"), col("combo"))
-    val cascade = new Cascade(cfg, duals)
-    val cascadeB = spark.sparkContext.broadcast(cascade)
-
-    // native x guest (cross-cell pairs, each qualifying pair exactly once
-    // because guests go only to combos > their native combo)
-    val crossPairs = natives.join(guests, "combo")
-      .select(col("id"), col("weights"), col("gid"), col("gweights"))
-      .as[(Long, Array[Double], Long, Array[Double])]
-      .mapPartitions { it =>
-        val casc = cascadeB.value
-        it.flatMap { case (id, w, gid, gw) =>
-          // canonical orientation (lower id first) so the exact solver's
-          // floating-point path is identical no matter which side was the
-          // guest - otherwise threshold-boundary pairs flip between runs
-          val (wl, wh) = if (id < gid) (w, gw) else (gw, w)
-          val emd = casc.emdIfCandidate(wl, wh, theta)
-          if (emd >= 0) Some((math.min(id, gid), math.max(id, gid), emd)) else None
-        }
+    // Multi-dim configs: Phase 3 as one shuffle. Every record goes to
+    // its own combo as a native and to each surviving guest combo as a
+    // guest; each combo's group then runs native x native (lower id
+    // first) and native x guest through the Cascade. A guest goes only
+    // to combos above its own, so each qualifying pair meets in exactly
+    // one group, once. (A columnar Rubner centroid gate was tried on
+    // this path and removed: after the 3 cell-level prunes its
+    // selectivity was too low to pay for the extra columns, ~1s on
+    // q_emd3d_pairs at sf0.1.)
+    val cascadeB = spark.sparkContext.broadcast(new Cascade(cfg, duals))
+    val numParts = spark.sessionState.conf.numShufflePartitions
+    enriched.rdd.mapPartitions { it =>
+      val c = cfgB.value
+      it.flatMap { r =>
+        val id = r.getLong(0)
+        val w = r.getSeq[Double](1).toArray
+        val native = (r.getLong(2), CellMember(id, w, native = true))
+        val guest = CellMember(id, w, native = false)
+        Iterator.single(native) ++
+          guestCombos(r, c, gridsB.value, dualsB.value, sumB.value, envB.value,
+            theta, treeGapLimit, idxB.value).iterator.map(combo => (combo, guest))
       }
-
-    // native x native within each cell
-    val n2 = natives.select(col("combo"), col("id").as("id_b"), col("weights").as("w_b"))
-    val innerPairs = natives.join(n2, "combo")
-      .filter(col("id") < col("id_b"))
-      .select(col("id"), col("weights"), col("id_b"), col("w_b"))
-      .as[(Long, Array[Double], Long, Array[Double])]
-      .mapPartitions { it =>
+    }.groupByKey(new org.apache.spark.HashPartitioner(numParts))
+      .mapPartitions { groups =>
         val casc = cascadeB.value
-        it.flatMap { case (a, wa, b, wb) =>
-          val emd = casc.emdIfCandidate(wa, wb, theta)
-          if (emd >= 0) Some((a, b, emd)) else None
+        groups.flatMap { case (_, members) =>
+          val (nat, gst) = members.toArray.partition(_.native)
+          val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
+          var a = 0
+          while (a < nat.length) {
+            val na = nat(a)
+            var b = a + 1
+            while (b < nat.length) {
+              // canonical orientation (lower id first) so the exact
+              // solver's floating-point path is identical no matter
+              // which side arrived first — otherwise threshold-boundary
+              // pairs flip between runs
+              val nb = nat(b)
+              val (lo, hi) = if (na.id < nb.id) (na, nb) else (nb, na)
+              val emd = casc.emdIfCandidate(lo.w, hi.w, theta)
+              if (emd >= 0) out += ((lo.id, hi.id, emd))
+              b += 1
+            }
+            var g = 0
+            while (g < gst.length) {
+              val gb = gst(g)
+              val (lo, hi) = if (na.id < gb.id) (na, gb) else (gb, na)
+              val emd = casc.emdIfCandidate(lo.w, hi.w, theta)
+              if (emd >= 0) out += ((lo.id, hi.id, emd))
+              g += 1
+            }
+            a += 1
+          }
+          out
         }
-      }
-
-    crossPairs.union(innerPairs).toDF("rid", "sid", "dist")
+      }.toDF("rid", "sid", "dist")
   }
 
   /** Top-k join: global upper bound from two sources, then threshold join

@@ -1,0 +1,140 @@
+package graft.core
+
+import org.apache.commons.math3.distribution.NormalDistribution
+import org.scalatest.funsuite.AnyFunSuite
+import scala.util.Random
+
+/** The error-envelope kernel shares Phi/phi evaluations and splits the
+  * CDF once per record; its envelopes must stay bit-identical to the
+  * per-area form it replaced, kept here as [[PerArea]]. */
+class NormalModelSpec extends AnyFunSuite {
+
+  /** The envelope code as it evaluated every area on its own: four Phi
+    * and four phi per split point, `cdf.map(_._1)` per area. */
+  private object PerArea {
+    private val Eps = 1e-8
+    private val stdNormal = new NormalDistribution(null, 0.0, 1.0)
+
+    def normalCdfArea(mu: Double, sigma: Double, a: Double, b: Double): Double = {
+      val ta = (a - mu) / sigma
+      val tb = (b - mu) / sigma
+      (tb * stdNormal.cumulativeProbability(tb) + stdNormal.density(tb)
+        - ta * stdNormal.cumulativeProbability(ta) - stdNormal.density(ta)) * sigma
+    }
+
+    def discreteCdfArea(cdf: Array[(Double, Double)], keyA0: Double, keyB0: Double): Double = {
+      var keyA = keyA0; var keyB = keyB0
+      if (keyA >= keyB) return 0.0
+      var area = 0.0
+      val keys = cdf.map(_._1)
+      def cumAt(i: Int) = cdf(i)._2
+      val first = keys.head; val last = keys.last
+      val containsA = keys.contains(keyA)
+      val containsB = keys.contains(keyB)
+      if (!containsA && keyA > first) {
+        val lo = keys.lastIndexWhere(_ < keyA)
+        val hi = keys.indexWhere(_ > keyA)
+        area += cumAt(lo) * (keys(hi) - keyA)
+        keyA = keys(hi)
+      }
+      if (!containsB && keyB < last) {
+        val lo = keys.lastIndexWhere(_ < keyB)
+        area += cumAt(lo) * (keyB - keys(lo))
+        keyB = keys(lo)
+      }
+      var i = 0
+      while (i < cdf.length - 1) {
+        val k = keys(i)
+        if (k >= keyA && k < keyB) area += cumAt(i) * (keys(i + 1) - k)
+        i += 1
+      }
+      area
+    }
+
+    def errorAt(mu: Double, sigma: Double, cdf: Array[(Double, Double)], pt: Double): Double = {
+      val first = cdf.head._1; val last = cdf.last._1
+      val before = discreteCdfArea(cdf, first, pt) - normalCdfArea(mu, sigma, first, pt)
+      val after = discreteCdfArea(cdf, pt, last) - normalCdfArea(mu, sigma, pt, last)
+      before - after
+    }
+
+    def minMaxError(mu: Double, sigma: Double, cdf: Array[(Double, Double)],
+                    numIntervals: Int): Array[Double] = {
+      val normal = new NormalDistribution(null, mu, sigma)
+      val first = cdf.head._1; val last = cdf.last._1
+      val len = (last - first) / numIntervals
+      val out = new Array[Double](2 * numIntervals)
+      var i = 0
+      while (i < numIntervals) {
+        val start = first + i * len
+        val end = first + (i + 1) * len
+        val pts = scala.collection.mutable.TreeSet[Double](start, end)
+        var j = 0
+        while (j < cdf.length) {
+          val (k, cum) = cdf(j)
+          if (start < k && k < end && j + 1 < cdf.length) {
+            pts += k
+            val p = math.min(math.max(cum, Eps), 1 - Eps)
+            val potential = normal.inverseCumulativeProbability(p)
+            val nextKey = cdf(j + 1)._1
+            if (potential > k && potential < end && potential < last && potential < nextKey)
+              pts += potential
+          }
+          j += 1
+        }
+        var mn = Double.MaxValue; var mx = -Double.MaxValue
+        pts.foreach { p =>
+          val e = errorAt(mu, sigma, cdf, p)
+          if (e < mn) mn = e
+          if (e > mx) mx = e
+        }
+        out(2 * i) = mn
+        out(2 * i + 1) = mx
+        i += 1
+      }
+      out
+    }
+
+    def fullError(mu: Double, sigma: Double, cdf: Array[(Double, Double)],
+                  start: Double, end: Double): Double =
+      discreteCdfArea(cdf, start, end) - normalCdfArea(mu, sigma, start, end)
+  }
+
+  private def bits(xs: Array[Double]): Seq[Long] =
+    xs.toSeq.map(java.lang.Double.doubleToRawLongBits)
+
+  /** Random, point-mass, two-point and uniform histograms over `numBins`. */
+  private def hists(numBins: Int, rnd: Random): Seq[(String, Array[Double])] =
+    (0 until 40).map(i => (s"random $i", Array.fill(numBins)(rnd.nextDouble()))) ++
+      (0 until numBins).map(b =>
+        (s"point mass at $b", Array.tabulate(numBins)(i => if (i == b) 3.0 else 0.0))) ++
+      Seq(("two points", Array.tabulate(numBins)(i => if (i == 0 || i == numBins - 1) 1.0 else 0.0)),
+        ("uniform", Array.fill(numBins)(1.0)),
+        ("sparse counts", Array.tabulate(numBins)(i => (i % 3).toDouble)))
+
+  for ((name, cfg) <- Seq(
+      "1-D" -> graft.SparkEntry.melodyCfg1d,
+      "3-D" -> graft.SparkEntry.melodyCfg3d)) {
+    test(s"$name envelopes and full errors are bit-identical to the per-area form") {
+      val hs = hists(cfg.numBins, new Random(61))
+      var compared = 0
+      for ((hname, h) <- hs; j <- cfg.projBins.indices;
+           numIntervals <- Seq(1, 5, 10)) {
+        val w = HistOps.normalize(h)
+        val (mu, sig) = HistOps.fitNormal(w, cfg.projBins(j))
+        val cdf = HistOps.discreteCdfNormalized(w, cfg.projBins(j))
+        val where = s"$hname, vector $j, $numIntervals intervals"
+        assert(bits(NormalModel.minMaxError(mu, sig, cdf, numIntervals)) ==
+          bits(PerArea.minMaxError(mu, sig, cdf, numIntervals)), where)
+        val (first, last) = (cdf.head._1, cdf.last._1)
+        assert(bits(Array(NormalModel.fullError(mu, sig, cdf, first, last))) ==
+          bits(Array(PerArea.fullError(mu, sig, cdf, first, last))), where)
+        val mid = first + (last - first) / 3
+        assert(bits(Array(NormalModel.errorAt(mu, sig, cdf, mid))) ==
+          bits(Array(PerArea.errorAt(mu, sig, cdf, mid))), where)
+        compared += 1
+      }
+      assert(compared == hs.size * cfg.numVectors * 3)
+    }
+  }
+}

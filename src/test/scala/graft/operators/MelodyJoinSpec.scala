@@ -34,6 +34,10 @@ class MelodyJoinSpec extends AnyFunSuite {
     rows
   }
 
+  /** `(rid, sid, raw dist bits)`, sorted: the bit-for-bit comparison key. */
+  private def bits(rows: Seq[(Long, Long, Double)]): Seq[(Long, Long, Long)] =
+    rows.map(r => (r._1, r._2, java.lang.Double.doubleToRawLongBits(r._3))).sorted
+
   private def randomHists(n: Int, numBins: Int, seed: Long) = {
     val rnd = new Random(seed)
     import spark.implicits._
@@ -200,8 +204,8 @@ class MelodyJoinSpec extends AnyFunSuite {
     // Records are a few shapes perturbed by single-unit moves between
     // adjacent bins (1/8 or 1/16 of EMD each), plus exact duplicates.
     // The witness is the all-pairs baseline through the same exact 1-D
-    // kernel; the 1-D melody engine misses 13 of its on-theta pairs
-    // (ROADMAP, "Fix first").
+    // kernel. The 1-D melody engine must match it too: its EMD_BR cell
+    // prune once dropped 13 on-theta pairs here for want of FP slack.
     import spark.implicits._
     val rnd = new Random(37)
     val shapes = Array(
@@ -220,8 +224,6 @@ class MelodyJoinSpec extends AnyFunSuite {
     }.toDF("id", "weights")
     val theta = 0.25
     val cfg = graft.SparkEntry.melodyCfg1d
-    def bits(rows: Seq[(Long, Long, Double)]) =
-      rows.map(r => (r._1, r._2, java.lang.Double.doubleToRawLongBits(r._3))).sorted
     val want = bits(distinctRows(BaselineJoin.thresholdJoin(spark, hists, theta, cfg)))
     val onTheta = want.count(_._3 == java.lang.Double.doubleToRawLongBits(theta))
     assert(onTheta >= 100, s"only $onTheta of ${want.size} pairs on theta - vacuous")
@@ -230,6 +232,81 @@ class MelodyJoinSpec extends AnyFunSuite {
         MrSimJoin.thresholdJoin(spark, hists, theta, cfg, numPivots = p, maxGroupRows = g)))
       assert(got == want, s"pivots=$p maxGroupRows=$g: missed=" +
         s"${want.diff(got).take(5)} extra=${got.diff(want).take(5)}")
+    }
+    for (side <- Seq(4, 8, 12)) {
+      val got = bits(distinctRows(
+        MelodyJoin.thresholdJoin(spark, hists, theta, cfg.copy(sideNum = side))))
+      assert(got == want, s"melody 1-D side $side: missed=" +
+        s"${want.diff(got).take(5)} extra=${got.diff(want).take(5)}")
+    }
+  }
+
+  test("melody 3-D at grid sides 4, 6 and 12 == baseline, bit for bit") {
+    val hists = randomHists(120, 8, seed = 59)
+    val theta = 0.3
+    val want = bits(distinctRows(BaselineJoin.thresholdJoin(spark, hists, theta, cfg3d)))
+    assert(want.size >= 50, s"only ${want.size} pairs - vacuous")
+    for (side <- Seq(4, 6, 12)) {
+      val got = bits(distinctRows(
+        MelodyJoin.thresholdJoin(spark, hists, theta, cfg3d.copy(sideNum = side))))
+      assert(got == want, s"side $side: missed=${want.diff(got).take(5)} " +
+        s"extra=${got.diff(want).take(5)}")
+    }
+  }
+
+  test("melody 3-D on a corpus crowded into one cell == baseline, bit for bit") {
+    // 60 identical histograms share one Hough point, hence one cell, so
+    // one group holds all their C(60, 2) zero-distance pairs; five
+    // perturbed copies stretch the grid domain and join as natives of
+    // nearby cells or as guests
+    import spark.implicits._
+    val rnd = new Random(67)
+    val base = Array(3.0, 1.0, 4.0, 1.0, 5.0, 9.0, 2.0, 6.0)
+    val hists = ((0 until 60).map(i => (i.toLong, base)) ++
+      (60 until 65).map(i => (i.toLong, base.map(_ + rnd.nextDouble()))))
+      .toDF("id", "weights")
+    val theta = 0.2
+    val prep = MelodyJoin.prepare(spark, hists, cfg3d)
+    val largest = prep.summaries.map(_.count).max
+    prep.unpersist()
+    assert(largest >= 60, s"largest cell holds $largest records, not the 60 copies")
+    val want = bits(distinctRows(BaselineJoin.thresholdJoin(spark, hists, theta, cfg3d)))
+    val got = bits(distinctRows(MelodyJoin.thresholdJoin(spark, hists, theta, cfg3d)))
+    assert(want.size >= 60 * 59 / 2, s"${want.size} pairs")
+    assert(got == want, s"missed=${want.diff(got).take(5)} extra=${got.diff(want).take(5)}")
+  }
+
+  test("melody 3-D threshold join runs at most four Spark jobs") {
+    // grids, duals, enrich + summarize, join. Suites share one
+    // SparkContext, so count only the jobs carrying this test's group id;
+    // the listener queue is FIFO, so once the marker job's start has
+    // arrived, every job before it has been counted.
+    val hists = randomHists(150, 8, seed = 71)
+    val sc = spark.sparkContext
+    val group = s"melody-job-count-${System.nanoTime()}"
+    val marker = s"$group-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
+          if (g == group) jobs.incrementAndGet()
+          else if (g == marker) markerSeen.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "melody 3-D threshold join")
+      val result = MelodyJoin.thresholdJoin(spark, hists, 0.3, cfg3d)
+      sc.setJobGroup(marker, "listener marker")
+      val pairs = result.rdd.count()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the marker job")
+      assert(pairs > 0, "vacuous job count")
+      assert(jobs.get >= 1 && jobs.get <= 4, s"${jobs.get} jobs")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
     }
   }
 
