@@ -25,7 +25,12 @@
 #
 # Usage: scripts/scale_gate.sh [gateDir] [query ...]
 #   gateDir defaults to /tmp/sf1 (regenerated only if missing).
-#   With no query args, runs the default heavy-row list (top bench rows).
+#   With no query args, runs the default heavy-row list (top bench rows)
+#   and rewrites SCALE_GATE.json; with query args, replaces only those
+#   rows in it. Every row carries the calibration factors and core count
+#   of the run that measured it. The raw per-scale TIMING lines go to a
+#   fresh `mktemp -d` directory (under $TMPDIR), printed at the start, so
+#   two checkouts can run the gate side by side.
 #
 # Reading the table: a wall ratio far above the OUTPUT ratio is the
 # quadratic signal (r15 caught q_treeexact3d_pairs at 194x this way).
@@ -38,7 +43,8 @@ BASE=/root/testdata/sf0.1
 GATE="${1:-/tmp/sf1}"
 shift || true
 QUERIES=("$@")
-if [ ${#QUERIES[@]} -eq 0 ]; then
+NAMED=${#QUERIES[@]}
+if [ "$NAMED" -eq 0 ]; then
   QUERIES=(q_emd3d_pairs q_salted_join q_stream_ann q_dedup_clusters
     q_semdedup q_dsir_select q_rubner_pairs q_stream_rangejoin
     q_mrsim1d_pairs q_ngram_jaccard q_treeexact3d_pairs q_mrsim1d_topk
@@ -119,6 +125,9 @@ print(f"generated in {time.time()-t0:.1f}s")
 PYEOF
 fi
 
+OUT_DIR="$(mktemp -d -t scale_gate.XXXXXX)"
+echo "== timings in $OUT_DIR =="
+
 run_scale() {  # $1 = sfDir, $2 = outFile
   # Lead with the fixed-work CPU calibration (graft.Bench --calib): the
   # two scales run in separate sbt processes minutes apart, and the
@@ -127,30 +136,34 @@ run_scale() {  # $1 = sfDir, $2 = outFile
   # across-process vs 9.8x paired). The ratio table below divides each
   # scale's walls by its ambient factor.
   # sbt prefixes stdout with "[info] " — strip it; `sed -n` never fails
-  # on zero matches (a bare grep under pipefail would abort the script)
+  # on zero matches (a bare grep under pipefail would abort the script);
+  # `sed -u` writes each line as it arrives, so a killed run keeps the
+  # rows it finished
   env SPARK_GRAFT_SF_DIR="$1" \
     sbt -batch "runMain graft.Bench --calib" 2>&1 \
-    | sed -n 's/^.*\(calib_sec=[0-9.]* calib_ref=[0-9.]* loadavg=[0-9.]*\).*/CALIB \1/p' | tee "$2"
+    | sed -u -n 's/^.*\(calib_sec=[0-9.]* calib_ref=[0-9.]* loadavg=[0-9.]*\).*/CALIB \1/p' | tee "$2"
   # Diag each clears session caches before every row, so a 21-row list
   # at 10x cannot pile up persisted results until a row dies of memory
   # pressure (and each row's cost stays honest in isolation).
   # Keep ERR lines visible: a dead row must not masquerade as a fast one.
   env SPARK_GRAFT_SF_DIR="$1" \
     sbt -batch "runMain graft.Diag each ${QUERIES[*]}" 2>&1 \
-    | sed -n -e 's/^.*TIMING /TIMING /p' -e 's/^.*ERR /ERR /p' | tee -a "$2"
+    | sed -u -n -e 's/^.*TIMING /TIMING /p' -e 's/^.*ERR /ERR /p' | tee -a "$2"
 }
 
 echo "== Diag each at $BASE =="
-run_scale "$BASE" /tmp/scale_gate_base.txt
+run_scale "$BASE" "$OUT_DIR/base.txt"
 echo "== Diag each at $GATE =="
-run_scale "$GATE" /tmp/scale_gate_10x.txt
+run_scale "$GATE" "$OUT_DIR/10x.txt"
 
 # Machine-readable artifact (VERDICT r16 item 8): one JSON line of
 # {row: {wall_ratio, output_ratio, sec_base, sec_10x, rows_base,
-# rows_10x}} — written to $SPARK_GRAFT_SCALE_OUT (default
-# SCALE_GATE.json in the repo root) so the scale story is a committed,
-# driver-consumable artifact instead of builder-attested prose.
-python3 - <<'PYEOF'
+# rows_10x, calib_factor_base, calib_factor_10x, cores}} — written to
+# $SPARK_GRAFT_SCALE_OUT (default SCALE_GATE.json in the repo root) so
+# the scale story is a committed, driver-consumable artifact instead of
+# builder-attested prose.
+OUT_DIR="$OUT_DIR" NAMED="$NAMED" \
+  CORES="${SPARK_GRAFT_CPUS:-$(nproc)}" python3 - <<'PYEOF'
 import re, json, os
 def load(p):
     # calib_ref is parsed from Bench's own --calib line (the one source
@@ -173,7 +186,10 @@ def load(p):
               f"are RAW, ratios may carry ambient contention skew")
         return out, 1.0
     return out, min(1.0, ref / calib)
-(a, fa), (b, fb) = load('/tmp/scale_gate_base.txt'), load('/tmp/scale_gate_10x.txt')
+out_dir = os.environ['OUT_DIR']
+(a, fa), (b, fb) = (load(os.path.join(out_dir, 'base.txt')),
+                    load(os.path.join(out_dir, '10x.txt')))
+cores = int(os.environ['CORES'])
 print(f"\ncalib factors: sf0.1 {fa:.3f}, 10x {fb:.3f} "
       f"(walls below are calibrated; raw ratio would be off by {fb/fa:.2f}x)")
 print(f"\n{'query':24s} {'sf0.1':>8s} {'10x':>8s} {'wall':>6s} {'rows0.1':>10s} {'rows10x':>11s} {'outx':>6s}")
@@ -194,17 +210,27 @@ for q in sorted(a):
     rows[q] = {"wall_ratio": round(wall, 2),
                "output_ratio": round(outx, 2) if outx == outx else None,
                "sec_base": round(t0, 2), "sec_10x": round(t1, 2),
-               "rows_base": r0, "rows_10x": r1}
+               "rows_base": r0, "rows_10x": r1,
+               "calib_factor_base": round(fa, 3),
+               "calib_factor_10x": round(fb, 3), "cores": cores}
     worst.append((wall, q))
 worst.sort(reverse=True)
 print("\nwall-ratio leaders (quadratic suspects if far above output growth):")
 for w, q in worst[:5]:
     print(f"  {q:24s} {w:5.1f}x")
 out = os.environ.get("SPARK_GRAFT_SCALE_OUT", "SCALE_GATE.json")
-line = json.dumps({"metric": "scale_gate_10x",
-                   "calib_factor_base": round(fa, 3),
-                   "calib_factor_10x": round(fb, 3),
-                   "queries": rows}, separators=(",", ":"))
+if int(os.environ['NAMED']) > 0 and os.path.exists(out):
+    # named rows only: keep every other row (and the file-level factors,
+    # which belong to the rows without their own) as they are
+    gate = json.load(open(out))
+    gate["queries"].update(rows)
+    gate["queries"] = dict(sorted(gate["queries"].items()))
+else:
+    gate = {"metric": "scale_gate_10x",
+            "calib_factor_base": round(fa, 3),
+            "calib_factor_10x": round(fb, 3),
+            "queries": rows}
+line = json.dumps(gate, separators=(",", ":"))
 with open(out, "w") as f:
     f.write(line + "\n")
 print(f"\nwrote {out}")

@@ -67,7 +67,7 @@ object Diag {
     println("side " + cfg.sideNum)
     val grids = time("grids")(MelodyJoin.buildGrids(spark, hists, cfg))
     val duals = time("duals")(MelodyJoin.buildDuals(spark, hists, cfg))
-    val tree = graft.core.TreeEmd.build(cfg.bins, cfg.dimension)
+    val tree = MelodyJoin.treeFor(cfg)
     val enriched = time("enrich") {
       val e = MelodyJoin.enrich(spark, hists, cfg, grids, duals, tree)
         .persist(StorageLevel.MEMORY_AND_DISK)

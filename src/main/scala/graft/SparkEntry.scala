@@ -2716,11 +2716,12 @@ object SparkEntry {
     * computes each shape's distance per candidate row from a per-id
     * LIST, preserving the FP shape exactly:
     *
-    *  - prefixShape=true (q_emd1d/q_melody1d): dist = sum over bins<7 of
+    *  - prefixShape=true (q_emd1d): dist = sum over bins<7 of
     *    |cw_a - cw_b| — the scalar-cums shape, same values as the old
     *    `sum(abs(a.cw - b.cw))` aggregate;
-    *  - prefixShape=false (mrsim's kernel): dist = sum over all 8 bins
-    *    of |running sum of (w_a - w_b)| — the cum-of-differences shape;
+    *  - prefixShape=false (the melody and mrsim kernel): dist = sum over
+    *    all 8 bins of |running sum of (w_a - w_b)| — the
+    *    cum-of-differences shape;
     *    the inner list_sum re-adds d_1..d_b left-to-right, the exact
     *    addition sequence of the kernel's running fold, so the doubles
     *    stay bit-identical (the two CTE forms are FP-DISTINCT and must
@@ -4012,10 +4013,10 @@ object SparkEntry {
 
     "q_emd1d_topk" -> emd1dOracle(prefixShape = true, Some(TopK), Theta),
 
-    // prefix-sum-difference form: the melody 1-D columnar path carries
-    // per-side running sums (the q_emd1d scalar-cums shape), which is
-    // FP-distinct from the cum-of-differences form mrsim's kernel uses
-    "q_melody1d_pairs" -> emd1dOracle(prefixShape = true, None, Theta),
+    // cum-of-differences form: the melody 1-D join runs the same
+    // closed-form kernel as mrsim (Config.proj1dEmd), not the
+    // prefix-sum-difference shape q_emd1d_pairs uses
+    "q_melody1d_pairs" -> emd1dOracle(prefixShape = false, None, Theta),
 
     "q_mrsim1d_pairs" -> emd1dOracle(prefixShape = false, None, Theta),
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.SessionMemo
 import graft.core.Caching._
-import org.apache.spark.sql.{DataFrame, SparkSession, Row, Column}
+import org.apache.spark.sql.{DataFrame, SparkSession, Row}
 import org.apache.spark.sql.functions._
 import graft.core._
 
@@ -10,8 +10,8 @@ import graft.core._
   * reference's flagship 4-phase "melody" MapReduce engine
   * (mr/normal/QuantileNormalEmd.java:126-247).
   *
-  * A multi-dim threshold join runs four Spark jobs in place of the 4
-  * chained MR jobs:
+  * A threshold join runs four Spark jobs in place of the 4 chained MR
+  * jobs, whatever the config's dimension:
   *   - grids: one RDD job fits the per-record normals' Hough points; the
   *     driver derives the domains and quantile grids from them;
   *   - duals: one `takeOrdered` job draws the lowest-id sample;
@@ -25,8 +25,8 @@ import graft.core._
   *     per-cell nested loop (NEProcessReducer.joinRecords:204-264),
   *     native x native and native x guest, through the [[Cascade]].
   *   - Phase 4 (top-k merge) is orderBy(dist).limit(k).
-  * The 1-D single-vector path keeps a Catalyst equijoin on the cell key,
-  * whose closed-form distance stays inside whole-stage codegen.
+  * A 1-D single-vector config runs the same Phase 3; its [[Cascade]]
+  * reduces to the closed-form 1-D EMD.
   *
   * Scale design: the only data-sized shuffle is the join's group-by-cell.
   * Cell count is bounded by grid^(2*numVectors), independent of data
@@ -725,21 +725,11 @@ object MelodyJoin {
   }
 
   /** Candidate-cell enumeration for one record against all cell summaries
-    * (reference: Grid.getGuestWithDual:352-457). Returns combos > own combo
-    * that survive dual-range, EMD_BR and Rubner-box pruning. This arity
-    * rebuilds the envelopes PER CALL — per-record loops must use the
-    * precomputed overload below. */
-  def guestCombosPublic(rec: Row, cfg: Config, grids: Array[SkewedGrid],
-      duals: Array[DualBound], summaries: Array[CellSummary], theta: Double,
-      treeGapLimit: Double = -1.0): Array[Long] =
-    guestCombos(rec, cfg, grids, duals, summaries,
-      vectorCellEnvelopes(summaries, cfg), theta, treeGapLimit, null)
-
-  /** [[guestCombosPublic]] with the per-vector-cell envelopes and summary
-    * index precomputed by the caller — the shape the join path actually
-    * runs (both are built once per prepare, not once per record).
-    * Diagnostics that loop over records (Prof) must use this or they
-    * time envelope construction, not enumeration. */
+    * (reference: Grid.getGuestWithDual:352-457), with the per-vector-cell
+    * envelopes ([[cellEnvelopesPublic]]) and summary index built once by
+    * the caller, as the join path does. Returns combos > own combo that
+    * survive dual-range, EMD_BR and Rubner-box pruning. A null `idx`
+    * runs the full object scan (same answer). */
   def guestCombosPublic(rec: Row, cfg: Config, grids: Array[SkewedGrid],
       duals: Array[DualBound], summaries: Array[CellSummary],
       env: Array[Array[Array[Double]]], theta: Double,
@@ -762,11 +752,11 @@ object MelodyJoin {
         * |f_rec(i) - f_m(i)| >= gap(f_rec(i), [treeLo(i), treeHi(i)]), so
         * sum(gaps) <= EMD_T(rec, m) <= distortion * EMD(rec, m) — a cell
         * whose gap sum exceeds distortion * theta cannot hold a partner. */
-      treeGapLimit: Double = -1.0,
+      treeGapLimit: Double,
       /** flat pre-filter index ([[SummaryIndex]] scaladoc); null = full
         * object scan (spec/diagnostic paths), answer identical either
         * way. */
-      idx: SummaryIndex = null): Array[Long] = {
+      idx: SummaryIndex): Array[Long] = {
     val ownCombo = rec.getLong(2)
     val mb = rec.getSeq[Double](3).toArray
     val errors = rec.getSeq[Double](4).toArray
@@ -1003,6 +993,12 @@ object MelodyJoin {
     cfg.reducedDim, cfg.seed, cfg.groundDist, cfg.exactQuantiles,
     cfg.lipschitzPotentials.map(_.toSeq).toSeq)
 
+  /** The tree-EMD embedding behind the cell-level gap prune, or None for
+    * 1-D single-vector configs, whose cascade is closed-form anyway. */
+  def treeFor(cfg: Config): Option[TreeEmd] =
+    if (cfg.dimension == 1 && cfg.numVectors == 1) None
+    else TreeEmd.build(cfg.bins, cfg.dimension)
+
   def prepareCached(spark: SparkSession, hists: DataFrame, cfg: Config): Prepared =
     prepMemo(spark, (hists, cfgKey(cfg)))(prepare(spark, hists, cfg))
 
@@ -1015,11 +1011,7 @@ object MelodyJoin {
       "L2 ground distance; use BaselineJoin for L1/L3")
     val grids = buildGrids(spark, hists, cfg)
     val duals = buildDuals(spark, hists, cfg)
-    // tree-EMD embedding features for the cell-level gap prune; skipped
-    // for 1-D single-vector configs whose cascade is closed-form anyway
-    val tree =
-      if (cfg.dimension == 1 && cfg.numVectors == 1) None
-      else TreeEmd.build(cfg.bins, cfg.dimension)
+    val tree = treeFor(cfg)
     val enriched = enrich(spark, hists, cfg, grids, duals, tree)
       .persistOnce()
     val summaries = summarize(enriched, cfg, duals.length,
@@ -1035,7 +1027,7 @@ object MelodyJoin {
       .persistOnce()
     // materialize the O(pairs) result so the data-sized enrichment cache
     // can be freed immediately rather than leak across a session (one
-    // job: the multi-dim path's shuffle is an RDD stage of it)
+    // job: the join's shuffle is an RDD stage of it)
     result.rdd.count()
     prep.unpersist()
     result
@@ -1055,66 +1047,14 @@ object MelodyJoin {
     val (envB, idxB) = prep.guestStructures(spark, cfg)
     val treeGapLimit = tree.map(_.distortion * theta).getOrElse(-1.0)
 
-    val l2 = cfg.groundDist == GroundDist.L2
-
-    // 1-D single-vector L2 configs: the whole cascade reduces to the
-    // closed-form 1-D EMD, expressible as scalar prefix-sum columns
-    // (difference of per-side running sums along the projected order —
-    // the q_emd1d scalar-cums pattern, and the EmdCtePrefix oracle
-    // shape). The join then stays entirely inside whole-stage codegen:
-    // no row deserialization, no per-pair kernel call — measured 1.4x
-    // on the warm join phase at sf0.1 over the mapPartitions cascade
-    // (3.9s -> 2.7s; the remaining cost is generating the ~49M grid-
-    // admitted candidate rows, which only a tighter grid could cut).
-    if (cfg.dimension == 1 && cfg.numVectors == 1 && l2) {
-      // guest replication: explode candidate combos per record
-      val guests = enriched.mapPartitions { it =>
-        val c = cfgB.value
-        it.flatMap { r =>
-          guestCombos(r, c, gridsB.value, dualsB.value, sumB.value, envB.value,
-            theta, treeGapLimit, idxB.value).map { combo =>
-            (r.getLong(0), r.getSeq[Double](1).toArray, combo)
-          }
-        }
-      }.toDF("gid", "gweights", "combo")
-      val ord = cfg.projOrder(0)
-      val gaps = cfg.projGaps(0)
-      def addCums(df: DataFrame, w: String, pre: String): DataFrame =
-        (0 until cfg.numBins - 1).foldLeft(df)((d, i) =>
-          d.withColumn(s"$pre$i",
-            if (i == 0) col(w)(ord(0)) else col(s"$pre${i - 1}") + col(w)(ord(i))))
-      val dist = (0 until cfg.numBins - 1)
-        .map(i => abs(col(s"pa$i") - col(s"pb$i")) * lit(gaps(i)))
-        .reduce(_ + _)
-      val natC = addCums(
-        enriched.select(col("id"), col("weights"), col("combo")), "weights", "pa")
-        .drop("weights")
-      val cross = natC
-        .join(addCums(guests, "gweights", "pb").drop("gweights"), "combo")
-        .withColumn("dist", dist)
-        .filter(col("dist") <= theta)
-        .select(least(col("id"), col("gid")).as("rid"),
-          greatest(col("id"), col("gid")).as("sid"), col("dist"))
-      val n2c = natC.select(
-        Seq(col("combo"), col("id").as("id_b")) ++
-          (0 until cfg.numBins - 1).map(i => col(s"pa$i").as(s"pb$i")): _*)
-      val inner = natC.join(n2c, "combo")
-        .filter(col("id") < col("id_b"))
-        .withColumn("dist", dist)
-        .filter(col("dist") <= theta)
-        .select(col("id").as("rid"), col("id_b").as("sid"), col("dist"))
-      return cross.union(inner)
-    }
-
-    // Multi-dim configs: Phase 3 as one shuffle. Every record goes to
-    // its own combo as a native and to each surviving guest combo as a
-    // guest; each combo's group then runs native x native (lower id
-    // first) and native x guest through the Cascade. A guest goes only
-    // to combos above its own, so each qualifying pair meets in exactly
-    // one group, once. (A columnar Rubner centroid gate was tried on
-    // this path and removed: after the 3 cell-level prunes its
-    // selectivity was too low to pay for the extra columns, ~1s on
-    // q_emd3d_pairs at sf0.1.)
+    // Phase 3 as one shuffle. Every record goes to its own combo as a
+    // native and to each surviving guest combo as a guest; each combo's
+    // group then runs native x native (lower id first) and native x
+    // guest through the Cascade. A guest goes only to combos above its
+    // own, so each qualifying pair meets in exactly one group, once. (A
+    // columnar Rubner centroid gate was tried on this path and removed:
+    // after the 3 cell-level prunes its selectivity was too low to pay
+    // for the extra columns, ~1s on q_emd3d_pairs at sf0.1.)
     val cascadeB = spark.sparkContext.broadcast(new Cascade(cfg, duals))
     val numParts = spark.sessionState.conf.numShufflePartitions
     enriched.rdd.mapPartitions { it =>

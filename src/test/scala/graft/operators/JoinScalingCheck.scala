@@ -25,7 +25,7 @@ object ScalingStats {
     val n = h.count()
     val grids = MelodyJoin.buildGrids(spark, h, cfg)
     val duals = MelodyJoin.buildDuals(spark, h, cfg)
-    val tree = graft.core.TreeEmd.build(cfg.bins, cfg.dimension)
+    val tree = MelodyJoin.treeFor(cfg)
     val enriched = MelodyJoin.enrich(spark, h, cfg, grids, duals, tree)
       .persist()
     enriched.count()

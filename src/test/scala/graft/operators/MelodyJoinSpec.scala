@@ -123,13 +123,27 @@ class MelodyJoinSpec extends AnyFunSuite {
   }
 
   test("melody top-k join == baseline top-k") {
-    val hists = randomHists(80, 8, seed = 11)
-    val k = 15
-    val base = BaselineJoin.topKJoin(spark, hists, k, cfg3d)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val melody = MelodyJoin.topKJoin(spark, hists, k, cfg3d)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(base == melody, s"top-k mismatch: base=$base melody=$melody")
+    // the second input is a near-tie at the k-th place: 1-D EMD (0, 1) =
+    // 0.1000004 and (2, 3) = 0.1000001 round to the same 6 decimals, so
+    // the shared (round(dist, 6), rid, sid) order takes (0, 1) at k = 1,
+    // though its raw distance is the larger
+    import spark.implicits._
+    val tie = Seq(
+      0L -> Array(5.0, 4.0, 1.0, 0.0, 0.0, 0.0, 0.0, 0.0),
+      1L -> Array(5.0, 2.999996, 2.000004, 0.0, 0.0, 0.0, 0.0, 0.0),
+      2L -> Array(0.0, 0.0, 0.0, 0.0, 0.0, 1.0, 4.0, 5.0),
+      3L -> Array(0.0, 0.0, 0.0, 0.0, 0.0, 2.000001, 2.999999, 5.0))
+      .toDF("id", "weights")
+    val inputs = Seq(
+      (randomHists(80, 8, seed = 11), cfg3d, 15),
+      (tie, graft.SparkEntry.melodyCfg1d.copy(sideNum = 4), 1))
+    for ((hists, cfg, k) <- inputs) {
+      val base = BaselineJoin.topKJoin(spark, hists, k, cfg)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val melody = MelodyJoin.topKJoin(spark, hists, k, cfg)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(base == melody, s"top-k mismatch: base=$base melody=$melody")
+    }
   }
 
   test("L1 and L3 ground distances: baseline join matches brute-force exact") {
@@ -276,37 +290,41 @@ class MelodyJoinSpec extends AnyFunSuite {
     assert(got == want, s"missed=${want.diff(got).take(5)} extra=${got.diff(want).take(5)}")
   }
 
-  test("melody 3-D threshold join runs at most four Spark jobs") {
-    // grids, duals, enrich + summarize, join. Suites share one
-    // SparkContext, so count only the jobs carrying this test's group id;
-    // the listener queue is FIFO, so once the marker job's start has
-    // arrived, every job before it has been counted.
+  test("melody threshold join runs at most four Spark jobs") {
+    // grids, duals, enrich + summarize, join, for the 3-D and the 1-D
+    // config alike. Suites share one SparkContext, so count only the
+    // jobs carrying this run's group id; the listener queue is FIFO, so
+    // once the marker job's start has arrived, every job before it has
+    // been counted.
     val hists = randomHists(150, 8, seed = 71)
     val sc = spark.sparkContext
-    val group = s"melody-job-count-${System.nanoTime()}"
-    val marker = s"$group-marker"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
-          if (g == group) jobs.incrementAndGet()
-          else if (g == marker) markerSeen.countDown()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "melody 3-D threshold join")
-      val result = MelodyJoin.thresholdJoin(spark, hists, 0.3, cfg3d)
-      sc.setJobGroup(marker, "listener marker")
-      val pairs = result.rdd.count()
-      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "listener never saw the marker job")
-      assert(pairs > 0, "vacuous job count")
-      assert(jobs.get >= 1 && jobs.get <= 4, s"${jobs.get} jobs")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
+    for ((label, cfg, theta) <- Seq(("3-D", cfg3d, 0.3),
+        ("1-D", graft.SparkEntry.melodyCfg1d, 0.3))) {
+      val group = s"melody-job-count-${System.nanoTime()}"
+      val marker = s"$group-marker"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val markerSeen = new java.util.concurrent.CountDownLatch(1)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
+            if (g == group) jobs.incrementAndGet()
+            else if (g == marker) markerSeen.countDown()
+          }
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, s"melody $label threshold join")
+        val result = MelodyJoin.thresholdJoin(spark, hists, theta, cfg)
+        sc.setJobGroup(marker, "listener marker")
+        val pairs = result.rdd.count()
+        assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+          s"$label: listener never saw the marker job")
+        assert(pairs > 0, s"$label: vacuous job count")
+        assert(jobs.get >= 1 && jobs.get <= 4, s"$label: ${jobs.get} jobs")
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
     }
   }
 
