@@ -122,6 +122,28 @@ class MelodyJoinSpec extends AnyFunSuite {
       .PrefilterIdx.map(graft.core.CubeKR.vertexPotential))
   }
 
+  test("projMean sweep key bounds proj1dEmd; proj1dEmdUpTo keeps its bits") {
+    // the Phase-3 group sweep skips pairs whose projMean keys differ by
+    // more than theta, and the cascade stops proj1dEmd at theta: both are
+    // sound only if |dKey| <= proj1dEmd and the stopped fold decides the
+    // same pairs, with the same value for those it keeps
+    val rnd = new Random(11)
+    for (cfg <- Seq(graft.SparkEntry.melodyCfg1d, cfg3d)) {
+      val ws = Array.fill(60)(graft.core.HistOps.normalize(
+        Array.fill(cfg.numBins)(if (rnd.nextInt(3) == 0) 0.0 else rnd.nextDouble())))
+      for (a <- ws; b <- ws; j <- 0 until cfg.numVectors) {
+        val d = cfg.proj1dEmd(j, a, b)
+        assert(math.abs(cfg.projMean(j, a) - cfg.projMean(j, b)) <= d + 1e-12)
+        for (limit <- Seq(0.0, d / 2, d, d * 2)) {
+          val up = cfg.proj1dEmdUpTo(j, a, b, limit)
+          if (d <= limit) assert(java.lang.Double.doubleToRawLongBits(up) ==
+            java.lang.Double.doubleToRawLongBits(d))
+          else assert(up > limit)
+        }
+      }
+    }
+  }
+
   test("melody top-k join == baseline top-k") {
     // the second input is a near-tie at the k-th place: 1-D EMD (0, 1) =
     // 0.1000004 and (2, 3) = 0.1000001 round to the same 6 decimals, so
