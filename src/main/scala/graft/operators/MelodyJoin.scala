@@ -201,11 +201,54 @@ object MelodyJoin {
 
   private val ErrLen: Config => Int = cfg => 2 * cfg.numIntervals + 1
 
-  /** One record in a combo's Phase 3 group: a native of the combo, or a
-    * guest copy replicated there by [[guestCombos]]. `key` is its
-    * [[Config.projMean]] on the first vector, the group's sweep order. */
-  private final case class CellMember(id: Long, w: Array[Double], key: Double,
-                                      native: Boolean)
+  /** One record in a Phase-3 group, the unit of the shared sweep
+    * ([[sweepSelf]], [[sweepCross]]). In a melody combo's group it is a
+    * native of the combo (`native`) or a guest copy replicated there by
+    * [[guestCombos]], and `key` is its [[Config.projMean]] on the first
+    * vector. In a MrSim pivot group it is the record's base copy
+    * (`native`) or a window copy, and `key` is its first Rubner
+    * coordinate. Under L2 either key's difference bounds EMD from below,
+    * so a pair whose keys differ by more than theta is never a candidate. */
+  private[operators] final case class CellMember(id: Long, w: Array[Double],
+                                                 key: Double, native: Boolean)
+
+  /** `members` sorted by key, each weight array copied in that order, so
+    * the sweeps below walk memory in order (sorting alone scatters it). */
+  private[operators] def sweepOrder(members: Iterable[CellMember]): Array[CellMember] =
+    members.toArray.sortBy(_.key)(Ordering.Double.TotalOrdering)
+      .map(m => m.copy(w = m.w.clone()))
+
+  /** Calls `test` on every pair `xs(a), xs(b)`, a < b, whose keys differ
+    * by at most `lim`; `xs` is in [[sweepOrder]]. `lim = +Inf` visits
+    * every pair. */
+  private[operators] def sweepSelf(xs: Array[CellMember], lim: Double)(
+      test: (CellMember, CellMember) => Unit): Unit = {
+    var a = 0
+    while (a < xs.length) {
+      val x = xs(a)
+      var b = a + 1
+      while (b < xs.length && xs(b).key - x.key <= lim) { test(x, xs(b)); b += 1 }
+      a += 1
+    }
+  }
+
+  /** Calls `test` on every pair `(x in xs, y in ys)` whose keys differ by
+    * at most `lim`, in one two-pointer pass; both are in [[sweepOrder]].
+    * `lim = +Inf` visits every pair. */
+  private[operators] def sweepCross(xs: Array[CellMember], ys: Array[CellMember],
+                                    lim: Double)(
+      test: (CellMember, CellMember) => Unit): Unit = {
+    var y0 = 0
+    var a = 0
+    while (a < xs.length) {
+      val x = xs(a)
+      // x.key never decreases, so ys below the window stay below
+      while (y0 < ys.length && x.key - ys(y0).key > lim) y0 += 1
+      var b = y0
+      while (b < ys.length && ys(b).key - x.key <= lim) { test(x, ys(b)); b += 1 }
+      a += 1
+    }
+  }
 
   /** One output pair of the threshold join, lower id first. */
   final case class JoinPair(rid: Long, sid: Long, dist: Double)
@@ -1052,8 +1095,9 @@ object MelodyJoin {
       .persistOnce()
     // materialize the O(pairs) result so the data-sized enrichment cache
     // can be freed immediately rather than leak across a session (one
-    // job: the join's shuffle is an RDD stage of it)
-    result.rdd.count()
+    // job: the join's shuffle is an RDD stage of it). The count stays on
+    // InternalRows: `.rdd` would build a Row per cached pair only to count it
+    result.queryExecution.toRdd.count()
     prep.unpersist()
     result
   }
@@ -1103,9 +1147,7 @@ object MelodyJoin {
       .mapPartitions { groups =>
         val casc = cascadeB.value
         groups.flatMap { case (_, members) =>
-          // copied in sweep order, so the scans below walk memory in order
-          val (nat, gst) = members.toArray.sortBy(_.key)(Ordering.Double.TotalOrdering)
-            .map(m => m.copy(w = m.w.clone())).partition(_.native)
+          val (nat, gst) = sweepOrder(members).partition(_.native)
           val out = scala.collection.mutable.ArrayBuffer[JoinPair]()
           // canonical orientation (lower id first) so the exact solver's
           // floating-point path is identical no matter which side arrived
@@ -1116,22 +1158,8 @@ object MelodyJoin {
               else casc.emdIfCandidate(y.w, x.w, theta)
             if (emd >= 0) out += JoinPair(math.min(x.id, y.id), math.max(x.id, y.id), emd)
           }
-          var g0 = 0
-          var a = 0
-          while (a < nat.length) {
-            val na = nat(a)
-            var b = a + 1
-            while (b < nat.length && nat(b).key - na.key <= lim) {
-              test(na, nat(b)); b += 1
-            }
-            // na.key never decreases, so guests below the window stay below
-            while (g0 < gst.length && na.key - gst(g0).key > lim) g0 += 1
-            var g = g0
-            while (g < gst.length && gst(g).key - na.key <= lim) {
-              test(na, gst(g)); g += 1
-            }
-            a += 1
-          }
+          sweepSelf(nat, lim)(test)
+          sweepCross(nat, gst, lim)(test)
           out
         }
       }.toDF()

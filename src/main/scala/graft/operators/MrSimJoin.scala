@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.core.Caching._
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import graft.core._
@@ -14,7 +16,9 @@ import graft.core._
   * the reference does — CloudJoinBaseMapper.java:81-196) and is replicated
   * into any other pivot's partition whose hyperplane margin
   * (d(r, q) - d(r, p)) / 2 <= theta can still hide a qualifying pair.
-  * Each partition joins its records with the shared filter cascade.
+  * Each partition joins its records with the shared filter cascade, in
+  * melody's Phase-3 sweep ([[MelodyJoin.sweepSelf]],
+  * [[MelodyJoin.sweepCross]]).
   *
   * Each qualifying pair is emitted exactly once, by its OWNER: the base
   * partition of its lower-id endpoint (the reference likewise routes a
@@ -43,11 +47,14 @@ import graft.core._
   *     over m*(m+1)/2 tasks instead of one. One O(pivots) size pass, no
   *     round loop.
   *
-  * The driver passes (record count, pivot pick, per-pivot sizes) are one
-  * RDD action, i.e. one Spark job, each; materializing the result adds
-  * three: the kernel's shuffle stage, the cache build and the count.
+  * The driver passes (record count, pivot pick, per-pivot sizes, and the
+  * dual sample for configs that are not closed-form 1-D) are one RDD
+  * action, i.e. one Spark job, each; materializing the result adds one
+  * more, the count, whose stages are the group shuffle and the cache
+  * build (1-D: 4 jobs, 3-D: 5, with an auto pivot count).
   */
 object MrSimJoin {
+  import MelodyJoin.{CellMember, JoinPair, sweepCross, sweepOrder, sweepSelf}
 
   /** Density-aware pivot count (VERDICT r15 item 2). The engine's total
     * pair work is ~ p * occupancy^2 with occupancy = n * win(p) / p,
@@ -130,6 +137,21 @@ object MrSimJoin {
       .map { case (_, id, w) => (id, HistOps.normalize(w)) }
   }
 
+  /** The group key of block pair `(lo, hi)`, `lo <= hi`, of pivot
+    * `pivot`: `lo << 48 | hi << 32 | pivot`. An unsplit pivot's key is
+    * the pivot itself. `HashPartitioner` hashes a `Long` as its low word
+    * XOR its high word, so the pivot — the field that differs between
+    * unsplit groups — sits in the low word, and `hi` lands on the pivot's
+    * low bits in the hash so one split pivot's block pairs spread too.
+    * With the pivot in the high bits every unsplit group hashed to
+    * partition 0 and one task ran the whole join. */
+  private[operators] def groupKey(pivot: Int, lo: Int, hi: Int): Long =
+    (lo.toLong << 48) | (hi.toLong << 32) | pivot.toLong
+
+  /** Whether a [[groupKey]] names a same-block group (`lo == hi`). */
+  private def sameBlock(key: Long): Boolean =
+    (key >>> 48) == ((key >>> 32) & 0xffffL)
+
   def thresholdJoin(spark: SparkSession, hists: DataFrame, theta: Double,
                     cfg: MelodyJoin.Config, numPivots: Int = 0,
                     maxGroupRows: Int = 8192): DataFrame =
@@ -184,8 +206,7 @@ object MrSimJoin {
     // the owner's copy (class scaladoc) robust to FP error; it can only
     // add copies, and the cascade still decides every pair exactly.
     val slackTheta = theta + 1e-9
-    val routed = src
-      .as[(Long, Array[Double])]
+    val routed = src.as[(Long, Array[Double])].rdd
       .mapPartitions { it =>
         val ps = pivotsB.value
         val c = cfgB.value
@@ -196,13 +217,15 @@ object MrSimJoin {
         it.flatMap { case (id, w0) =>
           val w = HistOps.normalize(w0)
           if (cents == null) {
-            // reference-parity scan for non-L2 metric costs
+            // reference-parity scan for non-L2 metric costs; their sweep
+            // runs with lim = +Inf, so the key bounds nothing
             val dists = Array.tabulate(nP)(p => Emd.exact(w, ps(p)._2, c.cost))
             solveAcc.add(nP)
             val base = dists.indices.minBy(i => (dists(i), i))
             dists.indices.flatMap { q =>
-              if (q == base) Some((q, id, w, true, 0.0))
-              else if ((dists(q) - dists(base)) / 2.0 <= slackTheta) Some((q, id, w, false, 0.0))
+              if (q == base) Some((q, CellMember(id, w, 0.0, native = true)))
+              else if ((dists(q) - dists(base)) / 2.0 <= slackTheta)
+                Some((q, CellMember(id, w, 0.0, native = false)))
               else None
             }
           } else {
@@ -234,20 +257,21 @@ object MrSimJoin {
             }
             // pass 2: window membership, exact only where the lb admits
             // it. The routing stage already computed the full Rubner
-            // vector — carry its first coordinate through as the group
-            // kernel's band-sort key instead of recomputing an O(bins)
-            // rubnerValue per (window copy x block-pair copy) downstream
-            val band = rc(0)
+            // vector — carry its first coordinate through as the sweep
+            // key instead of recomputing an O(bins) rubnerValue per
+            // (window copy x block-pair copy) downstream
+            val base = CellMember(id, w, rc(0), native = true)
+            val window = base.copy(native = false)
             val windowHi = best + 2.0 * slackTheta
-            val out = scala.collection.mutable.ArrayBuffer[(Int, Long, Array[Double], Boolean, Double)]()
+            val out = scala.collection.mutable.ArrayBuffer[(Int, CellMember)]()
             q = 0
             while (q < nP) {
-              if (q == bestIdx) out += ((q, id, w, true, band))
+              if (q == bestIdx) out += ((q, base))
               else if (lb(q) <= windowHi) {
                 val dq =
                   if (dists(q).isNaN) { solves += 1; pivotDist(w, q) }
                   else dists(q)
-                if ((dq - best) / 2.0 <= slackTheta) out += ((q, id, w, false, band))
+                if ((dq - best) / 2.0 <= slackTheta) out += ((q, window))
               }
               q += 1
             }
@@ -255,17 +279,17 @@ object MrSimJoin {
             out
           }
         }
-      }.toDF("pivot", "id", "weights", "isBase", "band")
-      .persistOnce()
+      }
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     // per-pivot sizes (window copies included) -> sub-block counts: one
     // count array per task, summed in the same job. O(pivots) longs to
     // the driver, never data-sized, and no shuffle.
     val nPivots = pivots.length
-    val sizes = routed.select(col("pivot")).as[Int].rdd
+    val sizes = routed
       .mapPartitions { it =>
         val c = new Array[Long](nPivots)
-        it.foreach(pv => c(pv) += 1)
+        it.foreach(r => c(r._1) += 1)
         Iterator.single(c)
       }
       .fold(new Array[Long](nPivots)) { (acc, c) =>
@@ -276,31 +300,27 @@ object MrSimJoin {
     val routingSolves = solveAcc.value // routed is materialized by the fold
     val subCounts = sizes.map(c =>
       math.max(1L, (c + maxGroupRows - 1) / maxGroupRows).toInt)
+    require(subCounts.max <= (1 << 16),
+      s"a pivot needs ${subCounts.max} sub-blocks; groupKey holds 65536")
     val subB = spark.sparkContext.broadcast(subCounts)
 
     // the closed-form 1-D cascade returns before it reads the duals
     val duals = if (oneD) Array.empty[DualBound] else MelodyJoin.buildDuals(spark, src, cfg)
     val cascadeB = spark.sparkContext.broadcast(new MelodyJoin.Cascade(cfg, duals))
 
-    // key = pivot << 42 | loBlock << 21 | hiBlock; side 0 = loBlock rows.
-    // Unsplit pivots (m == 1) pay zero extra copies.
-    val keyed = routed.as[(Int, Long, Array[Double], Boolean, Double)]
-      .mapPartitions { it =>
-        val subs = subB.value
-        it.flatMap { case (pv, id, w, isBase, band) =>
-          val m = subs(pv)
-          if (m == 1) Iterator.single(((pv.toLong << 42), 0, id, w, isBase, band))
-          else {
-            val mine = ((scala.util.hashing.byteswap64(id) % m).toInt + m) % m
-            (0 until m).iterator.map { other =>
-              val lo = math.min(mine, other)
-              val hi = math.max(mine, other)
-              ((pv.toLong << 42) | (lo.toLong << 21) | hi.toLong,
-                if (mine == lo) 0 else 1, id, w, isBase, band)
-            }
-          }
+    // side 0 = loBlock rows. Unsplit pivots (m == 1) pay zero extra copies.
+    val keyed = routed.flatMap { case (pv, m0) =>
+      val m = subB.value(pv)
+      if (m == 1) Iterator.single((groupKey(pv, 0, 0), (0, m0)))
+      else {
+        val mine = ((scala.util.hashing.byteswap64(m0.id) % m).toInt + m) % m
+        (0 until m).iterator.map { other =>
+          val lo = math.min(mine, other)
+          val hi = math.max(mine, other)
+          (groupKey(pv, lo, hi), (if (mine == lo) 0 else 1, m0))
         }
       }
+    }
 
     // per-group join with the cascade; a pair is evaluated and emitted
     // only in its owner's partition, where its LOWER-id endpoint is the
@@ -309,88 +329,48 @@ object MrSimJoin {
     // emitted exactly once and needs no global de-duplication. Within
     // one pivot a pair meets in exactly one block-pair group.
     //
-    // Candidate generation is CENTROID-BAND-sorted, not all-pairs
-    // (VERDICT r15 item 2): for L2 ground distances the first Rubner
-    // coordinate obeys |r1(a) - r1(b)| <= ||rubner diff||_2 <= EMD, so
-    // sorting a group by that scalar and breaking the inner scan at
-    // key gap > theta (+1e-9 slack — the band never decides membership,
-    // the exact cascade does) makes the quadratic OUTPUT-SENSITIVE: only
-    // pairs inside the theta-band of the sort key are ever touched
-    // (~20% of the all-pairs volume on the dense 10x corpus, measured
-    // in the sizing model's bandFrac probe). Non-L2 metric costs keep
-    // the full scan.
-    val bandable = cfg.groundDist == GroundDist.L2
-    val result = keyed
-      .groupByKey(_._1)
-      .flatMapGroups { (key: Long, rows: Iterator[(Long, Int, Long, Array[Double], Boolean, Double)]) =>
+    // The group runs melody's Phase-3 sweep: a same-block group through
+    // sweepSelf, a block pair through sweepCross(side 0, side 1), both in
+    // first-Rubner-coordinate order. For L2 ground distances
+    // |r1(a) - r1(b)| <= ||rubner diff||_2 <= EMD, so breaking the scan
+    // at key gap > theta (+1e-9 slack — the band never decides
+    // membership, the exact cascade does) touches only pairs inside the
+    // theta-band of the key (~20% of the all-pairs volume on the dense
+    // 10x corpus). Non-L2 metric costs have no such bound and sweep with
+    // lim = +Inf, which visits every pair.
+    val lim = if (cfg.groundDist == GroundDist.L2) theta + 1e-9 else Double.PositiveInfinity
+    val numParts = spark.sessionState.conf.numShufflePartitions
+    val result = keyed.groupByKey(new HashPartitioner(numParts))
+      .mapPartitions { groups =>
         val casc = cascadeB.value
-        val loBlk = ((key >> 21) & 0x1fffffL).toInt
-        val hiBlk = (key & 0x1fffffL).toInt
-        val a = scala.collection.mutable.ArrayBuffer[(Long, Array[Double], Boolean, Double)]()
-        val b = scala.collection.mutable.ArrayBuffer[(Long, Array[Double], Boolean, Double)]()
-        rows.foreach { case (_, side, id, w, isBase, bandKey) =>
-          if (side == 0) a += ((id, w, isBase, bandKey))
-          else b += ((id, w, isBase, bandKey))
-        }
-        val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
-        val cut = theta + 1e-9
-        @inline def tryPair(x: (Long, Array[Double], Boolean, Double),
-                            y: (Long, Array[Double], Boolean, Double)): Unit = {
-          // canonical orientation (lower id first): keeps the exact
-          // solver's fp path identical across partitions/engines
-          val xLo = x._1 < y._1
-          val lo = if (xLo) x else y
-          val hi = if (xLo) y else x
-          if (lo._3 && lo._1 != hi._1) {
-            val emd = casc.emdIfCandidate(lo._2, hi._2, theta)
-            if (emd >= 0) out += ((lo._1, hi._1, emd))
-          }
-        }
-        if (loBlk == hiBlk) {
-          val as = if (bandable) a.sortBy(e => (e._4, e._1)).toArray else a.toArray
-          var i = 0
-          while (i < as.length) {
-            var j = i + 1
-            while (j < as.length &&
-                (!bandable || as(j)._4 - as(i)._4 <= cut)) {
-              tryPair(as(i), as(j)); j += 1
-            }
-            i += 1
-          }
-        } else {
-          val as = if (bandable) a.sortBy(e => (e._4, e._1)).toArray else a.toArray
-          val bs = if (bandable) b.sortBy(e => (e._4, e._1)).toArray else b.toArray
-          if (bandable) {
-            // two-pointer band sweep: for each a-row, scan only b-rows
-            // whose key lies within [key - cut, key + cut]
-            var i = 0
-            var jLo = 0
-            while (i < as.length) {
-              val ki = as(i)._4
-              while (jLo < bs.length && bs(jLo)._4 < ki - cut) jLo += 1
-              var j = jLo
-              while (j < bs.length && bs(j)._4 - ki <= cut) {
-                tryPair(as(i), bs(j)); j += 1
-              }
-              i += 1
-            }
-          } else {
-            var i = 0
-            while (i < as.length) {
-              var j = 0
-              while (j < bs.length) { tryPair(as(i), bs(j)); j += 1 }
-              i += 1
+        groups.flatMap { case (key, rows) =>
+          val out = scala.collection.mutable.ArrayBuffer[JoinPair]()
+          def test(x: CellMember, y: CellMember): Unit = {
+            // canonical orientation (lower id first): keeps the exact
+            // solver's fp path identical across partitions/engines
+            val xLo = x.id < y.id
+            val lo = if (xLo) x else y
+            val hi = if (xLo) y else x
+            if (lo.native && lo.id != hi.id) {
+              val emd = casc.emdIfCandidate(lo.w, hi.w, theta)
+              if (emd >= 0) out += JoinPair(lo.id, hi.id, emd)
             }
           }
+          val (a, b) = rows.partition(_._1 == 0)
+          val as = sweepOrder(a.map(_._2))
+          if (sameBlock(key)) sweepSelf(as, lim)(test)
+          else sweepCross(as, sweepOrder(b.map(_._2)), lim)(test)
+          out
         }
-        out
       }
-      .toDF("rid", "sid", "dist")
+      .toDF()
       .persistOnce()
     // materialize the (small) pair result so the data-sized cached
     // intermediates can be freed now instead of leaking across a
     // multi-query session; the persisted result is O(pairs), not O(N).
-    result.rdd.count()
+    // One job (the group shuffle is a stage of it), counted on
+    // InternalRows: `.rdd` would build a Row per cached pair only to count it
+    result.queryExecution.toRdd.count()
     src.unpersist(false)
     routed.unpersist(false)
     (result, routingSolves)

@@ -313,15 +313,22 @@ class MelodyJoinSpec extends AnyFunSuite {
   }
 
   test("melody threshold join runs at most four Spark jobs") {
-    // grids, duals, enrich + summarize, join, for the 3-D and the 1-D
-    // config alike. Suites share one SparkContext, so count only the
-    // jobs carrying this run's group id; the listener queue is FIFO, so
-    // once the marker job's start has arrived, every job before it has
-    // been counted.
+    // melody: grids, duals, enrich + summarize, join, for the 3-D and the
+    // 1-D config alike. MrSim: record count, pivot pick, per-pivot sizes,
+    // join, plus the dual sample for 3-D. Either join is one job whose
+    // stages are the group shuffle and the result's cache build, and it
+    // leaves the cache built. Suites share one SparkContext, so count
+    // only the jobs carrying this run's group id; the listener queue is
+    // FIFO, so once the marker job's start has arrived, every job before
+    // it has been counted.
     val hists = randomHists(150, 8, seed = 71)
     val sc = spark.sparkContext
-    for ((label, cfg, theta) <- Seq(("3-D", cfg3d, 0.3),
-        ("1-D", graft.SparkEntry.melodyCfg1d, 0.3))) {
+    val cfg1d = graft.SparkEntry.melodyCfg1d
+    for ((label, join, maxJobs) <- Seq[(String, () => DataFrame, Int)](
+        ("melody 3-D", () => MelodyJoin.thresholdJoin(spark, hists, 0.3, cfg3d), 4),
+        ("melody 1-D", () => MelodyJoin.thresholdJoin(spark, hists, 0.3, cfg1d), 4),
+        ("MrSim 3-D", () => MrSimJoin.thresholdJoin(spark, hists, 0.3, cfg3d), 5),
+        ("MrSim 1-D", () => MrSimJoin.thresholdJoin(spark, hists, 0.3, cfg1d), 4))) {
       val group = s"melody-job-count-${System.nanoTime()}"
       val marker = s"$group-marker"
       val jobs = new java.util.concurrent.atomic.AtomicInteger()
@@ -335,18 +342,36 @@ class MelodyJoinSpec extends AnyFunSuite {
       }
       sc.addSparkListener(listener)
       try {
-        sc.setJobGroup(group, s"melody $label threshold join")
-        val result = MelodyJoin.thresholdJoin(spark, hists, theta, cfg)
+        sc.setJobGroup(group, s"$label threshold join")
+        val result = join()
+        val cached = spark.sharedState.cacheManager.lookupCachedData(
+          result.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+        assert(cached.exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded),
+          s"$label: result cache not built")
         sc.setJobGroup(marker, "listener marker")
         val pairs = result.rdd.count()
         assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
           s"$label: listener never saw the marker job")
         assert(pairs > 0, s"$label: vacuous job count")
-        assert(jobs.get >= 1 && jobs.get <= 4, s"$label: ${jobs.get} jobs")
+        assert(jobs.get >= 1 && jobs.get <= maxJobs, s"$label: ${jobs.get} jobs")
       } finally {
         sc.clearJobGroup()
         sc.removeSparkListener(listener)
       }
+    }
+  }
+
+  test("MrSim group keys spread over hash partitions") {
+    // HashPartitioner hashes a Long as low word ^ high word: unsplit
+    // pivots must not collapse into one partition, nor the block pairs
+    // of one split pivot
+    for (n <- Seq(4, 7, 200)) {
+      val part = new org.apache.spark.HashPartitioner(n)
+      val unsplit = (0 until n).map(p => part.getPartition(MrSimJoin.groupKey(p, 0, 0)))
+      assert(unsplit.distinct.size == n, s"n=$n: unsplit pivots on ${unsplit.distinct.size} partitions")
+      val split = for { hi <- 0 until 6; lo <- 0 to hi }
+        yield part.getPartition(MrSimJoin.groupKey(3, lo, hi))
+      assert(split.distinct.size > 1, s"n=$n: a split pivot's block pairs on one partition")
     }
   }
 
