@@ -567,7 +567,8 @@ object SparkEntry {
     }),
 
     // --- tree-EMD top-k, 1-D and 3-D (J2/A7 analog on the tree metric:
-    //     sampled k-th-distance bound, banded join, bounded-heap top-k) ---
+    //     k-th record-to-ref distance bound, banded join, bounded-heap
+    //     top-k) ---
     "q_treeemd_topk" -> ((s, dir) => {
       val hists = Fixtures.quantityHists(s, dir)
       EmdJoins.treeEmdTopK(hists, TopK)
@@ -2639,7 +2640,7 @@ object SparkEntry {
     * cap from a deterministic O(N) sample — consecutive ids in id order —
     * whose k-th smallest distance upper-bounds the true k-th distance;
     * +2e-6 covers the full 6-decimal rounding bucket, mirroring the Spark
-    * side (EmdJoins.treeEmdTopKLevels ub + 2e-6 for the same reason). */
+    * side (EmdTopK.join's ub + 2e-6 for the same reason). */
   private def treeEmdOracle(baseCte: String, fSql: String, topK: Option[Int],
                             tau: Double): String = {
     val capCte = topK match {

@@ -35,8 +35,7 @@ object BaselineJoin {
 
   def topKJoin(spark: SparkSession, hists: DataFrame, k: Int,
                cfg: MelodyJoin.Config): DataFrame = {
-    val all = thresholdJoin(spark, hists, Double.MaxValue / 4, cfg)
-    // ties break on the 6-decimal distance, as in every other top-k engine
-    all.orderBy(round(col("dist"), 6), col("rid"), col("sid")).limit(k)
+    // every pair, ranked as every other top-k engine ranks
+    EmdTopK.rank(thresholdJoin(spark, hists, Double.MaxValue / 4, cfg), k)
   }
 }

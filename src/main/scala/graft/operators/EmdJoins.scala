@@ -367,30 +367,12 @@ object EmdJoins {
   }
 
   /** Top-k closest pairs by exact 3-D LP-EMD through the tree-exact
-    * engine: the sampled k-th exact distance (executor-side LPs over a
-    * deterministic hash-spread sample, same D14 shape as
-    * [[MelodyJoin.topKJoinPrepared]]) is a valid global upper bound,
-    * [[treeExact3dThresholdJoin]] runs at that radius, and the global
-    * bounded-heap top-k takes over. Radius covers the full 6-decimal
-    * rounding bucket (+2e-6) and ties break on (round(dist,6), rid, sid)
-    * — the unified convention shared by every top-k engine, so the answer
-    * is identical pair-for-pair to the melody 3-D top-k (the cross-engine
-    * witness SparkEntry asserts). */
-  def treeExact3dTopK(hists: DataFrame, k: Int, sampleSize: Int = 64): DataFrame = {
-    import hists.sparkSession.implicits._
-    val sample = hists.select("id", "weights").as[(Long, Array[Double])]
-      .orderBy(md5(col("id").cast("string")), col("id"))
-      .limit(sampleSize).collect()
-    val cost = graft.core.Emd.costMatrix(
-      graft.sources.Fixtures.Bins3d, graft.sources.Fixtures.Dim3,
-      graft.core.GroundDist.L2)
-    // valid only when k sample pairs exist (else no bound on the k-th)
-    val ub = MelodyJoin.kthSampleDist(hists.sparkSession,
-      sample.map(_._2), k, cost)
-    treeExact3dThresholdJoin(hists, math.min(ub + 2e-6, Double.MaxValue))
-      .orderBy(round(col("dist"), 6), col("rid"), col("sid"))
-      .limit(k)
-  }
+    * engine: [[EmdTopK.join]] over [[treeExact3dThresholdJoin]], bounded
+    * by [[cubeKrSolver]] distances, so the answer is identical
+    * pair-for-pair to the melody 3-D top-k (the cross-engine witness
+    * SparkEntry asserts). */
+  def treeExact3dTopK(hists: DataFrame, k: Int): DataFrame =
+    EmdTopK.join(hists, k, cubeKrSolver(_, _, null))(treeExact3dThresholdJoin(hists, _))
 
   /** The dyadic 1-D hierarchy: spans n/2 .. 1, edge weight = span. */
   private def dyadicLevels(numBins: Int): Seq[(Int, Double)] = {
@@ -413,50 +395,35 @@ object EmdJoins {
       yield (aggregate(slice(col("weights"), nd * span + 1, span),
         lit(0.0), (a, x) => a + x) * lit(wgt))
 
-  /** Top-k closest pairs under the tree-EMD metric: the sampled k-th
-    * pair distance bounds the global k-th (sample pairs are a subset),
-    * the banded threshold join runs at that radius, and the global
-    * bounded-heap top-k takes over — the same two-pass shape as
-    * [[emd1dTopK]], ranked by the oracle's (round(dist,6), rid, sid). */
-  private def treeEmdTopKLevels(hists: DataFrame, k: Int, numBins: Int,
-                                levels: Seq[(Int, Double)],
-                                sampleSize: Int): DataFrame = {
-    val featCols = treeFeatExprs(numBins, levels).zipWithIndex
-      .map { case (c, i) => c.as(s"_f$i") }
-    val nf = featCols.length
-    // deterministic SPREAD sample (hash-ordered, same convention as
-    // MelodyJoin.topKJoinPrepared): a lowest-ids pick clusters in one id
-    // region, and id-correlated ingestion then yields a needlessly loose
-    // k-th-distance radius for the banded join below
-    val sample = hists
-      .orderBy(md5(col("id").cast("string")), col("id")).limit(sampleSize)
-      .select((col("id") +: featCols): _*)
-    val right = sample.select(sample.columns.map(c => col(c).as(c + "_b")): _*)
-    val sDist = (0 until nf).map(i => abs(col(s"_f$i") - col(s"_f${i}_b"))).reduce(_ + _)
-    val sPairs = sample.crossJoin(right)
-      .filter(col("id") < col("id_b"))
-      .select(sDist.as("dist"))
-    // valid only when k sample pairs exist (else the max is no bound on
-    // the global k-th distance); the radius covers the full 6-decimal
-    // ROUNDING BUCKET of the k-th distance, not just +epsilon — the
-    // oracle ranks by round(dist, 6) with a (rid, sid) tie-break, so a
-    // pair up to 5e-7 ABOVE the raw k-th distance can round equal and
-    // displace it, and must be present in the thresholded candidate set
-    val top = sPairs.orderBy(col("dist")).limit(k).collect()
-    val ub = if (top.length >= k) top.last.getDouble(0) else Double.MaxValue
-    treeEmdJoinLevels(hists, math.min(ub + 2e-6, Double.MaxValue), numBins, levels)
-      .orderBy(round(col("dist"), 6), col("rid"), col("sid"))
-      .limit(k)
+  /** The weighted L1 over [[treeFeatExprs]]' embedding, in the same
+    * order of operations: the tree-EMD the banded join computes. */
+  private def treeDist(numBins: Int, levels: Seq[(Int, Double)])(
+      a: Array[Double], b: Array[Double]): Double = {
+    var d = 0.0
+    for ((span, wgt) <- levels; nd <- 0 until numBins / span) {
+      var ma = 0.0; var mb = 0.0
+      var i = nd * span
+      while (i < (nd + 1) * span) { ma += a(i); mb += b(i); i += 1 }
+      d += math.abs(ma * wgt - mb * wgt)
+    }
+    d
   }
 
+  /** Top-k closest pairs under a tree-EMD metric: [[EmdTopK.join]] over
+    * the banded join, bounded by [[treeDist]]. */
+  private def treeEmdTopKLevels(hists: DataFrame, k: Int, numBins: Int,
+                                levels: Seq[(Int, Double)]): DataFrame =
+    EmdTopK.join(hists, k, treeDist(numBins, levels))(
+      treeEmdJoinLevels(hists, _, numBins, levels))
+
   /** Top-k pairs under the dyadic 1-D tree-EMD. */
-  def treeEmdTopK(hists: DataFrame, k: Int, sampleSize: Int = 512,
+  def treeEmdTopK(hists: DataFrame, k: Int,
                   numBins: Int = graft.sources.Fixtures.NumBins): DataFrame =
-    treeEmdTopKLevels(hists, k, numBins, dyadicLevels(numBins), sampleSize)
+    treeEmdTopKLevels(hists, k, numBins, dyadicLevels(numBins))
 
   /** Top-k pairs under the octree 3-D tree-EMD. */
-  def treeEmd3dTopK(hists: DataFrame, k: Int, sampleSize: Int = 512): DataFrame =
-    treeEmdTopKLevels(hists, k, 8, KdLevels3d, sampleSize)
+  def treeEmd3dTopK(hists: DataFrame, k: Int): DataFrame =
+    treeEmdTopKLevels(hists, k, 8, KdLevels3d)
 
   /** Shared tree-EMD join kernel: features are edgeWeight * nodeMass per
     * (level, node), nodes are contiguous `span`-wide bin slices, distance
@@ -498,52 +465,14 @@ object EmdJoins {
     result
   }
 
-  /** Top-k closest pairs by 1-D EMD with deterministic tie-break
-    * (dist, rid, sid).
-    *
-    * Two-pass rank strategy mirroring the reference's sampled global upper
-    * bound (mr/normal/QNEPreReducer.java:96-109 + utils/HistUtil.java:641-652):
-    * pass 1 computes the k-th smallest pairwise distance among a
-    * deterministic sample — a valid global upper bound on the k-th best
-    * distance; pass 2 runs the banded threshold join at that bound and takes
-    * the global top-k (Spark's TakeOrderedAndProject = distributed bounded
-    * heap merge, the analog of the reference's TreeSet+KReducer
-    * mr/normal/KReducer.java:25-38).
-    */
-  def emd1dTopK(hists: DataFrame, k: Int, sampleSize: Int = 512,
-                numBins: Int = graft.sources.Fixtures.NumBins): DataFrame = {
-    // sampled upper bound: k-th smallest pairwise distance within a
-    // deterministic sample. Sample size matters — the bound IS the join
-    // radius, so a 4x larger sample (16x more pairs, still trivial via the
-    // scalar-cums form) buys a much tighter radius for the real join.
-    val cums = (0 until numBins - 1).map { i =>
-      aggregate(slice(col("weights"), 1, i + 1), lit(0.0), (a, x) => a + x)
-        .as(s"_c$i")
-    }
-    // deterministic SPREAD sample (hash-ordered, same convention as
-    // MelodyJoin.topKJoinPrepared) — decorrelates the radius from id
-    // assignment without a global rank/count pass
-    val sample = hists
-      .orderBy(md5(col("id").cast("string")), col("id")).limit(sampleSize)
-      .select((col("id") +: cums): _*)
-    val right = sample.select(sample.columns.map(c => col(c).as(c + "_b")): _*)
-    val sDist = (0 until numBins - 1)
-      .map(i => abs(col(s"_c$i") - col(s"_c${i}_b")))
-      .reduce(_ + _)
-    val sPairs = sample.crossJoin(right)
-      .filter(col("id") < col("id_b"))
-      .select(sDist.as("dist"))
-    // Guarded: the k-th sample-pair distance bounds the global k-th only
-    // when k sample pairs exist (fewer happens only when the sample IS
-    // the whole corpus, but guard anyway); and the radius covers the full
-    // 6-decimal ROUNDING BUCKET of that distance — the oracle ranks by
-    // round(dist, 6) with a (rid, sid) tie-break, so a pair up to 5e-7
-    // ABOVE the raw k-th distance can round equal and displace it via the
-    // tie-break; it must be inside the thresholded candidate set.
-    val top = sPairs.orderBy(col("dist")).limit(k).collect()
-    val ub = if (top.length >= k) top.last.getDouble(0) else Double.MaxValue
-    emd1dThresholdJoin(hists, math.min(ub + 2e-6, Double.MaxValue))
-      .orderBy(round(col("dist"), 6), col("rid"), col("sid"))
-      .limit(k)
-  }
+  /** Top-k closest pairs by 1-D EMD, ranked by (round(dist, 6), rid,
+    * sid): [[EmdTopK.join]] over [[emd1dThresholdJoin]], bounded by
+    * [[graft.core.Emd.emd1dInteger]] — the reference's sampled global
+    * upper bound (mr/normal/QNEPreReducer.java:96-109 +
+    * utils/HistUtil.java:641-652) with a bounded-heap merge
+    * (mr/normal/KReducer.java:25-38). */
+  def emd1dTopK(hists: DataFrame, k: Int,
+                numBins: Int = graft.sources.Fixtures.NumBins): DataFrame =
+    EmdTopK.join(hists, k, graft.core.Emd.emd1dInteger)(
+      emd1dThresholdJoin(hists, _, numBins))
 }

@@ -26,7 +26,9 @@ import graft.core._
   *     native x native and native x guest, through the [[Cascade]],
   *     as a sweep in [[Config.projMean]] order that skips pairs the
   *     projected-centroid bound already rejects.
-  *   - Phase 4 (top-k merge) is orderBy(dist).limit(k).
+  *   - Phase 4 (top-k merge): [[EmdTopK.join]] runs this join at a
+  *     radius bounded by exact distances to a few reference records and
+  *     keeps the k best.
   * A 1-D single-vector config runs the same Phase 3; its [[Cascade]]
   * reduces to the closed-form 1-D EMD.
   *
@@ -186,6 +188,15 @@ object MelodyJoin {
       }
       total
     }
+
+    /** Whether the joins' exact EMD is the closed-form 1-D EMD: one
+      * projection vector on a 1-D L2 config. */
+    val closedForm1d: Boolean =
+      dimension == 1 && numVectors == 1 && groundDist == GroundDist.L2
+
+    /** The exact EMD the joins compute for two normalized weight arrays. */
+    def exactEmd(wa: Array[Double], wb: Array[Double]): Double =
+      if (closedForm1d) proj1dEmd(0, wa, wb) else Emd.exact(wa, wb, cost)
 
     /** Centroid of a normalized weight array projected on vector j. Under
       * L2, |projMean(j, wa) - projMean(j, wb)| <= proj1dEmd(j, wa, wb) <=
@@ -699,15 +710,12 @@ object MelodyJoin {
       * cost-matrix-generic bounds (reduction, indmin). */
     private val l2Bounds = cfg.groundDist == GroundDist.L2
 
-    /** For 1-D configurations with a single projection vector, the
-      * projection "bound" IS the exact EMD (1-D EMD on the real line under
-      * |x-y| ground distance) — the rest of the cascade is redundant. */
-    private val oneD = cfg.dimension == 1 && cfg.numVectors == 1
-
     /** Returns exact EMD if the pair survives every bound at `theta`,
-      * else -1. */
+      * else -1. For a [[Config.closedForm1d]] config the projection
+      * "bound" IS the exact EMD (1-D EMD on the real line under |x-y|
+      * ground distance) — the rest of the cascade is redundant. */
     def emdIfCandidate(wa: Array[Double], wb: Array[Double], theta: Double): Double = {
-      if (oneD && l2Bounds) {
+      if (cfg.closedForm1d) {
         val d = cfg.proj1dEmdUpTo(0, wa, wb, theta)
         return if (d <= theta) d else -1.0
       }
@@ -1017,10 +1025,10 @@ object MelodyJoin {
       tree: Option[TreeEmd]) {
     /** Theta-independent guest-enumeration structures (per-vector-cell
       * envelopes + flat [[SummaryIndex]]), built and broadcast on the
-      * FIRST join over this engine state and reused across repeated
-      * radius probes (the top-k path calls thresholdJoinPrepared several
-      * times per Prepared). Functions of the summaries this Prepared
-      * owns and the cfg it was prepared with — the existing caller
+      * FIRST join over this engine state and reused by every later one
+      * (a session-cached Prepared serves both a threshold and a top-k
+      * query; each runs one join). Functions of the summaries this
+      * Prepared owns and the cfg it was prepared with — the existing caller
       * contract (passing a different cfg with someone else's Prepared
       * was always wrong). Broadcasts live until the context GCs them;
       * Prepared itself is session-scoped (prepMemo). */
@@ -1165,103 +1173,30 @@ object MelodyJoin {
       }.toDF()
   }
 
-  /** Top-k join: global upper bound from two sources, then threshold join
-    * + global bounded-heap top-k (TakeOrderedAndProject).
-    *
-    * Bound 1 (D14): k-th smallest exact EMD among a collected sample's
-    * pairs (reference: HistUtil.getKEmd:641-652).
-    * Bound 2 (A6, strengthened): greedy-flow upper bounds from EVERY
-    * record to each sampled reference — each (record, ref) flow is a
-    * feasible pair distance, so the k-th smallest flow bounds the k-th
-    * best pair. The reference aggregated these per cell
-    * (NESpaceReducer.java:101-115); computing them per record is tighter
-    * and stays fully distributed (one narrow pass + TakeOrdered(k)). */
-  def topKJoin(spark: SparkSession, hists: DataFrame, k: Int, cfg: Config,
-               sampleSize: Int = 64, numRefs: Int = 8): DataFrame = {
-    // engine state is theta-independent — build ONCE and share between the
-    // flow-bound pass and the final threshold join (the join previously
-    // re-ran grids/duals/enrichment, paying the whole engine twice)
+  /** Top-k join: [[EmdTopK.join]] over this engine's threshold join,
+    * with the exact EMD ([[Config.exactEmd]]) from every record to the
+    * shared refs as the bound. */
+  def topKJoin(spark: SparkSession, hists: DataFrame, k: Int, cfg: Config): DataFrame = {
+    // engine state is theta-independent: built once, unpersisted once
+    // the O(k) result is materialized
     val prep = prepare(spark, hists, cfg)
-    val result = topKJoinPrepared(spark, prep, k, cfg, sampleSize, numRefs)
+    val result = topKJoinPrepared(spark, prep, k, cfg)
     prep.unpersist()
     result
   }
 
   /** Top-k join over pre-built (possibly session-cached) engine state;
-    * does NOT unpersist the enrichment — the Prepared's owner does. */
-  def topKJoinPrepared(spark: SparkSession, prep: Prepared, k: Int, cfg: Config,
-                       sampleSize: Int = 64, numRefs: Int = 8): DataFrame = {
-    import spark.implicits._
-    // deterministic SPREAD sample: hash-ordered TakeOrdered decorrelates
-    // the sample from id assignment (the former lowest-64-ids pick
-    // clustered in one id region — a locally-dense region gives a loose
-    // k-th-distance bound and a needlessly wide candidate radius) without
-    // a global rank/count pass; already normalized
-    val sample = prep.enriched.select("id", "weights").as[(Long, Array[Double])]
-      .orderBy(md5(col("id").cast("string")), col("id"))
-      .limit(sampleSize).collect()
-    val sampleUb = kthSampleDist(spark, sample.map(_._2), k, cfg.cost)
-
-    val refs = sample.take(numRefs)
-    val refsB = spark.sparkContext.broadcast(refs)
-    val refIdsB = spark.sparkContext.broadcast(refs.map(_._1).toSet)
-    val cfgB = spark.sparkContext.broadcast(cfg)
-    val nearestB = spark.sparkContext.broadcast(
-      Emd.nearestOrders(cfg.cost, cfg.numBins))
-    val flowUbs = prep.enriched.select("id", "weights").as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val c = cfgB.value
-        val near = nearestB.value
-        val refIds = refIdsB.value
-        it.flatMap { case (id, w) =>
-          // each flow is a feasible distance for ONE unordered pair; when
-          // the record is itself a ref, keep only the id < rid orientation
-          // so a ref-ref pair contributes a single flow — otherwise the k
-          // smallest flows can double-count a pair and the k-th flow would
-          // not cover k distinct pairs
-          val isRef = refIds.contains(id)
-          refsB.value.iterator.collect {
-            case (rid, rw) if rid != id && (!isRef || id < rid) =>
-              Emd.greedyFlow(w, rw, near, c.cost)
-          }
-        }
-      }.toDF("ub")
-      .orderBy(col("ub")).limit(k).collect()
-    // valid only if k flows exist (k pairs guaranteed within the k-th flow)
-    val flowUb = if (flowUbs.length >= k) flowUbs.last.getDouble(0) else Double.MaxValue
-
-    val ub = math.min(sampleUb, flowUb)
-    // radius covers the full 6-decimal rounding bucket of the k-th
-    // distance (+2e-6) and ties break on the rounded value — same
-    // convention as MrSimJoin.topKJoin / emd1dTopK / treeEmdTopK, so a
-    // pair 5e-7 above the raw k-th distance that rounds equal is
-    // selected identically by every top-k engine
-    val result = thresholdJoinPrepared(spark, prep,
-        math.min(ub + 2e-6, Double.MaxValue), cfg)
-      .orderBy(round(col("dist"), 6), col("rid"), col("sid"))
-      .limit(k)
+    * does NOT unpersist the enrichment — the Prepared's owner does. The
+    * bound reads the enrichment's normalized weights, the ones the join
+    * compares. */
+  def topKJoinPrepared(spark: SparkSession, prep: Prepared, k: Int, cfg: Config): DataFrame = {
+    val result = EmdTopK.join(prep.enriched, k, cfg.exactEmd)(
+      theta => thresholdJoinPrepared(spark, prep, theta, cfg))
       .persistOnce()
-    result.count() // O(k) rows; the Prepared's owner frees the enrichment
+    // one job builds the O(k) cache (Dataset.count() would add its
+    // aggregate's shuffle stage as a second); the Prepared's owner frees
+    // the enrichment
+    result.queryExecution.toRdd.count()
     result
-  }
-
-  /** k-th smallest exact EMD among the sample's C(n,2) pairs — a valid
-    * global upper bound on the k-th best pair distance (every sample pair
-    * is a feasible pair), or MaxValue when fewer than k pairs exist. The
-    * pair LPs run ON EXECUTORS (parallelize + takeOrdered), not as a
-    * serial driver loop: constant work, but at production bin counts a
-    * few thousand driver-serial LPs would stall the job between stages. */
-  private[operators] def kthSampleDist(spark: SparkSession,
-      ws: Array[Array[Double]], k: Int, cost: Array[Double]): Double = {
-    val pairs = for { i <- ws.indices; j <- ws.indices if i < j } yield (i, j)
-    if (pairs.size < k) Double.MaxValue
-    else {
-      val wsB = spark.sparkContext.broadcast(ws)
-      val costB = spark.sparkContext.broadcast(cost)
-      val slices = math.min(spark.sparkContext.defaultParallelism, pairs.size)
-      spark.sparkContext.parallelize(pairs, slices)
-        .map { case (i, j) => Emd.exact(wsB.value(i), wsB.value(j), costB.value) }
-        .takeOrdered(k).last
-    }
   }
 }

@@ -5,7 +5,6 @@ import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.functions._
-import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import graft.core._
 
 /** Pivot-partition EMD self-join — the Spark rewrite of the reference's
@@ -51,7 +50,9 @@ import graft.core._
   * dual sample for configs that are not closed-form 1-D) are one RDD
   * action, i.e. one Spark job, each; materializing the result adds one
   * more, the count, whose stages are the group shuffle and the cache
-  * build (1-D: 4 jobs, 3-D: 5, with an auto pivot count).
+  * build (1-D: 4 jobs, 3-D: 5, with an auto pivot count). Top-k
+  * ([[topKJoin]]) adds the two jobs of [[EmdTopK]]'s bound (ref pick,
+  * k-th record-to-ref distance) ahead of the threshold join.
   */
 object MrSimJoin {
   import MelodyJoin.{CellMember, JoinPair, sweepCross, sweepOrder, sweepSelf}
@@ -83,7 +84,7 @@ object MrSimJoin {
     val n = src.rdd.count()
     val poolSize = math.min(2048L, n / 256L).toInt
     if (poolSize <= 16) return 16
-    val pool = firstByIdHash(spark, src, poolSize).map(_._2)
+    val pool = EmdTopK.firstByIdHash(src, poolSize).map(r => HistOps.normalize(r._2))
     val sample = src
       .orderBy(md5(col("id").cast("string")), col("id")).limit(256)
       .as[(Long, Array[Double])].collect().map(r => HistOps.normalize(r._2))
@@ -121,20 +122,6 @@ object MrSimJoin {
       p = if (p * 2 <= pool.length || p == pool.length) p * 2 else pool.length
     }
     best
-  }
-
-  /** The first `k` records in `(hash(id), id)` order, weights normalized,
-    * in one `takeOrdered` job. Murmur3 with seed 42 on the long id is
-    * exactly Spark's `hash(col("id"))`, so this is the order of
-    * `orderBy(hash(col("id")), col("id")).limit(k)`. A prefix of the
-    * pivot-count pool is the pivot set itself. */
-  private def firstByIdHash(spark: SparkSession, src: DataFrame,
-                            k: Int): Array[(Long, Array[Double])] = {
-    import spark.implicits._
-    src.as[(Long, Array[Double])].rdd
-      .map { case (id, w) => (Murmur3_x86_32.hashLong(id, 42), id, w) }
-      .takeOrdered(k)(Ordering.by((t: (Int, Long, Array[Double])) => (t._1, t._2)))
-      .map { case (_, id, w) => (id, HistOps.normalize(w)) }
   }
 
   /** The group key of block pair `(lo, hi)`, `lo <= hi`, of pivot
@@ -179,12 +166,13 @@ object MrSimJoin {
     // 1-D EMD (the identity the cascade itself uses), so routing solves
     // are a flat O(bins) pass instead of a transport solve — and routing
     // distances share the cascade's exact FP path
-    val oneD = cfg.dimension == 1 && cfg.numVectors == 1 &&
-      cfg.groundDist == GroundDist.L2
+    val oneD = cfg.closedForm1d
     val p =
       if (numPivots > 0) numPivots
       else autoPivotCount(spark, src, theta, cfg, oneD)
-    val pivots = firstByIdHash(spark, src, p)
+    // a prefix of the pivot-count pool is the pivot set itself
+    val pivots = EmdTopK.firstByIdHash(src, p)
+      .map { case (id, w) => (id, HistOps.normalize(w)) }
     val pivotsB = spark.sparkContext.broadcast(pivots)
     val cfgB = spark.sparkContext.broadcast(cfg)
     // Rubner-pruned routing (L2 ground only — the centroid distance is an
@@ -212,8 +200,7 @@ object MrSimJoin {
         val c = cfgB.value
         val cents = centsB.value
         val nP = ps.length
-        @inline def pivotDist(w: Array[Double], p: Int): Double =
-          if (oneD) c.proj1dEmd(0, w, ps(p)._2) else Emd.exact(w, ps(p)._2, c.cost)
+        @inline def pivotDist(w: Array[Double], p: Int): Double = c.exactEmd(w, ps(p)._2)
         it.flatMap { case (id, w0) =>
           val w = HistOps.normalize(w0)
           if (cents == null) {
@@ -377,44 +364,13 @@ object MrSimJoin {
   }
 
   /** Top-k closest pairs on the mrsim engine (the reference serves both
-    * query types from every framework — Join.java:42-131): the k-th
-    * smallest exact EMD among a deterministic sample's pairs is a valid
-    * global bound on the k-th best pair distance; run the threshold join
-    * there and take the k smallest (TakeOrderedAndProject). */
+    * query types from every framework — Join.java:42-131):
+    * [[EmdTopK.join]] over this engine's threshold join, with the exact
+    * EMD of the normalized weights ([[MelodyJoin.Config.exactEmd]], the
+    * distance the routing and the cascade compute) as the bound. */
   def topKJoin(spark: SparkSession, hists: DataFrame, k: Int,
-               cfg: MelodyJoin.Config, sampleSize: Int = 256,
-               numPivots: Int = 0): DataFrame = {
-    // sampleSize default 256 (not 64): the k-th sample distance IS the
-    // join radius, and the routing window replicates records
-    // proportionally to it — a 4x larger sample costs ~33k extra driver
-    // solves (micro-seconds each) and buys a visibly tighter radius
-    import spark.implicits._
-    // deterministic SPREAD sample (hash-ordered, same convention as
-    // MelodyJoin.topKJoinPrepared) — a lowest-ids pick gives an
-    // id-clustered corpus a needlessly loose radius
-    val sample = hists.select("id", "weights").as[(Long, Array[Double])]
-      .orderBy(md5(col("id").cast("string")), col("id"))
-      .limit(sampleSize).collect()
-      .map { case (id, w) => (id, HistOps.normalize(w)) }
-    val oneD = cfg.dimension == 1 && cfg.numVectors == 1 &&
-      cfg.groundDist == graft.core.GroundDist.L2
-    // closed-form 1-D distances are cheap on the driver; the exact LPs
-    // of C(sampleSize, 2) pairs run on the executors
-    val ws = sample.map(_._2)
-    val ub =
-      if (!oneD) MelodyJoin.kthSampleDist(spark, ws, k, cfg.cost)
-      else {
-        val sorted = (for { i <- ws.indices; j <- ws.indices if i < j }
-          yield cfg.proj1dEmd(0, ws(i), ws(j))).sorted
-        if (sorted.length >= k) sorted(k - 1) else Double.MaxValue
-      }
-    // rank by the ROUNDED distance (then rid, sid) — the exact tie-break
-    // the driver's 6-decimal oracle applies. The radius covers the full
-    // rounding bucket of the k-th distance (+2e-6, not +epsilon): a pair
-    // up to 5e-7 above the raw k-th distance can round equal and win the
-    // (rid, sid) tie-break, so it must survive the threshold join.
-    thresholdJoin(spark, hists, math.min(ub + 2e-6, Double.MaxValue), cfg, numPivots)
-      .orderBy(round(col("dist"), 6), col("rid"), col("sid"))
-      .limit(k)
-  }
+               cfg: MelodyJoin.Config, numPivots: Int = 0): DataFrame =
+    EmdTopK.join(hists, k,
+      (a, b) => cfg.exactEmd(HistOps.normalize(a), HistOps.normalize(b)))(
+      theta => thresholdJoin(spark, hists, theta, cfg, numPivots))
 }

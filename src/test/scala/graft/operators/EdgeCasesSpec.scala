@@ -59,7 +59,7 @@ class EdgeCasesSpec extends AnyFunSuite {
     val w = Array(0.125, 0.125, 0.125, 0.125, 0.125, 0.125, 0.125, 0.125)
     val hists = df((1L to 6L).map(i => (i, w.clone())))
     assert(EmdJoins.emd1dThresholdJoin(hists, 0.01).count() == 15)
-    assert(EmdJoins.emd1dTopK(hists, 4, sampleSize = 6).count() == 4)
+    assert(EmdJoins.emd1dTopK(hists, 4).count() == 4)
   }
 
   test("mrsim skewed pivot distribution: sub-split groups stay bounded " +
@@ -86,7 +86,7 @@ class EdgeCasesSpec extends AnyFunSuite {
     val hists = df((1L to 40L).map(i => (i, Array.fill(8)(rnd.nextDouble()))))
     val mel = MelodyJoin.topKJoin(spark, hists, k = 10, cfg)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val mrs = MrSimJoin.topKJoin(spark, hists, k = 10, cfg, sampleSize = 16)
+    val mrs = MrSimJoin.topKJoin(spark, hists, k = 10, cfg)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(mrs == mel)
   }

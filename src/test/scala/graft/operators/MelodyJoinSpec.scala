@@ -317,18 +317,23 @@ class MelodyJoinSpec extends AnyFunSuite {
     // 1-D config alike. MrSim: record count, pivot pick, per-pivot sizes,
     // join, plus the dual sample for 3-D. Either join is one job whose
     // stages are the group shuffle and the result's cache build, and it
-    // leaves the cache built. Suites share one SparkContext, so count
-    // only the jobs carrying this run's group id; the listener queue is
-    // FIFO, so once the marker job's start has arrived, every job before
-    // it has been counted.
+    // leaves the cache built. Top-k over a Prepared: the ref pick, the
+    // bound's takeOrdered and the ranked result's count. Suites share
+    // one SparkContext, so count only the jobs carrying this run's group
+    // id; the listener queue is FIFO, so once the marker job's start has
+    // arrived, every job before it has been counted.
     val hists = randomHists(150, 8, seed = 71)
     val sc = spark.sparkContext
     val cfg1d = graft.SparkEntry.melodyCfg1d
-    for ((label, join, maxJobs) <- Seq[(String, () => DataFrame, Int)](
-        ("melody 3-D", () => MelodyJoin.thresholdJoin(spark, hists, 0.3, cfg3d), 4),
-        ("melody 1-D", () => MelodyJoin.thresholdJoin(spark, hists, 0.3, cfg1d), 4),
-        ("MrSim 3-D", () => MrSimJoin.thresholdJoin(spark, hists, 0.3, cfg3d), 5),
-        ("MrSim 1-D", () => MrSimJoin.thresholdJoin(spark, hists, 0.3, cfg1d), 4))) {
+    val prep3d = MelodyJoin.prepare(spark, hists, cfg3d)
+    val prep1d = MelodyJoin.prepare(spark, hists, cfg1d)
+    for ((label, join, allowedJobs) <- Seq[(String, () => DataFrame, Range)](
+        ("melody 3-D", () => MelodyJoin.thresholdJoin(spark, hists, 0.3, cfg3d), 1 to 4),
+        ("melody 1-D", () => MelodyJoin.thresholdJoin(spark, hists, 0.3, cfg1d), 1 to 4),
+        ("MrSim 3-D", () => MrSimJoin.thresholdJoin(spark, hists, 0.3, cfg3d), 1 to 5),
+        ("MrSim 1-D", () => MrSimJoin.thresholdJoin(spark, hists, 0.3, cfg1d), 1 to 4),
+        ("melody 3-D top-k", () => MelodyJoin.topKJoinPrepared(spark, prep3d, 20, cfg3d), 3 to 3),
+        ("melody 1-D top-k", () => MelodyJoin.topKJoinPrepared(spark, prep1d, 20, cfg1d), 3 to 3))) {
       val group = s"melody-job-count-${System.nanoTime()}"
       val marker = s"$group-marker"
       val jobs = new java.util.concurrent.atomic.AtomicInteger()
@@ -353,12 +358,14 @@ class MelodyJoinSpec extends AnyFunSuite {
         assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
           s"$label: listener never saw the marker job")
         assert(pairs > 0, s"$label: vacuous job count")
-        assert(jobs.get >= 1 && jobs.get <= maxJobs, s"$label: ${jobs.get} jobs")
+        assert(allowedJobs.contains(jobs.get), s"$label: ${jobs.get} jobs")
       } finally {
         sc.clearJobGroup()
         sc.removeSparkListener(listener)
       }
     }
+    prep3d.unpersist()
+    prep1d.unpersist()
   }
 
   test("MrSim group keys spread over hash partitions") {
