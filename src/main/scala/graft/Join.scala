@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.api.MelodyCompat
 
 /** Drop-in CLI parity with the reference's entry point: `graft.Join
   * <conf.properties path>` reads the reference's own
@@ -29,8 +30,11 @@ object Join {
 
   /** Testable core: load the properties file, resolve the four path
     * keys, run the configured engine, write text output. Returns the
-    * output path. Separated from `main` so specs can drive it with
-    * their own session (main owns session lifecycle). */
+    * output path. Histogram lines that do not parse are dropped and their
+    * count is logged to stderr
+    * ([[MelodyCompat.readHistogramTextCounted]]). Separated from `main`
+    * so specs can drive it with their own session (main owns session
+    * lifecycle). */
   def execute(spark: SparkSession, confPath: String): String = {
     val props = new java.util.Properties()
     val in = new java.io.FileInputStream(confPath)
@@ -45,7 +49,10 @@ object Join {
     val bins = req("data.bin.hdfs.path")
     val vectors = req("melody.project.vector.hdfs.path")
     val output = req("data.output.hdfs.path")
-    graft.api.MelodyCompat.runToText(spark, input, bins, vectors, props, output)
+    val (hists, malformed) = MelodyCompat.readHistogramTextCounted(spark, input)
+    System.err.println(s"graft.Join: $malformed malformed histogram line(s) dropped from $input")
+    try MelodyCompat.writeText(MelodyCompat.run(spark, hists, bins, vectors, props), output)
+    finally hists.unpersist()
     output
   }
 

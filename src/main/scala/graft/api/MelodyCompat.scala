@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.HistOps
 import graft.operators.{MelodyJoin, MrSimJoin, BaselineJoin}
@@ -23,23 +23,53 @@ import graft.operators.{MelodyJoin, MrSimJoin, BaselineJoin}
   *   data.dimension, data.bin.number
   *   melody.framework               melody | mrsim | baseline (engine)
   *
-  * Output: pairs DataFrame (rid, sid, dist); `runToText` writes the
+  * Output: pairs DataFrame (rid, sid, dist); `writeText` writes the
   * reference's "rid sid dist" line format.
   */
 object MelodyCompat {
 
-  /** Parse reference-format histogram text into (id, weights). Malformed
-    * lines are dropped (the reference crashes; dropping is kinder at scale
-    * — count them via the metrics if needed). */
-  def readHistogramText(spark: SparkSession, path: String): DataFrame = {
+  /** Parse reference-format histogram text into (id, weights). A line
+    * whose id is not a Long or whose weights are not all Doubles is
+    * dropped (the reference crashes; dropping is kinder at scale);
+    * [[readHistogramTextCounted]] also counts them. */
+  def readHistogramText(spark: SparkSession, path: String): DataFrame =
+    parseHistogramText(spark, path).filter(col("ok")).drop("ok")
+
+  /** [[readHistogramText]] parsed once into a persisted frame (one
+    * `count()`; the caller unpersists it), with the number of lines it
+    * dropped.
+    *
+    * The count is a `Dataset.observe` metric taken by that `count()`. It
+    * is exact under task retry: a failed attempt sends no observed-metric
+    * update. It over-counts only when a partition is parsed twice to
+    * success within that `count()`: a speculative copy (speculation is
+    * off by default) or a re-run of its map stage after lost shuffle
+    * output. Later actions never add to it: an observation keeps the
+    * metrics of the first action only. */
+  def readHistogramTextCounted(spark: SparkSession, path: String): (DataFrame, Long) = {
+    val malformed = Observation("histogram_text")
+    val hists = parseHistogramText(spark, path)
+      .observe(malformed, count_if(not(col("ok"))).as("malformed_lines"))
+      .filter(col("ok")).drop("ok").persist()
+    hists.count()
+    (hists, malformed.get("malformed_lines").asInstanceOf[Long])
+  }
+
+  /** Non-blank lines as (ok, id, weights); a line that does not parse
+    * has ok = false. */
+  private def parseHistogramText(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     spark.read.textFile(path)
       .map(_.trim).filter(_.nonEmpty)
       .map { line =>
         val parts = line.split("\\s+")
-        (parts(0).toLong, parts.drop(1).map(_.toDouble))
+        val ws = parts.iterator.drop(1).map(_.toDoubleOption).toArray
+        parts(0).toLongOption match {
+          case Some(id) if ws.forall(_.isDefined) => (true, id, ws.map(_.get))
+          case _ => (false, 0L, Array.emptyDoubleArray)
+        }
       }
-      .toDF("id", "weights")
+      .toDF("ok", "id", "weights")
   }
 
   /** Read a one-line side file of whitespace-separated doubles
@@ -93,9 +123,13 @@ object MelodyCompat {
 
   /** Execute the configured join over reference-format inputs. */
   def run(spark: SparkSession, histPath: String, binsPath: String,
+          vectorsPath: String, props: java.util.Properties): DataFrame =
+    run(spark, readHistogramText(spark, histPath), binsPath, vectorsPath, props)
+
+  /** [[run]] over histograms already parsed by [[readHistogramText]]. */
+  def run(spark: SparkSession, hists: DataFrame, binsPath: String,
           vectorsPath: String, props: java.util.Properties): DataFrame = {
     val cc = parseProperties(props)
-    val hists = readHistogramText(spark, histPath)
     val bins = readSideFile(spark, binsPath)
     val vectors = readSideFile(spark, vectorsPath)
     require(bins.length == cc.numBins * cc.dimension,
@@ -117,11 +151,8 @@ object MelodyCompat {
     }
   }
 
-  /** Write pairs in the reference's output line format "rid sid dist". */
-  def runToText(spark: SparkSession, histPath: String, binsPath: String,
-                vectorsPath: String, props: java.util.Properties,
-                outPath: String): Unit =
-    run(spark, histPath, binsPath, vectorsPath, props)
-      .select(concat_ws(" ", col("rid"), col("sid"), col("dist")))
+  /** Write a join result as the reference's "rid sid dist" lines. */
+  def writeText(pairs: DataFrame, outPath: String): Unit =
+    pairs.select(concat_ws(" ", col("rid"), col("sid"), col("dist")))
       .write.mode("overwrite").text(outPath)
 }

@@ -946,9 +946,11 @@ object MelodyJoin {
         // tree-feature gap prune — O(numFeatures) flat adds, far cheaper
         // than EMD_BR's normal-CDF integrals, so it runs BEFORE them
         // (cheapest-first; both are pure filters, answer order-invariant).
-        // This ordering was measured, not assumed: the BR memo caps
-        // evaluations at numVectors x side^2 per record, and those
-        // evaluations — not the cell scan — dominate enumeration wall.
+        // The BR memo caps evaluations at numVectors x side^2 per record.
+        // With the rational-approximation Phi (`StdNormal`) they cost
+        // little: in a JFR profile of emdbench cube3d_threshold (seed 21,
+        // 4 cores) enumeration held 32 samples in Phi against 733 in the
+        // cell scan (665 against 753 with commons-math's Phi).
         if (ok && treeFeats != null && cs.treeLo.length > 0) {
           var g = 0.0
           var i = 0

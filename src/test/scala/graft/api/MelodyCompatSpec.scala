@@ -68,8 +68,8 @@ class MelodyCompatSpec extends AnyFunSuite {
     // text output format
     props.setProperty("melody.framework", "melody")
     val out = dir.resolve("out")
-    MelodyCompat.runToText(spark, histPath.toString, binsPath.toString,
-      vecPath.toString, props, out.toString)
+    MelodyCompat.writeText(MelodyCompat.run(spark, histPath.toString,
+      binsPath.toString, vecPath.toString, props), out.toString)
     val lines = Files.list(out).toArray.map(_.toString)
       .filter(_.endsWith(".txt"))
       .flatMap(p => scala.io.Source.fromFile(p).getLines())
@@ -127,5 +127,24 @@ class MelodyCompatSpec extends AnyFunSuite {
     props.setProperty("mr.method.name", "bspb")
     val basePairs = run().toSet
     assert(mrsimPairs == basePairs, "mrsim != baseline under shipped conf")
+  }
+
+  test("malformed histogram lines are dropped and counted, not fatal") {
+    spark.sparkContext.setLogLevel("WARN")
+    val dir = Files.createTempDirectory("melodycompat-malformed")
+    val histPath = dir.resolve("hist.txt")
+    Files.write(histPath, Seq("1 0.5 0.5", "x7 0.25 0.75", "", "2 1 0",
+      "3 0.1 oops", "4 0 1").mkString("\n").getBytes)
+    val (hists, malformed) =
+      MelodyCompat.readHistogramTextCounted(spark, histPath.toString)
+    try {
+      val got = hists.collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
+      assert(got.sortBy(_._1) == Seq(1L -> Seq(0.5, 0.5), 2L -> Seq(1.0, 0.0),
+        4L -> Seq(0.0, 1.0)))
+      assert(malformed == 2L)
+    } finally hists.unpersist()
+    // the plain reader drops the same lines
+    assert(MelodyCompat.readHistogramText(spark, histPath.toString)
+      .collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 4L))
   }
 }

@@ -6,20 +6,24 @@ import scala.util.Random
 
 /** The error-envelope kernel shares Phi/phi evaluations and splits the
   * CDF once per record; its envelopes must stay bit-identical to the
-  * per-area form it replaced, kept here as [[PerArea]]. */
+  * per-area form it replaced, kept here as [[PerArea]]. The Phi/phi
+  * themselves come from [[StdNormal]], pinned to commons-math below. */
 class NormalModelSpec extends AnyFunSuite {
 
   /** The envelope code as it evaluated every area on its own: four Phi
-    * and four phi per split point, `cdf.map(_._1)` per area. */
+    * and four phi per split point, `cdf.map(_._1)` per area. Its Phi/phi
+    * are [[StdNormal]]'s, as the model's are, so the comparison checks
+    * the sharing and splitting bit for bit; its inverse CDF stays a
+    * commons-math `NormalDistribution` per record, which also pins the
+    * model's inlined inverse expression to it bit for bit. */
   private object PerArea {
     private val Eps = 1e-8
-    private val stdNormal = new NormalDistribution(null, 0.0, 1.0)
 
     def normalCdfArea(mu: Double, sigma: Double, a: Double, b: Double): Double = {
       val ta = (a - mu) / sigma
       val tb = (b - mu) / sigma
-      (tb * stdNormal.cumulativeProbability(tb) + stdNormal.density(tb)
-        - ta * stdNormal.cumulativeProbability(ta) - stdNormal.density(ta)) * sigma
+      (tb * StdNormal.cdf(tb) + StdNormal.pdf(tb)
+        - ta * StdNormal.cdf(ta) - StdNormal.pdf(ta)) * sigma
     }
 
     def discreteCdfArea(cdf: Array[(Double, Double)], keyA0: Double, keyB0: Double): Double = {
@@ -98,6 +102,33 @@ class NormalModelSpec extends AnyFunSuite {
     def fullError(mu: Double, sigma: Double, cdf: Array[(Double, Double)],
                   start: Double, end: Double): Double =
       discreteCdfArea(cdf, start, end) - normalCdfArea(mu, sigma, start, end)
+  }
+
+  test("StdNormal cdf and pdf track commons-math on [-40, 40]") {
+    val ref = new NormalDistribution(null, 0.0, 1.0)
+    val split = 0.67448975; val sqrt32 = math.sqrt(32.0)
+    // a dense grid plus each range boundary and its neighbouring doubles
+    val edges = Seq(split, sqrt32, 8.2924, 37.5193, 0.0).flatMap { e =>
+      Seq(e, -e).flatMap(x => Seq(math.nextDown(x), x, math.nextUp(x)))
+    }
+    val n = 2000000
+    val grid = Array.tabulate(n + 1)(i => -40.0 + 80.0 * i / n) ++ edges
+    java.util.Arrays.sort(grid)
+    var maxCdf = 0.0; var maxPdf = 0.0; var prev = 0.0
+    grid.foreach { x =>
+      val c = StdNormal.cdf(x)
+      maxCdf = math.max(maxCdf, math.abs(c - ref.cumulativeProbability(x)))
+      maxPdf = math.max(maxPdf, math.abs(StdNormal.pdf(x) - ref.density(x)))
+      assert(c >= prev, s"cdf decreases at $x: $c < $prev")
+      prev = c
+    }
+    assert(maxCdf <= 1e-15, s"max |cdf - commons-math| = $maxCdf")
+    assert(maxPdf <= 2e-16, s"max |pdf - commons-math| = $maxPdf")
+    assert(StdNormal.cdf(Double.NegativeInfinity) == 0.0)
+    assert(StdNormal.cdf(Double.PositiveInfinity) == 1.0)
+    // a NaN bound must never prune, so it must not come back as 0
+    assert(StdNormal.cdf(Double.NaN).isNaN)
+    assert(StdNormal.pdf(Double.PositiveInfinity) == 0.0)
   }
 
   private def bits(xs: Array[Double]): Seq[Long] =
