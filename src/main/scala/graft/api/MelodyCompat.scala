@@ -19,9 +19,12 @@ import graft.operators.{MelodyJoin, MrSimJoin, BaselineJoin}
   *   melody.join.k
   *   melody.grid.cell.granularity
   *   melody.project.vector.number
-  *   melody.normal.error.interval
   *   data.dimension, data.bin.number
   *   melody.framework               melody | mrsim | baseline (engine)
+  *
+  * `melody.normal.error.interval` is accepted and ignored: the grid's
+  * EMD_BR bound takes its normal-approximation error over each vector's
+  * whole domain, so there are no error intervals to size.
   *
   * Output: pairs DataFrame (rid, sid, dist); `writeText` writes the
   * reference's "rid sid dist" line format.
@@ -84,7 +87,6 @@ object MelodyCompat {
       k: Int,
       grid: Int,
       numVectors: Int,
-      numIntervals: Int,
       dimension: Int,
       numBins: Int,
       framework: String,
@@ -96,7 +98,6 @@ object MelodyCompat {
     k = props.getProperty("melody.join.k", "20").toInt,
     grid = props.getProperty("melody.grid.cell.granularity", "4").toInt,
     numVectors = props.getProperty("melody.project.vector.number", "3").toInt,
-    numIntervals = props.getProperty("melody.normal.error.interval", "5").toInt,
     dimension = props.getProperty("data.dimension", "3").toInt,
     numBins = props.getProperty("data.bin.number", "8").toInt,
     // the reference's engine selector is ConfUtils.METHOD =
@@ -117,8 +118,7 @@ object MelodyCompat {
       dimension = cc.dimension,
       bins = bins,
       vectors = vecs,
-      sideNum = cc.grid,
-      numIntervals = cc.numIntervals)
+      sideNum = cc.grid)
   }
 
   /** Execute the configured join over reference-format inputs. */

@@ -111,32 +111,13 @@ final class SkewedGrid(
 
   /** Position of a record relative to a cell (by intercept-count deltas).
     * Reference behavior: Grid.locateRecordToGrid:545-583. */
-  def locate(point: Array[Double], gridId: Int): Direction = {
-    val cellSW = gridId % sideNum
-    val cellSE = gridId / sideNum
-    val sw = countSW(point) - cellSW
-    val se = countSE(point) - cellSE
-    var dir: Direction =
-      if (sw > 0 && se > 0) Direction.Northern
-      else if (sw > 0 && se == 0) Direction.Northwestern
-      else if (sw > 0 && se < 0) Direction.Western
-      else if (sw == 0 && se > 0) Direction.Northeastern
-      else if (sw == 0 && se < 0) Direction.Southwestern
-      else if (sw < 0 && se > 0) Direction.Eastern
-      else if (sw < 0 && se == 0) Direction.Southeastern
-      else if (sw < 0 && se < 0) Direction.Southern
-      else Direction.Inner
-    val eps = 1e-6
-    if ((math.abs(point(0) - domain(0)) <= eps && math.abs(point(1) - domain(2)) <= eps) ||
-        (math.abs(point(0) - domain(1)) <= eps && math.abs(point(1) - domain(3)) <= eps))
-      dir = Direction.Inner
-    dir
-  }
+  def locate(point: Array[Double], gridId: Int): Direction =
+    locateByCounts(countSW(point), countSE(point), isDomainCorner(point), gridId)
 
-  /** Direction from precomputed record intercept counts (countSW/countSE
-    * evaluated ONCE per record, not per candidate cell) — same result as
-    * locate(). isCorner = record coincides with a domain corner (the
-    * reference's special case forcing Inner). */
+  /** [[locate]] from the record's intercept counts, which a caller
+    * scanning many cells evaluates once per record. isCorner = record
+    * coincides with a domain corner (the reference's special case forcing
+    * Inner). */
   def locateByCounts(recSW: Int, recSE: Int, isCorner: Boolean, gridId: Int): Direction = {
     if (isCorner) return Direction.Inner
     val sw = recSW - gridId % sideNum
@@ -215,55 +196,50 @@ final class SkewedGrid(
       cdfDiff(rec, cell, tMin, inter) + cdfDiff(rec, cell, inter, tMax)
   }
 
-  /** Error-envelope correction for EMD_BR. Record errors are
-    * [min,max]*I + full (length 2I+1); cell errors are [min,max]*I +
-    * minFull + maxFull (length 2I+2).
-    * Reference behavior: Grid.getEmdBrError:1040-1096. */
-  private def emdBrError(dominated: (Double, Double), dominatedErr: Array[Double],
-                         dominator: (Double, Double), dominatorErr: Array[Double],
-                         numInterval: Int, partial: Boolean): Double = {
-    if (!partial) {
-      val inter = NormalModel.cdfIntersection(dominated._1, dominated._2,
-        dominator._1, dominator._2)
-      if (inter <= t(0) || inter >= t(1))
-        -dominatorErr(dominatorErr.length - 1) + dominatedErr(2 * numInterval)
-      else {
-        var ii = math.floor((inter - t(0)) / ((t(1) - t(0)) / numInterval)).toInt
-        if (ii < 0) ii = 0
-        if (ii >= numInterval) ii = numInterval - 1
-        -dominatorErr(ii * 2 + 1) + dominatedErr(2 * ii)
-      }
-    } else {
-      var maxErr = -Double.MaxValue
-      var minErr = Double.MaxValue
-      var i = 0
-      while (i < numInterval) {
-        if (dominatorErr(2 * i + 1) > maxErr) maxErr = dominatorErr(2 * i + 1)
-        if (dominatedErr(2 * i) < minErr) minErr = dominatedErr(2 * i)
-        i += 1
-      }
-      -maxErr + minErr
-    }
-  }
-
   /** EMD_BR: lower bound on the 1-D (projected) EMD between a record and
     * ANY record inside a grid cell, by dominance case analysis on the
     * record's position relative to the cell.
     *
     * @param record (m, b) Hough point of the record on this vector
-    * @param recordErr record's error envelope, length 2I+1 (envelope+full)
+    * @param recordErr the record's error scalars [eMin, eMax, eFull]
+    *   ([[NormalModel.minMaxError]], [[NormalModel.fullError]])
     * @param gridId the candidate cell on this vector's grid
-    * @param gridErr cell's aggregated envelope, length 2I+2
+    * @param gridErr the cell's [min eMin, max eMax, min eFull, max eFull]
+    *   over its members
     * Reference behavior: Grid.getEmdBr:884-1009. */
   def emdBr(record: Array[Double], recordErr: Array[Double], gridId: Int,
-            gridErr: Array[Double], numInterval: Int): Double = {
-    val bound = cellBound(gridId)
-    emdBrWithBound(record, recordErr, bound, gridErr, locate(record, gridId), numInterval)
-  }
+            gridErr: Array[Double]): Double =
+    emdBrWithBound(record, recordErr, cellBound(gridId), gridErr, locate(record, gridId))
 
+  /** [[emdBr]] with the cell's corners and the record's direction given.
+    *
+    * Soundness. Write F for a discrete CDF, G for its fitted normal's
+    * and e(p) = int_t0^p (F - G) - int_p^t1 (F - G) for the signed error
+    * at a split point p ([[NormalModel.errorAt]]). For a record r, a
+    * member m and any split point p,
+    *   EMD1(r, m) >= |int_t0^p (F_r - F_m)| + |int_p^t1 (F_r - F_m)|
+    *             >= |int_t0^p (G_r - G_m) - int_p^t1 (G_r - G_m)
+    *                 + e_r(p) - e_m(p)|.
+    * The pair's normal EMD N = int |G_r - G_m| is at least the corner
+    * term the dominance geometry computes.
+    *  - Northern/Southern: the record's normal lies above (below) every
+    *    member's on the whole domain, so at p = t1 the normal part is N
+    *    (-N) and e(t1) = eFull. Northern gives corner + eFull_r - max
+    *    eFull over the cell; Southern gives corner + min eFull - eFull_r.
+    *  - Every partial direction: two normal CDFs cross at most once, so
+    *    at their crossing p (or at t1 when it lies outside the domain)
+    *    the normal part is +-N and EMD1 >= N - |e_r(p) - e_m(p)|. A
+    *    member's crossing is unknown, so only the whole-domain brackets
+    *    [eMin, eMax] of e hold there; since e(t0) = -eFull and
+    *    e(t1) = eFull lie inside them, the same brackets cover members
+    *    whose normal never crosses the record's. So
+    *    |e_r(p) - e_m(p)| <= max(max eMax - eMin_r, eMax_r - min eMin),
+    *    and the bound is the corner term plus
+    *    min(eMin_r - max eMax, min eMin - eMax_r); for E/W the corner
+    *    term is the smaller of the lower- and upper-corner terms. */
   def emdBrWithBound(record: Array[Double], recordErr: Array[Double],
                      gridBound: Array[Double], gridErr: Array[Double],
-                     direction: Direction, numInterval: Int): Double = {
+                     direction: Direction): Double = {
     val recN = (record(1) * (1.0 / record(0)) * -1.0, 1.0 / record(0))
     val lower = Array(gridBound(0), gridBound(1))
     val upper = Array(gridBound(2), gridBound(3))
@@ -276,17 +252,12 @@ final class SkewedGrid(
     val cellLineSE = line(lower, slopes(1))
     val cellLineSW = line(lower, slopes(0))
 
-    var dist = 0.0
     var isN: (Double, Double) = (0.0, 1.0)
     direction match {
       case Direction.Northern =>
-        dist = emdBrNormal(recN, upperN) +
-          emdBrError(recN, recordErr, upperN, gridErr, numInterval, partial = false)
-        return math.max(dist, 0.0)
+        return math.max(emdBrNormal(recN, upperN) + recordErr(2) - gridErr(3), 0.0)
       case Direction.Southern =>
-        dist = emdBrNormal(recN, lowerN) +
-          emdBrError(lowerN, gridErr, recN, recordErr, numInterval, partial = false)
-        return math.max(dist, 0.0)
+        return math.max(emdBrNormal(recN, lowerN) + gridErr(2) - recordErr(2), 0.0)
       case Direction.Northeastern =>
         isN = pointNormal(intersection(line(record, slopes(1)), cellLineNE))
       case Direction.Northwestern =>
@@ -304,26 +275,16 @@ final class SkewedGrid(
     }
     if (isN._2 < 0) return 0.0
 
-    direction match {
-      case Direction.Northeastern | Direction.Northwestern =>
-        dist = 0.5 * (emdBrNormal(upperN, recN) + emdBrNormal(isN, recN) -
-          emdBrNormal(isN, upperN))
-        dist += emdBrError(recN, recordErr, upperN, gridErr, numInterval, partial = true)
-      case Direction.Southeastern | Direction.Southwestern =>
-        dist = 0.5 * (emdBrNormal(lowerN, recN) + emdBrNormal(isN, recN) -
-          emdBrNormal(isN, lowerN))
-        dist += emdBrError(lowerN, gridErr, recN, recordErr, numInterval, partial = true)
-      case Direction.Eastern | Direction.Western =>
-        val viaLower = 0.5 * (emdBrNormal(lowerN, recN) + emdBrNormal(isN, recN) -
-          emdBrNormal(isN, lowerN)) +
-          emdBrError(lowerN, gridErr, recN, recordErr, numInterval, partial = true)
-        val viaUpper = 0.5 * (emdBrNormal(upperN, recN) + emdBrNormal(isN, recN) -
-          emdBrNormal(isN, upperN)) +
-          emdBrError(recN, recordErr, upperN, gridErr, numInterval, partial = true)
-        dist = math.min(viaLower, viaUpper)
-      case _ => ()
+    def viaCorner(cornerN: (Double, Double)): Double =
+      0.5 * (emdBrNormal(cornerN, recN) + emdBrNormal(isN, recN) -
+        emdBrNormal(isN, cornerN))
+    val normal = direction match {
+      case Direction.Northeastern | Direction.Northwestern => viaCorner(upperN)
+      case Direction.Southeastern | Direction.Southwestern => viaCorner(lowerN)
+      case _ => math.min(viaCorner(lowerN), viaCorner(upperN)) // Eastern, Western
     }
-    math.max(dist, 0.0)
+    val err = math.min(recordErr(0) - gridErr(1), gridErr(0) - recordErr(1))
+    math.max(normal + err, 0.0)
   }
 }
 

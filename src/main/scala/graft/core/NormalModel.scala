@@ -3,13 +3,13 @@ package graft.core
 import org.apache.commons.math3.special.Erf
 
 /** Normal-approximation machinery for the EMD lower bounds: fit a normal to
-  * each record's 1-D projection, bound the gap between the normal CDF and
-  * the true discrete CDF with per-interval error envelopes, and derive
-  * closed-form EMD lower bounds between records (and, via the grid, between
-  * a record and a whole cell of records).
+  * each record's 1-D projection and bound the gap between the normal CDF
+  * and the true discrete CDF by three error scalars per record, from which
+  * the grid derives closed-form EMD lower bounds between a record and a
+  * whole cell of records (EMD_BR, [[SkewedGrid.emdBrWithBound]]).
   *
   * Reference behavior: utils/HistUtil.java:280-304 (fit),
-  * :323-343 (CDF area), :354-434 (error envelopes), :68-116 (normal EMD LB).
+  * :323-343 (CDF area), :354-434 (error envelopes).
   */
 object NormalModel {
   private val Eps = 1e-8
@@ -113,108 +113,47 @@ object NormalModel {
   def errorAt(mu: Double, sigma: Double, cdf: Array[(Double, Double)], pt: Double): Double =
     new ErrorModel(mu, sigma, cdf).errorAt(pt)
 
-  /** Per-interval (min, max) of errorAt over the record's domain split into
-    * numIntervals equal intervals; evaluated at interval endpoints, discrete
-    * CDF steps, and normal-CDF crossings of each step level.
-    * Returns flattened [min0, max0, min1, max1, ...].
+  /** (min, max) of [[errorAt]] over the record's whole domain [first,
+    * last]. errorAt is continuous with slope 2 (F - G) between keys (F the
+    * step CDF, G the normal's), so its extremes lie at the keys (the ends
+    * among them), where F jumps, and at each segment's crossing
+    * G^-1(cums(j)) in (keys(j), keys(j+1)), where F - G changes sign; the
+    * last key's cumulative is 1, so segments j = 0..n-2 are all there is.
+    * Together with [[fullError]] these are the record's three EMD_BR
+    * error scalars ([[SkewedGrid.emdBrWithBound]]).
     * The normal's inverse CDF is commons-math 3.6.1's own expression
     * (`NormalDistribution.inverseCumulativeProbability`), so the crossing
     * points keep its bits without building a distribution per record.
-    * Reference behavior: HistUtil.getMinMaxError:354-387,398-417. */
-  def minMaxError(mu: Double, sigma: Double, cdf: Array[(Double, Double)],
-                  numIntervals: Int): Array[Double] = {
+    * Reference behavior: HistUtil.getMinMaxError:354-387,398-417, with
+    * one interval spanning the domain. */
+  def minMaxError(mu: Double, sigma: Double, cdf: Array[(Double, Double)]): Array[Double] = {
     val model = new ErrorModel(mu, sigma, cdf)
     val keys = model.keys; val cums = model.cums
-    val first = model.first; val last = model.last
-    val len = (last - first) / numIntervals
-    val out = new Array[Double](2 * numIntervals)
-    var i = 0
-    while (i < numIntervals) {
-      val start = first + i * len
-      val end = first + (i + 1) * len
-      val pts = scala.collection.mutable.TreeSet[Double](start, end)
-      var j = 0
-      while (j < keys.length) {
-        val k = keys(j)
-        if (start < k && k < end && j + 1 < keys.length) {
-          pts += k
-          val p = math.min(math.max(cums(j), Eps), 1 - Eps)
-          val potential = mu + sigma * Sqrt2 * Erf.erfInv(2 * p - 1)
-          val nextKey = keys(j + 1)
-          if (potential > k && potential < end && potential < last && potential < nextKey)
-            pts += potential
-        }
-        j += 1
-      }
-      var mn = Double.MaxValue; var mx = -Double.MaxValue
-      pts.foreach { p =>
-        val e = model.errorAt(p)
-        if (e < mn) mn = e
-        if (e > mx) mx = e
-      }
-      out(2 * i) = mn
-      out(2 * i + 1) = mx
-      i += 1
+    var mn = Double.MaxValue; var mx = -Double.MaxValue
+    def visit(pt: Double): Unit = {
+      val e = model.errorAt(pt)
+      if (e < mn) mn = e
+      if (e > mx) mx = e
     }
-    out
+    var j = 0
+    while (j < keys.length) {
+      visit(keys(j))
+      if (j + 1 < keys.length) {
+        val p = math.min(math.max(cums(j), Eps), 1 - Eps)
+        val crossing = mu + sigma * Sqrt2 * Erf.erfInv(2 * p - 1)
+        if (crossing > keys(j) && crossing < keys(j + 1)) visit(crossing)
+      }
+      j += 1
+    }
+    Array(mn, mx)
   }
 
-  /** Total signed error over the full domain.
+  /** Total signed error over the full domain: [[errorAt]] at `end` when
+    * [start, end] is the record's domain.
     * Reference behavior: HistUtil.getFullError:424-426. */
   def fullError(mu: Double, sigma: Double, cdf: Array[(Double, Double)],
                 start: Double, end: Double): Double =
     discreteCdfArea(cdf, start, end) - normalCdfArea(mu, sigma, start, end)
-
-  /** Envelope lookup for the interval containing `point`.
-    * Reference behavior: HistUtil.lookupError:410-422. */
-  def lookupError(minMaxErr: Array[Double], min: Boolean,
-                  start: Double, end: Double, point: Double): Double = {
-    val numIntervals = minMaxErr.length / 2
-    val len = (end - start) / numIntervals
-    var interval = math.floor((point - start) / len).toInt
-    if (interval < 0) interval = 0
-    if (interval >= numIntervals) interval = numIntervals - 1
-    if (min) minMaxErr(2 * interval) else minMaxErr(2 * interval + 1)
-  }
-
-  /** Normal EMD lower bound between two records on one projection: the
-    * |area between the two normal CDFs| corrected by each record's error
-    * envelope so it never exceeds the true 1-D EMD.
-    * Reference behavior: utils/HistUtil.java:68-116. */
-  def normalEmd(histA: Array[Double], histB: Array[Double], bins: Array[Double],
-                numIntervals: Int): Double = {
-    val (muA, sigA) = HistOps.fitNormal(HistOps.normalize(histA), bins)
-    val (muB, sigB) = HistOps.fitNormal(HistOps.normalize(histB), bins)
-    val cdfA = HistOps.discreteCdfNormalized(histA, bins)
-    val cdfB = HistOps.discreteCdfNormalized(histB, bins)
-    val intersect = cdfIntersection(muA, sigA, muB, sigB)
-    val errA = minMaxError(muA, sigA, cdfA, numIntervals)
-    val errB = minMaxError(muB, sigB, cdfB, numIntervals)
-    val tMin = cdfA.head._1
-    val tMax = cdfA.last._1
-    val fullA = fullError(muA, sigA, cdfA, tMin, tMax)
-    val fullB = fullError(muB, sigB, cdfB, tMin, tMax)
-    var dist = 0.0
-    if (intersect > tMin && intersect < tMax) {
-      val areaA1 = normalCdfArea(muA, sigA, tMin, intersect)
-      val areaB1 = normalCdfArea(muB, sigB, tMin, intersect)
-      val areaA2 = normalCdfArea(muA, sigA, intersect, tMax)
-      val areaB2 = normalCdfArea(muB, sigB, intersect, tMax)
-      dist = math.abs(areaA1 - areaB1) + math.abs(areaA2 - areaB2)
-      val dominance = areaA1 - areaB1
-      if (dominance <= 0)
-        dist = dist - lookupError(errA, min = false, tMin, tMax, intersect) +
-          lookupError(errB, min = true, tMin, tMax, intersect)
-      else
-        dist = dist + lookupError(errA, min = true, tMin, tMax, intersect) -
-          lookupError(errB, min = false, tMin, tMax, intersect)
-    } else {
-      dist = normalCdfArea(muA, sigA, tMin, tMax) - normalCdfArea(muB, sigB, tMin, tMax)
-      if (dist < 0) dist = math.abs(dist) - fullA + fullB
-      else if (dist > 0) dist = math.abs(dist) + fullA - fullB
-    }
-    if (dist < 0) 0.0 else dist
-  }
 
   /** Projection EMD lower bound across multiple vectors:
     * (1/sqrt(numVectors)) * sum of per-vector 1-D EMDs.

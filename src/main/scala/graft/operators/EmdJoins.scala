@@ -30,10 +30,6 @@ object EmdJoins {
                       radius: Double): DataFrame =
     bandedSelfPairs2(df, idCol, keyCol, None, radius)
 
-  /** Two-key variant: blocks on (key1, key2) bands jointly — both keys
-    * must be `radius`-Lipschitz lower bounds of the pair distance. The
-    * right side replicates into the 3x3 neighbor bands (9 copies), cutting
-    * candidates multiplicatively while keeping perfect recall. */
   /** K-key generalization of [[bandedSelfPairs2]]: each key bands at
     * its OWN radius and the HALF-SPACE neighbor offsets join on the
     * band tuple. Multiplying independent 1-Lipschitz keys is the
@@ -110,6 +106,10 @@ object EmdJoins {
       Seq(s"_band${i}_a", s"_band${i}_b")): _*)
   }
 
+  /** Two-key variant: blocks on (key1, key2) bands jointly — both keys
+    * must be `radius`-Lipschitz lower bounds of the pair distance. The
+    * right side replicates into the 3x3 neighbor bands (9 copies), cutting
+    * candidates multiplicatively while keeping perfect recall. */
   def bandedSelfPairs2(df: DataFrame, idCol: String, keyCol: String,
                        key2Col: Option[String], radius: Double): DataFrame = {
     require(radius > 0, "radius must be positive")
@@ -249,6 +249,14 @@ object EmdJoins {
   def treeEmd3dThresholdJoin(hists: DataFrame, tau: Double): DataFrame =
     treeEmdJoinLevels(hists, tau, 8, KdLevels3d)
 
+  /** The cube-corner KR-dual exact solver as a drop-in for the cascade
+    * solver slot (cost matrix ignored — the closed form IS this
+    * metric's; CubeKRSpec pins equality with SSP and simplex). A
+    * genuinely different distance kernel from the melody engine's SSP,
+    * which strengthens the cross-engine witness. */
+  val cubeKrSolver: (Array[Double], Array[Double], Array[Double]) => Double =
+    (wa, wb, _) => graft.core.CubeKR.emdFromWeights(wa, wb)
+
   /** EXACT 3-D EMD threshold self-join via tree-embedding candidates —
     * the FlowTree-style two-stage design (Backurs et al., ICML 2020):
     * every qualifying pair satisfies EMD_T <= 2 * EMD <= 2 * theta (the
@@ -272,14 +280,6 @@ object EmdJoins {
     * prove the simplex audit catches a regression both engines would
     * otherwise agree on (they share Emd.exact); production callers never
     * pass it. */
-  /** The cube-corner KR-dual exact solver as a drop-in for the cascade
-    * solver slot (cost matrix ignored — the closed form IS this
-    * metric's; CubeKRSpec pins equality with SSP and simplex). A
-    * genuinely different distance kernel from the melody engine's SSP,
-    * which strengthens the cross-engine witness. */
-  val cubeKrSolver: (Array[Double], Array[Double], Array[Double]) => Double =
-    (wa, wb, _) => graft.core.CubeKR.emdFromWeights(wa, wb)
-
   def treeExact3dThresholdJoin(hists: DataFrame, theta: Double,
       solver: (Array[Double], Array[Double], Array[Double]) => Double =
         cubeKrSolver): DataFrame = {

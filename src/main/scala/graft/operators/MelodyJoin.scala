@@ -95,7 +95,6 @@ object MelodyJoin {
       bins: Array[Double],
       vectors: Array[Array[Double]],
       sideNum: Int = 4,
-      numIntervals: Int = 5,
       numDuals: Int = 10,
       numReductions: Int = 10,
       reducedDim: Int = 8,
@@ -121,6 +120,11 @@ object MelodyJoin {
       "each Lipschitz potential needs one value per bin")
     val numBins: Int = bins.length / dimension
     val numVectors: Int = vectors.length
+    /** The reference's error-interval count (`melody.normal.error.interval`,
+      * default 5). Nothing reads it: EMD_BR's error scalars span each
+      * vector's whole domain. Kept, fixed, for callers that still write
+      * the key into a reference-format conf. */
+    def numIntervals: Int = 5
     /** Centered projected bins per vector (driver-side precompute;
       * reference: NEPreMapper.java:99, HistUtil.projectBins). */
     val projBins: Array[Array[Double]] = vectors.map { v =>
@@ -210,8 +214,6 @@ object MelodyJoin {
     }
   }
 
-  private val ErrLen: Config => Int = cfg => 2 * cfg.numIntervals + 1
-
   /** One record in a Phase-3 group, the unit of the shared sweep
     * ([[sweepSelf]], [[sweepCross]]). In a melody combo's group it is a
     * native of the combo (`native`) or a guest copy replicated there by
@@ -271,7 +273,7 @@ object MelodyJoin {
       combo: Long,
       count: Long,
       cells: Array[Int],          // per-vector cell id
-      gridErrs: Array[Array[Double]], // per vector, length 2I+2
+      gridErrs: Array[Array[Double]], // per vector: min eMin, max eMax, min/max eFull
       dualKeyMin: Array[Double],
       dualKeyMax: Array[Double],
       rubnerLo: Array[Double],
@@ -518,11 +520,11 @@ object MelodyJoin {
       val gs = gridsB.value
       val ds = dualsB.value
       val tr = treeB.value
-      val el = ErrLen(c)
       it.map { case (id, w0) =>
         val w = HistOps.normalize(w0)
         val mb = new Array[Double](2 * c.numVectors)
-        val errors = new Array[Double](c.numVectors * el)
+        // per vector: [eMin, eMax, eFull] (SkewedGrid.emdBrWithBound)
+        val errors = new Array[Double](3 * c.numVectors)
         val cells = new Array[Int](c.numVectors)
         var j = 0
         while (j < c.numVectors) {
@@ -530,10 +532,8 @@ object MelodyJoin {
           mb(2 * j) = 1.0 / sig
           mb(2 * j + 1) = -mu / sig
           val cdf = HistOps.discreteCdfNormalized(w, c.projBins(j))
-          val env = NormalModel.minMaxError(mu, sig, cdf, c.numIntervals)
-          System.arraycopy(env, 0, errors, j * el, env.length)
-          errors(j * el + 2 * c.numIntervals) =
-            NormalModel.fullError(mu, sig, cdf, cdf.head._1, cdf.last._1)
+          System.arraycopy(NormalModel.minMaxError(mu, sig, cdf), 0, errors, 3 * j, 2)
+          errors(3 * j + 2) = NormalModel.fullError(mu, sig, cdf, cdf.head._1, cdf.last._1)
           cells(j) = gs(j).gridId(Array(mb(2 * j), mb(2 * j + 1)))
           j += 1
         }
@@ -551,7 +551,7 @@ object MelodyJoin {
     * collected (O(cells)) and broadcast.
     *
     * Computed as ONE mapPartitions + treeReduce map merge instead of a
-    * Catalyst groupBy with ~2*(V*I + V + duals + dim + treeFeats) agg
+    * Catalyst groupBy with ~2*(2V + duals + dim + treeFeats) agg
     * columns: at fine grids the combos are near-singleton groups, so the
     * wide agg did no combining — its cost was Catalyst
     * planning/codegen of the 100+ expression aggregate plus the
@@ -567,14 +567,12 @@ object MelodyJoin {
   def summarize(enriched: DataFrame, cfg: Config,
                 numDuals: Int = -1, numTreeFeats: Int = 0): Array[CellSummary] = {
     val nDuals = if (numDuals >= 0) numDuals else cfg.numDuals
-    val el = ErrLen(cfg)
     val nV = cfg.numVectors
-    val nI = cfg.numIntervals
     val dim = cfg.dimension
-    // bounds layout: [minE/maxE (j,i)-major | minF/maxF per j |
+    // bounds layout: [minEMin/maxEMax/minF/maxF per j |
     //                 minK/maxK per dual | minR/maxR per dim |
     //                 minT/maxT per tree feat]
-    val bLen = 2 * (nV * nI + nV + nDuals + dim + numTreeFeats)
+    val bLen = 2 * (2 * nV + nDuals + dim + numTreeFeats)
     type Acc = SummaryAcc
     val rows = enriched
       .select(col("combo"), col("errors"), col("dualKeys"), col("rubner"),
@@ -592,17 +590,10 @@ object MelodyJoin {
         var p = 0
         var j = 0
         while (j < nV) {
-          var i = 0
-          while (i < nI) {
-            vals(p) = errors(j * el + 2 * i); vals(p + 1) = errors(j * el + 2 * i + 1)
-            p += 2; i += 1
-          }
-          j += 1
-        }
-        j = 0
-        while (j < nV) {
-          val f = errors(j * el + 2 * nI)
-          vals(p) = f; vals(p + 1) = f; p += 2; j += 1
+          val f = errors(3 * j + 2)
+          vals(p) = errors(3 * j); vals(p + 1) = errors(3 * j + 1)
+          vals(p + 2) = f; vals(p + 3) = f
+          p += 4; j += 1
         }
         var k = 0
         while (k < nDuals) {
@@ -648,16 +639,9 @@ object MelodyJoin {
     total.entrySet().asScala.toArray.sortBy(_.getKey).map { e =>
       val combo = e.getKey
       val acc = e.getValue
-      var idx = 0
-      val gridErrs = Array.ofDim[Double](nV, 2 * nI + 2)
-      for (j <- 0 until nV; i <- 0 until nI) {
-        gridErrs(j)(2 * i) = acc.b(idx); idx += 1
-        gridErrs(j)(2 * i + 1) = acc.b(idx); idx += 1
-      }
-      for (j <- 0 until nV) {
-        gridErrs(j)(2 * nI) = acc.b(idx); idx += 1
-        gridErrs(j)(2 * nI + 1) = acc.b(idx); idx += 1
-      }
+      val gridErrs =
+        Array.tabulate(nV)(j => java.util.Arrays.copyOfRange(acc.b, 4 * j, 4 * j + 4))
+      var idx = 4 * nV
       val dMin = new Array[Double](nDuals)
       val dMax = new Array[Double](nDuals)
       for (k <- 0 until nDuals) {
@@ -841,15 +825,16 @@ object MelodyJoin {
     val rubner = rec.getSeq[Double](7).toArray
     val treeFeats =
       if (treeGapLimit >= 0) rec.getSeq[Double](8).toArray else null
-    val el = 2 * cfg.numIntervals + 1
     // dual ranges depend only on the record — hoist out of the cell loop
-    // (the keys are the enrichment pass's precomputed dot products)
+    // (the keys are the enrichment pass's precomputed dot products). They
+    // carry the cell prunes' 1e-9 slack: on dyadic count ratios at theta
+    // 0.5 a partner at EMD exactly theta sat 1.1e-16 outside its range
     val rangeLo = new Array[Double](duals.length)
     val rangeHi = new Array[Double](duals.length)
     var d = 0
     while (d < duals.length) {
-      rangeLo(d) = duals(d).min + dualKeys(d) - theta
-      rangeHi(d) = theta - dualCKeys(d)
+      rangeLo(d) = duals(d).min + dualKeys(d) - theta - 1e-9
+      rangeHi(d) = theta - dualCKeys(d) + 1e-9
       d += 1
     }
     // per-record, per-vector precomputes hoisted out of the cell loop:
@@ -863,7 +848,7 @@ object MelodyJoin {
     var j = 0
     while (j < cfg.numVectors) {
       recMbs(j) = Array(mb(2 * j), mb(2 * j + 1))
-      recErrs(j) = java.util.Arrays.copyOfRange(errors, j * el, (j + 1) * el)
+      recErrs(j) = java.util.Arrays.copyOfRange(errors, 3 * j, 3 * j + 3)
       recSW(j) = grids(j).countSW(recMbs(j))
       recSE(j) = grids(j).countSE(recMbs(j))
       corner(j) = grids(j).isDomainCorner(recMbs(j))
@@ -892,8 +877,7 @@ object MelodyJoin {
         val env = perVectorEnv(j)(cellId)
         memo(cellId) =
           if (env == null) 0.0
-          else g.emdBrWithBound(recMbs(j), recErrs(j), g.cellBounds(cellId),
-            env, dir, cfg.numIntervals)
+          else g.emdBrWithBound(recMbs(j), recErrs(j), g.cellBounds(cellId), env, dir)
       }
       memo(cellId)
     }
@@ -993,7 +977,6 @@ object MelodyJoin {
       summaries.foreach(s => s.cells.foreach(c => if (c > mx) mx = c))
       mx + 1
     }
-    val envLen = 2 * cfg.numIntervals + 2
     val out = Array.fill(cfg.numVectors)(new Array[Array[Double]](side2))
     summaries.foreach { cs =>
       var j = 0
@@ -1003,7 +986,7 @@ object MelodyJoin {
         if (cur == null) out(j)(cellId) = cs.gridErrs(j).clone()
         else {
           var i = 0
-          while (i < envLen) {
+          while (i < cur.length) {
             // even slots are mins, odd slots are maxes
             if ((i & 1) == 0) { if (cs.gridErrs(j)(i) < cur(i)) cur(i) = cs.gridErrs(j)(i) }
             else { if (cs.gridErrs(j)(i) > cur(i)) cur(i) = cs.gridErrs(j)(i) }
@@ -1067,7 +1050,7 @@ object MelodyJoin {
 
   private def cfgKey(cfg: Config): Product = (
     cfg.dimension, cfg.bins.toSeq, cfg.vectors.map(_.toSeq).toSeq,
-    cfg.sideNum, cfg.numIntervals, cfg.numDuals, cfg.numReductions,
+    cfg.sideNum, cfg.numDuals, cfg.numReductions,
     cfg.reducedDim, cfg.seed, cfg.groundDist, cfg.exactQuantiles,
     cfg.lipschitzPotentials.map(_.toSeq).toSeq)
 

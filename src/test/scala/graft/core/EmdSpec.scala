@@ -177,7 +177,6 @@ class EmdSpec extends AnyFunSuite {
   }
 
   test("all lower bounds are <= exact EMD; upper bounds >= exact EMD") {
-    val numIntervals = 5
     for (trial <- 0 until 30) {
       val n = 4 + rnd.nextInt(8)
       val d = 1 + rnd.nextInt(3)
@@ -224,20 +223,6 @@ class EmdSpec extends AnyFunSuite {
       // D13 max-flow upper bound
       val mf = Emd.maxFlow(HistOps.normalize(a), cost)
       assert(mf >= exact - tol, s"maxflow $mf < exact $exact")
-    }
-  }
-
-  test("normal EMD lower bound <= true 1-D EMD on the same projection") {
-    for (trial <- 0 until 30) {
-      val n = 4 + rnd.nextInt(8)
-      val a = randHist(n); val b = randHist(n)
-      // distinct sorted 1-D bins
-      val bins = Array.fill(n)(rnd.nextDouble() * 10).distinct
-      if (bins.length == n) {
-        val true1d = Emd.emd1d(a, b, bins)
-        val lb = NormalModel.normalEmd(a, b, bins, 5)
-        assert(lb <= true1d + 1e-7, s"trial $trial normalEmd $lb > 1dEMD $true1d")
-      }
     }
   }
 

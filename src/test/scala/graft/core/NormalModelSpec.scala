@@ -1,13 +1,16 @@
 package graft.core
 
 import org.apache.commons.math3.distribution.NormalDistribution
+import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 
 /** The error-envelope kernel shares Phi/phi evaluations and splits the
   * CDF once per record; its envelopes must stay bit-identical to the
-  * per-area form it replaced, kept here as [[PerArea]]. The Phi/phi
-  * themselves come from [[StdNormal]], pinned to commons-math below. */
+  * per-area form it replaced, kept here as [[PerArea]], and must bracket
+  * the signed error everywhere on the record's domain, which EMD_BR's
+  * soundness rests on. The Phi/phi themselves come from [[StdNormal]],
+  * pinned to commons-math below. */
 class NormalModelSpec extends AnyFunSuite {
 
   /** The envelope code as it evaluated every area on its own: four Phi
@@ -62,41 +65,22 @@ class NormalModelSpec extends AnyFunSuite {
       before - after
     }
 
-    def minMaxError(mu: Double, sigma: Double, cdf: Array[(Double, Double)],
-                    numIntervals: Int): Array[Double] = {
+    /** errorAt at the domain's keys and at each segment's crossing of
+      * the normal with the step, as one TreeSet. */
+    def minMaxError(mu: Double, sigma: Double, cdf: Array[(Double, Double)]): Array[Double] = {
       val normal = new NormalDistribution(null, mu, sigma)
-      val first = cdf.head._1; val last = cdf.last._1
-      val len = (last - first) / numIntervals
-      val out = new Array[Double](2 * numIntervals)
-      var i = 0
-      while (i < numIntervals) {
-        val start = first + i * len
-        val end = first + (i + 1) * len
-        val pts = scala.collection.mutable.TreeSet[Double](start, end)
-        var j = 0
-        while (j < cdf.length) {
-          val (k, cum) = cdf(j)
-          if (start < k && k < end && j + 1 < cdf.length) {
-            pts += k
-            val p = math.min(math.max(cum, Eps), 1 - Eps)
-            val potential = normal.inverseCumulativeProbability(p)
-            val nextKey = cdf(j + 1)._1
-            if (potential > k && potential < end && potential < last && potential < nextKey)
-              pts += potential
-          }
-          j += 1
+      val pts = scala.collection.mutable.TreeSet[Double]()
+      for (j <- cdf.indices) {
+        val (k, cum) = cdf(j)
+        pts += k
+        if (j + 1 < cdf.length) {
+          val p = math.min(math.max(cum, Eps), 1 - Eps)
+          val crossing = normal.inverseCumulativeProbability(p)
+          if (crossing > k && crossing < cdf(j + 1)._1) pts += crossing
         }
-        var mn = Double.MaxValue; var mx = -Double.MaxValue
-        pts.foreach { p =>
-          val e = errorAt(mu, sigma, cdf, p)
-          if (e < mn) mn = e
-          if (e > mx) mx = e
-        }
-        out(2 * i) = mn
-        out(2 * i + 1) = mx
-        i += 1
       }
-      out
+      val errs = pts.toSeq.map(errorAt(mu, sigma, cdf, _))
+      Array(errs.min, errs.max)
     }
 
     def fullError(mu: Double, sigma: Double, cdf: Array[(Double, Double)],
@@ -131,6 +115,11 @@ class NormalModelSpec extends AnyFunSuite {
     assert(StdNormal.pdf(Double.PositiveInfinity) == 0.0)
   }
 
+  /** Rounding slack of the bracket: errorAt sums areas over different
+    * partitions of the domain at different points, so where it is flat
+    * (F = G) its value moves by a few ulps of the domain width. */
+  private val Slack = 1e-12
+
   private def bits(xs: Array[Double]): Seq[Long] =
     xs.toSeq.map(java.lang.Double.doubleToRawLongBits)
 
@@ -149,14 +138,13 @@ class NormalModelSpec extends AnyFunSuite {
     test(s"$name envelopes and full errors are bit-identical to the per-area form") {
       val hs = hists(cfg.numBins, new Random(61))
       var compared = 0
-      for ((hname, h) <- hs; j <- cfg.projBins.indices;
-           numIntervals <- Seq(1, 5, 10)) {
+      for ((hname, h) <- hs; j <- cfg.projBins.indices) {
         val w = HistOps.normalize(h)
         val (mu, sig) = HistOps.fitNormal(w, cfg.projBins(j))
         val cdf = HistOps.discreteCdfNormalized(w, cfg.projBins(j))
-        val where = s"$hname, vector $j, $numIntervals intervals"
-        assert(bits(NormalModel.minMaxError(mu, sig, cdf, numIntervals)) ==
-          bits(PerArea.minMaxError(mu, sig, cdf, numIntervals)), where)
+        val where = s"$hname, vector $j"
+        assert(bits(NormalModel.minMaxError(mu, sig, cdf)) ==
+          bits(PerArea.minMaxError(mu, sig, cdf)), where)
         val (first, last) = (cdf.head._1, cdf.last._1)
         assert(bits(Array(NormalModel.fullError(mu, sig, cdf, first, last))) ==
           bits(Array(PerArea.fullError(mu, sig, cdf, first, last))), where)
@@ -165,7 +153,42 @@ class NormalModelSpec extends AnyFunSuite {
           bits(Array(PerArea.errorAt(mu, sig, cdf, mid))), where)
         compared += 1
       }
-      assert(compared == hs.size * cfg.numVectors * 3)
+      assert(compared == hs.size * cfg.numVectors)
+    }
+
+    test(s"$name [eMin, eMax] brackets errorAt on the whole domain") {
+      var worst = Double.NegativeInfinity
+      // a narrow mass at one end of the bins and a 1e-10 speck at the
+      // other: the normal meets the speck's CDF level mid-domain
+      val n = cfg.numBins
+      val tinyTail = for (speck <- Gen.choose(1e-16, 1e-8); left <- Gen.oneOf(true, false))
+        yield Array.tabulate(n) { i =>
+          val k = if (left) i else n - 1 - i
+          if (k == 0) speck else if (k >= n - 2) 1.0 else 0.0
+        }
+      val record = Gen.frequency(4 -> graft.AdversarialHists.record(cfg.numBins), 1 -> tinyTail)
+      val prop = Prop.forAllNoShrink(record) { h =>
+        val w = HistOps.normalize(h)
+        for (j <- cfg.projBins.indices) {
+          val (mu, sig) = HistOps.fitNormal(w, cfg.projBins(j))
+          val cdf = HistOps.discreteCdfNormalized(w, cfg.projBins(j))
+          val Array(eMin, eMax) = NormalModel.minMaxError(mu, sig, cdf)
+          val (first, last) = (cdf.head._1, cdf.last._1)
+          val pts = Array.tabulate(10001)(i => first + (last - first) * i / 10000) ++
+            cdf.map(_._1)
+          pts.foreach { p =>
+            val e = NormalModel.errorAt(mu, sig, cdf, p)
+            worst = math.max(worst, math.max(eMin - e, e - eMax))
+            assert(eMin - Slack <= e && e <= eMax + Slack,
+              s"vector $j at $p: errorAt $e outside [$eMin, $eMax] for ${h.mkString(",")}")
+          }
+        }
+        Prop.passed
+      }
+      val res = Test.check(Test.Parameters.default
+        .withMinSuccessfulTests(60).withInitialSeed(61L).withWorkers(1), prop)
+      assert(res.passed, res.status.toString)
+      info(s"worst excess $worst")
     }
   }
 }
