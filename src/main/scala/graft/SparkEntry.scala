@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.sources.{BinaryScan, Fixtures}
 import graft.functions.{EmdCols, TextCols}
 import graft.core.Caching.PersistOnce
-import graft.operators.{EmdJoins, MelodyJoin, BaselineJoin, MrSimJoin, Dedup, Ann, Multimodal, CorpusOps, TfIdf, EventOps, Cluster, SketchOps, Layout, Bpe, Skew, EditJoin, HtmlOps, UrlOps, Frontier, Wordpiece, Graph, Search, Blocklist, Classifier, Warc, Unigram, Snapshot, Profile}
+import graft.operators.{EmdJoins, EmdTopK, MelodyJoin, BaselineJoin, MrSimJoin, Dedup, Ann, Multimodal, CorpusOps, TfIdf, EventOps, Cluster, SketchOps, Layout, Bpe, Skew, EditJoin, HtmlOps, UrlOps, Frontier, Wordpiece, Graph, Search, Blocklist, Classifier, Warc, Unigram, Snapshot, Profile}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -26,14 +26,6 @@ object SparkEntry {
   private[graft] val Theta = 0.153
   private val RubnerTheta = 0.0401
   private val TopK = 20
-  /** Extra candidates each 3-D top-k engine fetches beyond [[TopK]] so
-    * q_emd3d_topk can SELECT the final k by the canonical rounded
-    * distance (membership hazard fix, ADVICE r15). An in-query margin
-    * TEST checks whether this depth sufficed; when it cannot prove
-    * exclusion (cutoff-tied pools) the query falls back to a complete
-    * threshold fetch — correct either way, the pad only buys the cheap
-    * path. */
-  private val CanonPad = 20
   // fixed size of q_stream_emd's static broadcast reference index: a
   // broadcast index is bounded by contract (the honest stream-static
   // shape at any corpus scale), selected deterministically by
@@ -332,7 +324,8 @@ object SparkEntry {
     * with crossCheckPairs (engines agree) and this bound (engine agrees
     * with the closed form) the oracle match is evidence about the LP
     * kernels, not just about CubeKR agreeing with itself. Runs on the
-    * final output only (1.4k-150k rows), one broadcast join per side. */
+    * output pairs only (the threshold rows' 1.4k-150k pairs, the top-k
+    * row's radius set), one broadcast join per side. */
   private def cubeCanonicalDist(s: SparkSession, dir: String)
                                (pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.Row
@@ -364,6 +357,24 @@ object SparkEntry {
     s.createDataFrame(out, schema)
       .select(col("rid"), col("sid"), round(col("dist"), 6).as("dist"))
   }
+
+  /** One q_emd3d_topk arm: [[EmdTopK.join]] over an engine's threshold
+    * join whose pairs `canon` re-distances ([[cubeCanonicalDist]]), so
+    * [[EmdTopK.rank]] orders by the canonical `(round(dist, 6), rid,
+    * sid)`, the oracle's order. `dist` is the engine's own distance.
+    *
+    * Why the radius set holds every contender: EmdTopK.join's bound `ub`
+    * is the engine distance of k real pairs, all in the set. Engine and
+    * canonical distances agree within 1e-6 (`canon` asserts it on every
+    * row), so the canonical k-th distance is at most ub + 1e-6. A pair
+    * that rounds level with it has canonical distance below ub + 2e-6,
+    * so engine distance below ub + 3e-6. The join runs at ub + 4e-6
+    * (EmdTopK's 2e-6 plus the 2e-6 here), so every contender, ties at
+    * the cutoff included, is in the set. */
+  private[graft] def canonicalArm(hists: DataFrame, k: Int,
+      dist: (Array[Double], Array[Double]) => Double)(
+      thresholdJoin: Double => DataFrame, canon: DataFrame => DataFrame): DataFrame =
+    EmdTopK.join(hists, k, dist)(th => canon(thresholdJoin(th + 2e-6)))
 
   /** [[melodyCfg3d]] with the grid sized to the corpus density
     * (MelodyJoin.sideNumFor): sf0.01 and below stay at the floor
@@ -436,34 +447,6 @@ object SparkEntry {
         d.filter(col("source") =!= "src0"), 3, "train_id").persistOnce(),
        CorpusOps.contaminationPostings(
         d.filter(col("source") === "src0"), 3, "eval_id").persistOnce())
-    }
-
-  /** Melody 3-D THRESHOLD PAIR SET at [[Theta3d]] — the engine's exact
-    * answer {(rid, sid, emd) : emd <= Theta3d} over the (session-cached)
-    * prepared state. Two consumers run the identical fetch: q_emd3d_pairs
-    * IS this set, and q_emd3d_topk's complete-fetch tie fallback needs
-    * {emd <= cutoff + 4e-6} — a pure FILTER of this set whenever
-    * cutoff + 4e-6 <= Theta3d, because membership is decided by the
-    * exact solver's `emd <= theta` compare on the canonically-oriented
-    * pair (MelodyJoin.Cascade.emdIfCandidate; every pre-filter rejects
-    * with admissible slack only), so
-    * thresholdJoin(th) == thresholdJoin(Theta3d).filter(dist <= th) for
-    * th <= Theta3d, double-for-double. Before this memo the fallback
-    * re-ran the whole enumeration+cascade every sf0.1 run (>= 40
-    * zero-distance duplicate-histogram pairs keep the pad-margin proof
-    * failing — VERDICT r16 item 3, bench row 2.47 -> 3.69s). */
-  private val cube3dMemo = frameMemo
-
-  private def cube3dPairs(s: SparkSession, dir: String): DataFrame =
-    cube3dMemo(s, dir) {
-      val cfg3 = melodyCfg3dFor(s, dir)
-      val prep = MelodyJoin.prepareCached(s, Fixtures.tripleHists(s, dir), cfg3)
-      // LAZY persist (no count): the first consumer's own action
-      // materializes the cache as a side effect of its pipeline — an
-      // eager count here was measured as a pure materialization
-      // barrier on q_emd3d_pairs (the union output can no longer
-      // pipeline into the canonicalization join)
-      MelodyJoin.thresholdJoinPrepared(s, prep, Theta3d, cfg3).persistOnce()
     }
 
   /** Residual IVF-PQ engine state — the q_ivfpq_topk / q_ivfpq_rerank /
@@ -672,7 +655,7 @@ object SparkEntry {
       // corpus scale, so right-sizing its task count is constant-cost
       // correctness, not a scale assumption — the engines' ~30 small
       // prepare/routing jobs otherwise pay 32-task scheduling latency
-      // each on a 512-row input (measured ~2s of the row, EquivProbe)
+      // each on a 512-row input (measured ~2s of the row)
       val hists = all.join(broadcast(ids), "id")
         .coalesce(4)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -751,10 +734,10 @@ object SparkEntry {
     //     pays the grid/enrichment once ---
     "q_emd3d_pairs" -> ((s, dir) => {
       val hists = Fixtures.tripleHists(s, dir)
-      // the Theta3d pair set is the session-shared cube3dMemo (its other
-      // consumer is q_emd3d_topk's tie fallback — see the memo scaladoc)
+      val cfg3 = melodyCfg3dFor(s, dir)
+      val prep = MelodyJoin.prepareCached(s, hists, cfg3)
       cubeCanonicalDist(s, dir)(crossCheckPairs(
-        cube3dPairs(s, dir)
+        MelodyJoin.thresholdJoinPrepared(s, prep, Theta3d, cfg3)
           .select(col("rid"), col("sid"), round(col("dist"), 6).as("dist")),
         EmdJoins.treeExact3dThresholdJoin(hists, Theta3d),
         "q_emd3d_pairs",
@@ -778,81 +761,21 @@ object SparkEntry {
     }),
 
     // --- 3-D exact EMD top-k (J2/A7; shares the cached engine state;
-    //     self-verifying against the tree-exact top-k). MEMBERSHIP of
-    //     the final k-set is decided by the CANONICAL rounded distance,
-    //     not the engine's (ADVICE r15): each engine fetches a
-    //     TopK + CanonPad candidate pool by its own distance, the pool
-    //     is canonicalized ([[cubeCanonicalDist]] — the same fixed FP
-    //     expression the oracle evaluates), and the k survivors are the
-    //     canonical-least with the (dist, rid, sid) tie-break. A
-    //     per-pool margin test proves the pad was deep enough that
-    //     no unfetched pair could enter the canonical top-k (falling
-    //     back to a complete threshold fetch when it cannot), so a
-    //     near-boundary pair rounding differently under the two kernels
-    //     can no longer flip the k-set nondeterministically — both
-    //     engines' canonical k-sets are DETERMINISTICALLY identical and
-    //     the crosscheck spread is exactly 0. ---
+    //     self-verifying against the tree-exact top-k). Each engine runs
+    //     EmdTopK.join through [[canonicalArm]], which ranks the
+    //     canonical closed-form distances ([[cubeCanonicalDist]]) over
+    //     the engine's radius set, so both engines pick the oracle's
+    //     k-set, cutoff ties included, and the crosscheck spread is 0 ---
     "q_emd3d_topk" -> ((s, dir) => {
       val hists = Fixtures.tripleHists(s, dir)
       val cfg3 = melodyCfg3dFor(s, dir)
       val prep = MelodyJoin.prepareCached(s, hists, cfg3)
-      // Canonical-selection harness: collect the <= TopK + CanonPad pool
-      // (40 scalar rows — O(k) driver state, never data-sized), replace
-      // each distance with the canonical closed form, sort, take TopK.
-      // Soundness of the pad: BOTH engines rank their pool by the
-      // ROUNDED engine distance, and both pools arrive here rounded
-      // (the select below — engMax must be a rounded value or the raw
-      // vs rounded 5e-7 skew eats the margin). Any UNFETCHED pair U
-      // then has round(engine(U)) >= engMax, so engine(U) >= engMax
-      // - 5e-7, canonical(U) >= engMax - 1.5e-6 (1e-6 kernel
-      // agreement), and round(canonical(U)) >= engMax - 2e-6; hence
-      // engMax > cutoff + 2e-6 implies the rounded canonical of U
-      // exceeds cutoff — U cannot displace a survivor.
-      // When the margin CANNOT prove exclusion (e.g. sf0.1 has >= 40
-      // zero-distance duplicate-histogram pairs, so the whole pool ties
-      // at the cutoff), fall back to a COMPLETE fetch: every pair whose
-      // canonical dist could reach the cutoff has engine dist
-      // <= cutoff + 2e-6 < the threshold radius cutoff + 4e-6, so the
-      // canonical (dist, rid, sid) top-k over that set is the GLOBAL
-      // canonical top-k, cutoff ties included — deterministic, and
-      // identical to the oracle's ORDER BY ... LIMIT k.
-      def canonicalTopK(pool: DataFrame,
-                        allWithin: Double => DataFrame): DataFrame = {
-        import s.implicits._
-        def canonOf(df: DataFrame): Array[(Long, Long, Double)] =
-          cubeCanonicalDist(s, dir)(df).as[(Long, Long, Double)].collect()
-        val fetched = pool.select(col("rid").cast("long"),
-            col("sid").cast("long"), col("dist").cast("double"))
-          .as[(Long, Long, Double)].collect()
-        val engMax = fetched.map(_._3).max
-        val canon = canonOf(s.createDataset(fetched.toSeq)
-          .toDF("rid", "sid", "dist"))
-        val top0 = canon.sortBy { case (a, b, d) => (d, a, b) }.take(TopK)
-        val cutoff = top0.map(_._3).max
-        val top =
-          if (engMax > cutoff + 2e-6) top0.toSeq
-          else canonOf(allWithin(cutoff + 4e-6)
-              .select(col("rid").cast("long"), col("sid").cast("long"),
-                col("dist").cast("double")).toDF("rid", "sid", "dist"))
-            .sortBy { case (a, b, d) => (d, a, b) }.take(TopK).toSeq
-        s.createDataset(top).toDF("rid", "sid", "dist")
-      }
+      val canon = cubeCanonicalDist(s, dir) _
       crossCheckPairs(
-        canonicalTopK(
-          MelodyJoin.topKJoinPrepared(s, prep, TopK + CanonPad, cfg3)
-            .select(col("rid"), col("sid"), round(col("dist"), 6).as("dist")),
-          // tie fallback: {emd <= th} is a pure filter of the memoized
-          // Theta3d pair set whenever th <= Theta3d (exact-solver
-          // membership — see cube3dPairs), so the every-sf0.1-run
-          // complete fetch stops re-running enumeration + cascade
-          // (VERDICT r16 item 3); a cutoff past Theta3d (never seen at
-          // the declared scales) still takes the live engine fetch
-          th => (if (th <= Theta3d) cube3dPairs(s, dir).filter(col("dist") <= th)
-                 else MelodyJoin.thresholdJoinPrepared(s, prep, th, cfg3))
-            .select(col("rid"), col("sid"), round(col("dist"), 6).as("dist"))),
-        canonicalTopK(EmdJoins.treeExact3dTopK(hists, TopK + CanonPad)
-            .select(col("rid"), col("sid"), round(col("dist"), 6).as("dist")),
-          th => EmdJoins.treeExact3dThresholdJoin(hists, th)),
+        canonicalArm(prep.enriched, TopK, cfg3.exactEmd)(
+          MelodyJoin.thresholdJoinPrepared(s, prep, _, cfg3), canon),
+        canonicalArm(hists, TopK, EmdJoins.cubeKrSolver(_, _, null))(
+          EmdJoins.treeExact3dThresholdJoin(hists, _), canon),
         "q_emd3d_topk",
         audit = simplexAudit3d(hists, "q_emd3d_topk"))
     }),

@@ -184,12 +184,14 @@ final class SkewedGrid(
   }
 
   /** Area between two normal CDFs over the projection domain [t0, t1],
-    * split at their crossing when it lies inside.
+    * split at their crossing when it lies inside. Equal sigmas give no
+    * finite crossing (identical normals give 0/0), so one integral over
+    * the domain, 0 for identical normals.
     * Reference behavior: Grid.getEmdBrNormal:1011-1034. */
   private def emdBrNormal(rec: (Double, Double), cell: (Double, Double)): Double = {
     val inter = NormalModel.cdfIntersection(rec._1, rec._2, cell._1, cell._2)
     val tMin = t(0); val tMax = t(1)
-    if (tMin - inter > 0 || inter - tMax > 0 ||
+    if (!java.lang.Double.isFinite(inter) || tMin - inter > 0 || inter - tMax > 0 ||
         math.abs(tMin - inter) <= 1e-7 || math.abs(inter - tMax) <= 1e-7)
       cdfDiff(rec, cell, tMin, tMax)
     else

@@ -271,7 +271,7 @@ object Dedup {
     * candidates through to the verifier.)
     * Measured on the 3x stress corpus: candidates 116,558 -> 41,074
     * (the sub-threshold prefix-collision mass), zero qualifying pairs
-    * lost (NgramStressProbe; PLANS.md stress table). */
+    * lost (PLANS.md stress table). */
   private[operators] def prefixCandidates(prefixed: DataFrame,
                                           tau: Double): DataFrame = {
     val ub = (lit(1) + least(col("la") - col("i0"), col("lb") - col("j0")))

@@ -765,13 +765,12 @@ object MelodyJoin {
     * matches the bottleneck is layout: the combo ids, per-dual key
     * ranges, and rubner coordinate-0 bounds live in primitive
     * natural-order columns (~0.7MB at side 8 — L2-resident across the
-    * whole record loop), and the hot loop pre-filters on those before
-    * dereferencing a summary. Soundness: the flat checks are the SAME
-    * comparisons the loop body makes (combo ordering, dual ranges) plus
-    * a slackened rubner coordinate-0 band that only skips cells whose
-    * full rubnerBox (>= its coord-0 clamp gap) the body would reject —
-    * the emitted combo set is identical; survivors still run the body's
-    * complete check chain. */
+    * whole record loop), and the hot loop decides combo ordering and the
+    * dual ranges on those before dereferencing a summary. A slackened
+    * rubner coordinate-0 band also skips cells whose full rubnerBox
+    * (>= its coord-0 clamp gap) the body would reject, so the emitted
+    * combo set is what the full checks give; survivors run the body's
+    * remaining prunes. */
   final class SummaryIndex(summaries: Array[CellSummary]) extends Serializable {
     val n: Int = summaries.length
     val nD: Int = if (n == 0) 0 else summaries(0).dualKeyMin.length
@@ -788,14 +787,17 @@ object MelodyJoin {
     * (reference: Grid.getGuestWithDual:352-457), with the per-vector-cell
     * envelopes ([[cellEnvelopesPublic]]) and summary index built once by
     * the caller, as the join path does. Returns combos > own combo that
-    * survive dual-range, EMD_BR and Rubner-box pruning. A null `idx`
-    * runs the full object scan (same answer). */
+    * survive dual-range, EMD_BR and Rubner-box pruning. `idx` must be
+    * the [[SummaryIndex]] of `summaries`. */
   def guestCombosPublic(rec: Row, cfg: Config, grids: Array[SkewedGrid],
       duals: Array[DualBound], summaries: Array[CellSummary],
       env: Array[Array[Array[Double]]], theta: Double,
-      treeGapLimit: Double, idx: SummaryIndex): Array[Long] =
+      treeGapLimit: Double, idx: SummaryIndex): Array[Long] = {
+    require(idx != null && idx.n == summaries.length,
+      "guest enumeration needs the SummaryIndex of its summaries")
     guestCombos(rec, cfg, grids, duals, summaries, env, theta,
       treeGapLimit, idx)
+  }
 
   /** Precomputed envelopes for the overload above (driver-side, once). */
   def cellEnvelopesPublic(summaries: Array[CellSummary],
@@ -813,9 +815,7 @@ object MelodyJoin {
         * sum(gaps) <= EMD_T(rec, m) <= distortion * EMD(rec, m) — a cell
         * whose gap sum exceeds distortion * theta cannot hold a partner. */
       treeGapLimit: Double,
-      /** flat pre-filter index ([[SummaryIndex]] scaladoc); null = full
-        * object scan (spec/diagnostic paths), answer identical either
-        * way. */
+      /** flat pre-filter index of `summaries` ([[SummaryIndex]] scaladoc) */
       idx: SummaryIndex): Array[Long] = {
     val ownCombo = rec.getLong(2)
     val mb = rec.getSeq[Double](3).toArray
@@ -882,51 +882,34 @@ object MelodyJoin {
       memo(cellId)
     }
     val out = scala.collection.mutable.ArrayBuffer[Long]()
-    // Flat pre-filter (SummaryIndex scaladoc): the same combo/dual-range
-    // comparisons the body makes, plus a slackened rubner coordinate-0
-    // band (1e-9 slack because r0 +- theta is a NEW rounded quantity —
-    // without it a boundary cell the body's rubnerBox would KEEP could
-    // be skipped; a skip only happens when the coord-0 clamp gap alone
-    // strictly exceeds theta, which forces rubnerBox > theta). Cells
-    // passing the flat stage dereference the summary and run the body's
-    // complete chain — the emitted combo set is identical to a full
-    // object scan.
-    val useIdx = idx != null && idx.n == summaries.length
+    // Flat pre-filter (SummaryIndex scaladoc): combo order and the dual
+    // ranges decide here, plus a slackened rubner coordinate-0 band (1e-9
+    // slack because r0 +- theta is a NEW rounded quantity — without it a
+    // boundary cell the body's rubnerBox would KEEP could be skipped; a
+    // skip only happens when the coord-0 clamp gap alone strictly exceeds
+    // theta, which forces rubnerBox > theta). Cells passing the flat
+    // stage dereference the summary for the remaining prunes.
     val r0Hi = rubner(0) + theta + 1e-9
     val r0Lo = rubner(0) - theta - 1e-9
     var s = 0
     val until = summaries.length
     while (s < until) {
-      var take = true
-      if (useIdx) {
-        if (idx.comboF(s) <= ownCombo) take = false
-        var k = 0
-        while (take && k < duals.length) {
-          if (idx.minF(k)(s) > rangeHi(k) || idx.maxF(k)(s) < rangeLo(k))
-            take = false
-          k += 1
-        }
-        if (take && (idx.rubLo0(s) > r0Hi || idx.rubHi0(s) < r0Lo))
-          take = false
+      var ok = idx.comboF(s) > ownCombo
+      var k = 0
+      while (ok && k < duals.length) {
+        if (idx.minF(k)(s) > rangeHi(k) || idx.maxF(k)(s) < rangeLo(k)) ok = false
+        k += 1
       }
-      if (!take) { s += 1 }
-      else {
-      val cs = summaries(s)
-      if (cs.combo > ownCombo) {
-        var ok = true
-        // dual range prune (DualBound.getRange semantics) — cheap lookups
-        var k = 0
-        while (ok && k < duals.length) {
-          if (cs.dualKeyMin(k) > rangeHi(k) || cs.dualKeyMax(k) < rangeLo(k)) ok = false
-          k += 1
-        }
+      if (ok && (idx.rubLo0(s) > r0Hi || idx.rubHi0(s) < r0Lo)) ok = false
+      if (ok) {
+        val cs = summaries(s)
         // Rubner box prune — a d-dim clamp, far cheaper than EMD_BR's
         // normal-CDF integrals, so it runs before them (cheapest-first
         // cascade ordering, same answer). Cell prunes carry 1e-9 slack
         // like the flat band above: they only skip work, and a bound
         // that FP-rounds a partner at EMD exactly theta past theta would
         // drop that answer
-        if (ok && Emd.rubnerBox(rubner, cs.rubnerLo, cs.rubnerHi) > theta + 1e-9) ok = false
+        if (Emd.rubnerBox(rubner, cs.rubnerLo, cs.rubnerHi) > theta + 1e-9) ok = false
         // tree-feature gap prune — O(numFeatures) flat adds, far cheaper
         // than EMD_BR's normal-CDF integrals, so it runs BEFORE them
         // (cheapest-first; both are pure filters, answer order-invariant).
@@ -961,7 +944,6 @@ object MelodyJoin {
         if (ok) out += cs.combo
       }
       s += 1
-      }
     }
     out.toArray
   }

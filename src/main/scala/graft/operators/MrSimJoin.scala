@@ -182,7 +182,8 @@ object MrSimJoin {
     // bound excludes a pivot from the argmin scan once lb > current best
     // (scan in ascending-lb order, stop at first lb above best) and from
     // the window test once lb > best + 2*theta — identical output, most
-    // exact solves never happen. Non-L2 metric costs keep the parity scan.
+    // exact solves never happen. Non-L2 metric costs have no centroid
+    // bound: every lb is 0, so the same loop solves every pivot.
     val centsB = spark.sparkContext.broadcast(
       if (cfg.groundDist == GroundDist.L2)
         pivots.map(pv => HistOps.rubnerValue(pv._2, cfg.dimension, cfg.bins))
@@ -203,68 +204,54 @@ object MrSimJoin {
         @inline def pivotDist(w: Array[Double], p: Int): Double = c.exactEmd(w, ps(p)._2)
         it.flatMap { case (id, w0) =>
           val w = HistOps.normalize(w0)
-          if (cents == null) {
-            // reference-parity scan for non-L2 metric costs; their sweep
-            // runs with lim = +Inf, so the key bounds nothing
-            val dists = Array.tabulate(nP)(p => Emd.exact(w, ps(p)._2, c.cost))
-            solveAcc.add(nP)
-            val base = dists.indices.minBy(i => (dists(i), i))
-            dists.indices.flatMap { q =>
-              if (q == base) Some((q, CellMember(id, w, 0.0, native = true)))
-              else if ((dists(q) - dists(base)) / 2.0 <= slackTheta)
-                Some((q, CellMember(id, w, 0.0, native = false)))
-              else None
-            }
-          } else {
-            val rc = HistOps.rubnerValue(w, c.dimension, c.bins)
-            val lb = new Array[Double](nP)
-            var q = 0
-            while (q < nP) {
-              var s = 0.0; var i = 0
-              while (i < rc.length) { val t = rc(i) - cents(q)(i); s += t * t; i += 1 }
-              lb(q) = math.sqrt(s)
-              q += 1
-            }
-            // pass 1: true argmin (same (dist, index) tie-break as minBy)
-            // over ascending lb; a pivot with lb > best cannot win, and
-            // once one is reached no later pivot in lb order can either
-            val order = Array.range(0, nP).sortBy(lb)
-            val dists = new Array[Double](nP)
-            java.util.Arrays.fill(dists, Double.NaN)
-            var best = Double.MaxValue
-            var bestIdx = -1
-            var solves = 0L
-            var oi = 0
-            while (oi < nP && lb(order(oi)) <= best) {
-              val p = order(oi)
-              val dp = pivotDist(w, p); solves += 1
-              dists(p) = dp
-              if (dp < best || (dp == best && p < bestIdx)) { best = dp; bestIdx = p }
-              oi += 1
-            }
-            // pass 2: window membership, exact only where the lb admits
-            // it. The routing stage already computed the full Rubner
-            // vector — carry its first coordinate through as the sweep
-            // key instead of recomputing an O(bins) rubnerValue per
-            // (window copy x block-pair copy) downstream
-            val base = CellMember(id, w, rc(0), native = true)
-            val window = base.copy(native = false)
-            val windowHi = best + 2.0 * slackTheta
-            val out = scala.collection.mutable.ArrayBuffer[(Int, CellMember)]()
-            q = 0
-            while (q < nP) {
-              if (q == bestIdx) out += ((q, base))
-              else if (lb(q) <= windowHi) {
-                val dq =
-                  if (dists(q).isNaN) { solves += 1; pivotDist(w, q) }
-                  else dists(q)
-                if ((dq - best) / 2.0 <= slackTheta) out += ((q, window))
-              }
-              q += 1
-            }
-            solveAcc.add(solves)
-            out
+          val rc = HistOps.rubnerValue(w, c.dimension, c.bins)
+          val lb = new Array[Double](nP)
+          var q = 0
+          while (cents != null && q < nP) {
+            var s = 0.0; var i = 0
+            while (i < rc.length) { val t = rc(i) - cents(q)(i); s += t * t; i += 1 }
+            lb(q) = math.sqrt(s)
+            q += 1
           }
+          // pass 1: true argmin (same (dist, index) tie-break as minBy)
+          // over ascending lb; a pivot with lb > best cannot win, and
+          // once one is reached no later pivot in lb order can either
+          val order = Array.range(0, nP).sortBy(lb)
+          val dists = new Array[Double](nP)
+          java.util.Arrays.fill(dists, Double.NaN)
+          var best = Double.MaxValue
+          var bestIdx = -1
+          var solves = 0L
+          var oi = 0
+          while (oi < nP && lb(order(oi)) <= best) {
+            val p = order(oi)
+            val dp = pivotDist(w, p); solves += 1
+            dists(p) = dp
+            if (dp < best || (dp == best && p < bestIdx)) { best = dp; bestIdx = p }
+            oi += 1
+          }
+          // pass 2: window membership, exact only where the lb admits
+          // it. The routing stage already computed the full Rubner
+          // vector — carry its first coordinate through as the sweep
+          // key instead of recomputing an O(bins) rubnerValue per
+          // (window copy x block-pair copy) downstream
+          val base = CellMember(id, w, rc(0), native = true)
+          val window = base.copy(native = false)
+          val windowHi = best + 2.0 * slackTheta
+          val out = scala.collection.mutable.ArrayBuffer[(Int, CellMember)]()
+          q = 0
+          while (q < nP) {
+            if (q == bestIdx) out += ((q, base))
+            else if (lb(q) <= windowHi) {
+              val dq =
+                if (dists(q).isNaN) { solves += 1; pivotDist(w, q) }
+                else dists(q)
+              if ((dq - best) / 2.0 <= slackTheta) out += ((q, window))
+            }
+            q += 1
+          }
+          solveAcc.add(solves)
+          out
         }
       }
       .persist(StorageLevel.MEMORY_AND_DISK)

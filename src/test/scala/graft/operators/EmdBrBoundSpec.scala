@@ -26,7 +26,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    0.4999. In a melody join at theta 0.5 this dropped 4 of 70 answers.
   *  - 3-D, Southwestern/Western: record (0.5, 0, 0, 0, 0, 0, 0.0625,
   *    0.4375) against members that project to a point mass on vector 2,
-  *    EMD 0.051, EMD_BR 0.061. */
+  *    EMD 0.051, EMD_BR 0.061.
+  * A third gave no bound at all: where the record's normal equals a cell
+  * corner's (point masses sit on quantile-grid lines), the two CDFs'
+  * crossing was 0/0 and EMD_BR NaN, which never prunes. */
 class EmdBrBoundSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = SparkSession.builder()
@@ -41,8 +44,11 @@ class EmdBrBoundSpec extends AnyFunSuite {
   private val Theta = 0.25
 
   /** Checks the bound over one corpus; returns the number of (record,
-    * member) comparisons made. */
-  private def check(cfg: MelodyJoin.Config, weights: Seq[Array[Double]]): Int = {
+    * member) comparisons made. `seen` gets each (record id, vector,
+    * direction to the cell, EMD_BR) evaluated. */
+  private def check(cfg: MelodyJoin.Config, weights: Seq[Array[Double]],
+      seen: (Long, Int, graft.core.Direction, Double) => Unit =
+        (_, _, _, _) => ()): Int = {
     import spark.implicits._
     val hists = weights.zipWithIndex.map { case (w, i) => (i.toLong, w) }
       .toDF("id", "weights")
@@ -59,8 +65,12 @@ class EmdBrBoundSpec extends AnyFunSuite {
       for (j <- 0 until cfg.numVectors) {
         val members = recs.groupBy(_._3(j))
         for ((id, w, _, mb, errors) <- recs; (cell, ms) <- members) {
-          val br = prep.grids(j).emdBr(Array(mb(2 * j), mb(2 * j + 1)),
+          val point = Array(mb(2 * j), mb(2 * j + 1))
+          val br = prep.grids(j).emdBr(point,
             java.util.Arrays.copyOfRange(errors, 3 * j, 3 * j + 3), cell, env(j)(cell))
+          // a NaN bound compares false against theta, so it never prunes
+          assert(!br.isNaN, s"vector $j: EMD_BR($id, cell $cell) is NaN")
+          seen(id, j, prep.grids(j).locate(point, cell), br)
           for ((mid, mw, _, _, _) <- ms) {
             val d = cfg.proj1dEmd(j, w, mw)
             assert(!(br > d + 1e-9), s"vector $j: EMD_BR($id, cell $cell) = $br " +
@@ -114,6 +124,31 @@ class EmdBrBoundSpec extends AnyFunSuite {
       forCorpora(cfg, Seq(61L)) { ws => answers += checkJoin(cfg, ws) }
       assert(answers > 1000, s"only $answers answers - vacuous")
     }
+  }
+
+  test("3-D EMD_BR of the point mass (3, 0, ..., 0) in a Southwestern cell is finite") {
+    // quantile-grid lines pass through the point masses here, so on
+    // vector 2 the record's normal is a Southwestern cell's corner
+    // normal; their CDF crossing was 0/0 and EMD_BR NaN
+    val corpus = Seq(
+      Seq(3, 0, 0, 0, 0, 0, 0, 0), Seq(6, 0, 0, 0, 0, 0, 0, 0),
+      Seq(0, 0, 16, 0, 0, 0, 0, 0), Seq(0, 0, 0, 0, 0, 0, 16, 0),
+      Seq(0, 0, 0, 0, 8, 0, 8, 0), Seq(0, 0, 0, 0, 0, 8, 0, 8),
+      Seq(4, 4, 1, 3, 0, 2, 1, 0), Seq(0, 1, 3, 0, 0, 0, 0, 4),
+      Seq(0, 0, 0, 0, 8, 8, 0, 0), Seq(0, 0, 8, 0, 0, 0, 0, 8),
+      Seq(1, 0, 3, 4, 3, 4, 0, 3), Seq(8, 0, 0, 0, 0, 0, 8, 0),
+      Seq(0, 0, 0, 2, 0, 0, 0, 0), Seq(0, 3, 0, 0, 0, 0, 0, 0),
+      Seq(0, 8, 0, 0, 0, 8, 0, 0), Seq(0, 4, 1, 3, 1, 4, 2, 2),
+      Seq(0, 0, 0, 0, 8, 8, 0, 0), Seq(0, 0, 0, 0, 0, 1, 0, 0),
+      Seq(0, 0, 0, 0, 16, 0, 0, 0), Seq(4, 1, 0, 1, 2, 2, 3, 1),
+      Seq(8, 0, 0, 0, 0, 0, 0, 8), Seq(0, 0, 0, 0, 8, 0, 8, 0),
+      Seq(0, 2, 0, 0, 0, 0, 0, 0), Seq(0, 2, 0, 0, 0, 0, 0, 0))
+      .map(_.map(_.toDouble).toArray)
+    spark.sparkContext.setLogLevel("WARN")
+    var southwestern = 0
+    check(graft.SparkEntry.melodyCfg3d, corpus, (id, j, dir, _) =>
+      if (id == 0 && j == 2 && dir == graft.core.Direction.Southwestern) southwestern += 1)
+    assert(southwestern > 0, "the point mass has no Southwestern cell on vector 2")
   }
 
   /** Runs `body` over 16 corpora per seed; fails on the first violation. */

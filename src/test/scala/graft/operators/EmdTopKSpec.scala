@@ -111,6 +111,41 @@ class EmdTopKSpec extends AnyFunSuite {
     assertEveryEngine(hists, 188)
   }
 
+  test("a canonical distance within 1e-6 of the join's ranks over the arm's radius set") {
+    // q_emd3d_topk's arm (SparkEntry.canonicalArm) ranks a canonical
+    // distance that may differ from the engine's by up to 1e-6. Here the
+    // engine distance is a table over 10 records (all refs), and the
+    // canonical one adds 1e-6 below 0.1 and subtracts it above. The
+    // bound is 0.0999986, the 5th smallest engine distance; those 5 pairs
+    // round to 0.1 canonically, and so does (1, 2) at engine distance
+    // 0.1000012, which wins the (rid, sid) tie-break. It lies past
+    // EmdTopK's own radius, 0.1000006, so only the arm's extra 2e-6
+    // brings it in.
+    val k = 5
+    val engine = Map((1L, 2L) -> 0.1000012, (3L, 4L) -> 0.0999986,
+      (3L, 5L) -> 0.0999986, (4L, 5L) -> 0.0999986, (6L, 7L) -> 0.0999986,
+      (8L, 9L) -> 0.0999986)
+    val dist: (Array[Double], Array[Double]) => Double = (a, b) =>
+      engine.getOrElse((math.min(a(0), b(0)).toLong, math.max(a(0), b(0)).toLong), 0.5)
+    def canonical(d: Double): Double = round6(if (d < 0.1) d + 1e-6 else d - 1e-6)
+    val ids = 1L to 10L
+    val pairs = for (i <- ids; j <- ids if i < j) yield (i, j, engine.getOrElse((i, j), 0.5))
+    import org.apache.spark.sql.functions.{col, round, when}
+    import spark.implicits._
+    spark.sparkContext.setLogLevel("WARN")
+    val hists = ids.map(i => (i, Array(i.toDouble))).toDF("id", "weights")
+    val got = graft.SparkEntry.canonicalArm(hists, k, dist)(
+      th => pairs.filter(_._3 <= th).toDF("rid", "sid", "dist"),
+      _.withColumn("dist", round(when(col("dist") < 0.1, col("dist") + 1e-6)
+        .otherwise(col("dist") - 1e-6), 6)))
+      .as[(Long, Long, Double)].collect().toSeq
+    val want = pairs.map { case (i, j, d) => (i, j, canonical(d)) }
+      .sortBy(p => (p._3, p._1, p._2)).take(k)
+    assert(pairs.count(p => canonical(p._3) == 0.1) > k, "no tie at the cutoff")
+    assert(want.head == ((1L, 2L, 0.1)))
+    assert(got == want, s"missed ${want.diff(got)} extra ${got.diff(want)}")
+  }
+
   test("duplicate histograms tied at the cutoff break ties on (rid, sid)") {
     // 4 distinct histograms x 5 copies: 40 zero-distance pairs, then runs
     // of 25 equal distances; k = 50 cuts the first run in the middle

@@ -61,34 +61,6 @@ class MelodyJoinSpec extends AnyFunSuite {
     assert(extra.isEmpty, s"melody emitted ${extra.size} non-pairs: ${extra.take(5)}")
   }
 
-  test("flat pre-filter enumeration == full object scan per record") {
-    // the SummaryIndex skips only cells whose combo ordering / dual
-    // ranges / rubner coord-0 band the body would reject — assert the
-    // per-record combo ARRAYS (not just the pair set) are identical
-    // between the indexed path and the null-index full scan
-    val hists = randomHists(150, 8, seed = 23)
-    val cfg = cfg3d
-    val theta = 0.35
-    val prep = MelodyJoin.prepare(spark, hists, cfg)
-    val env = MelodyJoin.cellEnvelopesPublic(prep.summaries, cfg)
-    val idx = new MelodyJoin.SummaryIndex(prep.summaries)
-    val gap = prep.tree.map(_.distortion * theta).getOrElse(-1.0)
-    val rows = prep.enriched.collect()
-    assert(rows.nonEmpty)
-    var nonEmpty = 0
-    rows.foreach { r =>
-      val flat = MelodyJoin.guestCombosPublic(r, cfg, prep.grids,
-        prep.duals, prep.summaries, env, theta, gap, idx)
-      val full = MelodyJoin.guestCombosPublic(r, cfg, prep.grids,
-        prep.duals, prep.summaries, env, theta, gap, null)
-      assert(flat.sameElements(full),
-        s"record ${r.getLong(0)}: flat ${flat.length} vs full ${full.length}")
-      if (flat.nonEmpty) nonEmpty += 1
-    }
-    assert(nonEmpty > 0, "no record produced guest combos - vacuous test")
-    prep.unpersist()
-  }
-
   test("KR-potential cascade stage prunes only, never changes the answer") {
     // the cube fixture's Config carries CubeKR's 24 dual vertices as a
     // caller-supplied Lipschitz lower-bound stage; answers with and
@@ -214,6 +186,26 @@ class MelodyJoinSpec extends AnyFunSuite {
       s"tight: missed=${(baseT -- mrsimT).size} extra=${(mrsimT -- baseT).size}")
     assert(solvesT > 0 && solvesT < 100L * 8,
       s"tight-theta routing solves $solvesT not pruned below 800")
+  }
+
+  test("mrsim == baseline under L1 and L3") {
+    // no centroid bound off L2: routing solves every pivot for every
+    // record and the sweep visits every pair
+    import graft.core.GroundDist
+    val hists = randomHists(80, 8, seed = 53)
+    val pivots = 6
+    for (gd <- Seq(GroundDist.L1, GroundDist.L3)) {
+      val cfg = cfg3d.copy(groundDist = gd)
+      val theta = if (gd == GroundDist.L1) 0.5 else 0.3
+      val base = distinctRows(BaselineJoin.thresholdJoin(spark, hists, theta, cfg))
+      val (mrsimDf, solves) =
+        MrSimJoin.thresholdJoinCounted(spark, hists, theta, cfg, numPivots = pivots)
+      val mrsim = distinctRows(mrsimDf)
+      assert(base.nonEmpty, s"$gd test vacuous")
+      assert(bits(mrsim) == bits(base), s"$gd: ${mrsim.size} vs ${base.size} pairs")
+      // the accumulator can only over-count (task retries)
+      assert(solves >= 80L * pivots, s"$gd: routing solves $solves")
+    }
   }
 
   test("mrsim answer is pivot-count-invariant (auto and forced p agree)") {

@@ -20,7 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    corpus (~nProbe/kCoarse, asserted <= 2x the ideal fraction to
   *    absorb k-means imbalance) at every scale.
   *
-  * Raw curve recorded in PLANS.md (JoinScalingCheck dump).
+  * Raw curve recorded in PLANS.md.
   *
   * ENVELOPE CONSTANTS are measured-headroom pins, not theory: each is
   * roughly 2x the worst observed ratio across the three generated
@@ -28,7 +28,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * here while ordinary run-to-run variation cannot. They are
   * fixture-coupled by design — if /root/testdata is regenerated or a
   * declared threshold changes, a failure here means DATA DRIFT first:
-  * re-run JoinScalingCheck, compare against the PLANS.md curve, and
+  * print the ScalingStats counters at each scale, compare them against
+  * the PLANS.md curve, and
   * re-pin at ~2x the new worst ratio (documented at each assertion). */
 class ScalingSpec extends AnyFunSuite {
 

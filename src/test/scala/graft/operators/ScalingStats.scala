@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
   * counts the melody engine's ACTUAL work drivers (candidate pairs that
   * reach the cascade, guest replication rows) and the residual IVF-PQ
   * probe's scanned-row count, without running the joins themselves.
-  * Used by [[JoinScalingCheck]] (PLANS.md curve) and ScalingSpec (the
-  * growth-exponent assertions). */
+  * Used by ScalingSpec (the growth-exponent assertions). */
 object ScalingStats {
 
   final case class MelodyStats(n: Long, guests: Long, intraPairs: Long,
@@ -224,36 +223,6 @@ object ScalingStats {
       maxGramDf)
   }
 
-  final case class EditMatchStats(rows: Long, cand: Long, maxCand: Long,
-                                  matches: Long)
-
-  /** Stream-editmatch probe-cost counters through the operator's own
-    * kernel: per streamed row, the broadcast-index candidate-set size
-    * (EditJoin.candidateIds — what the banded verify must pay) and the
-    * emitted match count. */
-  def streamEditMatch(spark: SparkSession, docs: DataFrame,
-                      refs: Array[(Long, String)], d: Int): EditMatchStats = {
-    import spark.implicits._
-    val idxB = spark.sparkContext.broadcast(EditJoin.buildProbeIndex(refs, d))
-    val per = docs.select(col("doc_id").cast("long").as("id"),
-        coalesce(col("text").cast("string"), lit("")).as("t"))
-      .as[(Long, String)].mapPartitions { it =>
-        val idx = idxB.value
-        it.map { case (_, t) =>
-          val cps = Option(t).getOrElse("").codePoints().toArray
-          val cand = EditJoin.candidateIds(idx, cps)
-          val m = cand.count(cid => EditJoin.bandedEd(cps, idx.texts(cid), d) >= 0)
-          (cand.size.toLong, m.toLong)
-        }
-      }.toDF("c", "m")
-    val row = per.agg(count(lit(1)),
-      coalesce(sum(col("c")), lit(0L)).cast("long"),
-      coalesce(max(col("c")), lit(0L)).cast("long"),
-      coalesce(sum(col("m")), lit(0L)).cast("long")).head()
-    EditMatchStats(row.getLong(0), row.getLong(1), row.getLong(2),
-      row.getLong(3))
-  }
-
   final case class SemDedupStats(n: Long, k: Int, withinPairs: Long,
                                  maxCluster: Long) {
     def naive: Long = n * (n - 1) / 2
@@ -301,95 +270,5 @@ object ScalingStats {
     }.fold(0L)(_ + _)
     q.unpersist(false)
     IvfPqStats(n, probedRows, kCoarse, nProbe)
-  }
-}
-
-/** Throwaway curve dump for PLANS.md (not a test): run with
-  * `Test / runMain graft.operators.JoinScalingCheck`. */
-object JoinScalingCheck {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val cfg = graft.SparkEntry.melodyCfg3d
-    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
-      val hists = graft.sources.Fixtures.tripleHists(spark, s"/root/testdata/$sf")
-      val n0 = hists.count()
-      for ((tag, c) <- Seq(
-          "fixed6" -> cfg,
-          "sized " -> cfg.copy(sideNum = MelodyJoin.sideNumFor(n0)))) {
-        val t0 = System.nanoTime()
-        val m = ScalingStats.melody(spark, hists, c, 0.0803)
-        val out = MelodyJoin.thresholdJoin(spark, hists, 0.0803, c).count()
-        println(f"MELODY $sf%-8s $tag side=${c.sideNum}%2d N=${m.n}%6d " +
-          f"guests=${m.guests}%9d cand=${m.candPairs}%10d out=$out%8d " +
-          f"naive=${m.n * (m.n - 1) / 2}%12d " +
-          f"(${(System.nanoTime() - t0) / 1e9}%5.1f s)")
-      }
-    }
-    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
-      val p = ScalingStats.ivfPq(spark,
-        graft.sources.Fixtures.embeddings(spark, s"/root/testdata/$sf"),
-        kCoarse = 16, nProbe = 2)
-      println(f"IVFPQ  $sf%-8s N=${p.n}%6d probed=${p.probedRows}%6d " +
-        f"frac=${p.probedRows.toDouble / p.n}%6.3f ideal=${2.0 / 16}%6.3f")
-    }
-    // bounded edit-distance join at the declared d=4
-    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
-      val docs = graft.sources.Fixtures.documents(spark, s"/root/testdata/$sf")
-      val t0 = System.nanoTime()
-      val e = ScalingStats.editJoin(spark, docs, 4)
-      println(f"EDIT   $sf%-8s N=${e.n}%6d cand=${e.cand}%9d out=${e.out}%6d " +
-        f"naive=${e.naive}%10d (${(System.nanoTime() - t0) / 1e9}%5.1f s)")
-    }
-    // semdedup at the declared query's k=8 AND the deployment-scaled k
-    // (~sqrt N): the within-cluster fraction vs the balanced ideal 1/k
-    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
-      val embs = graft.sources.Fixtures.embeddings(spark, s"/root/testdata/$sf")
-      val n0 = embs.count()
-      for (k <- Seq(8, Ann.scaledCentroids(n0))) {
-        val sd = ScalingStats.semDedup(spark, embs, k)
-        println(f"SEMDD  $sf%-8s k=$k%4d N=${sd.n}%6d within=${sd.withinPairs}%9d " +
-          f"naive=${sd.naive}%10d frac=${sd.frac}%6.3f ideal=${1.0 / k}%6.3f " +
-          f"maxC=${sd.maxCluster}%5d")
-      }
-    }
-    // The prefix/sparse candidate paths serve the LARGE-vocabulary
-    // regime (shingle features); on this corpus' 64-token vocabulary
-    // the operators route to the bitmask/dense fast paths instead (a
-    // prefix filter over a 64-token vocab is structurally weak — the
-    // rarest token is still shared by a third of the corpus; measured
-    // 27% of naive at sf0.1). So the scaling curve measures the scale
-    // paths on the shingle corpus they actually serve.
-    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
-      val docs = graft.sources.Fixtures.documents(spark, s"/root/testdata/$sf")
-      val shdocs = docs.select(col("doc_id"), concat_ws(" ",
-        graft.functions.TextCols.shingles(col("text"), 3)).as("shtext"))
-        .persist()
-      val t1 = System.nanoTime()
-      val g = ScalingStats.prefixJaccard(spark, shdocs, graft.SparkEntry.NgramTau,
-        textCol = "shtext")
-      println(f"NGRAM  $sf%-8s N=${g.nDocs}%6d sets=${g.nSets}%6d " +
-        f"setToks=${g.setTokens}%8d post=${g.postings}%8d " +
-        f"cand=${g.candPairs}%9d out=${g.out}%7d near=${g.near}%7d " +
-        f"naive=${g.nSets * (g.nSets - 1) / 2}%12d " +
-        f"(${(System.nanoTime() - t1) / 1e9}%5.1f s)")
-      val t2 = System.nanoTime()
-      val wn = ScalingStats.winnow(spark, docs, k = 3, w = 4, minShared = 2)
-      println(f"WINNOW $sf%-8s N=${wn.nDocs}%6d grams=${wn.gramPositions}%9d " +
-        f"post=${wn.postings}%8d joinRows=${wn.joinRows}%9d out=${wn.out}%7d " +
-        f"(${(System.nanoTime() - t2) / 1e9}%5.1f s)")
-      val t3 = System.nanoTime()
-      val c = ScalingStats.cosineSparse(spark, shdocs, 0.9,
-        textCol = "shtext")
-      println(f"COSINE $sf%-8s N=${c.nDocs}%6d wrows=${c.weightRows}%8d " +
-        f"cand=${c.candPairs}%9d out=${c.out}%7d " +
-        f"naive=${c.nDocs * (c.nDocs - 1) / 2}%12d " +
-        f"(${(System.nanoTime() - t3) / 1e9}%5.1f s)")
-      shdocs.unpersist(false)
-    }
-    spark.stop()
   }
 }
